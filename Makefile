@@ -25,12 +25,6 @@ test-gate:
 sweep:
 	python scripts/oracle_sweep.py --sf-dir /root/testdata/sf0.1
 
-# Mirror of the driver's correctness gate at its exact scale (sf0.01):
-# every registry query, oracle-backed ones hash-compared to DuckDB.
-parity-gate:
-	RUN_SLOW=1 SPARK_GRAFT_TEST_SF_DIR=/root/testdata/sf0.01 \
-	  python -m pytest tests/test_oracle_parity.py -q
-
 # The dependency-gated tests (fastapi routes, protobuf stateful streaming)
 # for a host that HAS those deps: runs exactly the tests that skip in the
 # build container and turns any skip into a failure (COVERAGE.md "Permanent

@@ -4,6 +4,7 @@ from .pipeline import (
     FEATURE_COLS,
     add_class_weight,
     build_churn_pipeline,
+    cast_features,
     coefficients_frame,
     evaluate_model,
     score_frame,
@@ -15,6 +16,7 @@ __all__ = [
     "FEATURE_COLS",
     "add_class_weight",
     "build_churn_pipeline",
+    "cast_features",
     "coefficients_frame",
     "evaluate_model",
     "score_frame",

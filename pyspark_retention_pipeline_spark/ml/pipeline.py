@@ -3,11 +3,10 @@
 
 Stages mirror the reference exactly — Imputer(mean) → VectorAssembler →
 StandardScaler(withMean, withStd) → weighted LogisticRegression(maxIter=80) —
-with two scale-relevant differences:
-  * class weights are derived *inside the plan* (broadcast scalar join) rather
-    than collecting label counts to the driver (reference ``train.py:40-55``);
-  * threshold selection reuses the single-pass sweep operator
-    (operators/threshold.py) on real model scores instead of 303 jobs.
+with one scale-relevant difference: class weights are derived *inside the
+plan* (broadcast scalar join) rather than collecting label counts to the
+driver (reference ``train.py:40-55``). Threshold selection over these scores
+lives in ml/workflow.py.
 """
 
 from __future__ import annotations
@@ -21,6 +20,8 @@ from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..constants import DEFAULT_THRESHOLD
 
 # The 8 engineered features of the reference model (FIXTURES.md §1.2; feature
 # selection rule = all columns except the key and the label, train.py:35-37).
@@ -76,25 +77,26 @@ def build_churn_pipeline(feature_cols: list[str] | None = None) -> Pipeline:
     )
 
 
-def _prepare(features: DataFrame, feature_cols: list[str]) -> DataFrame:
+def cast_features(frame: DataFrame, cols: list[str]) -> DataFrame:
+    """``frame`` with ``cols`` cast to double, other columns untouched."""
     # ONE select, not a withColumn-per-feature loop: each withColumn nests
     # a fresh Project, and analysis cost grows quadratically in the column
     # count — harmless at the churn tier's 8 features, a multi-second
     # plan-build cliff at the quality classifier's 256 (round 13).
-    fc = set(feature_cols)
-    missing = fc - set(features.columns)
+    fc = set(cols)
+    missing = fc - set(frame.columns)
     if missing:
         # Fail fast on a typoed feature name (round-13 ADVICE: the old
         # withColumn loop raised immediately; the select silently skipped,
         # deferring to a less clear Imputer missing-column error).
         raise ValueError(f"feature columns not in frame: {sorted(missing)}")
-    casted = features.select(
-        *[
-            F.col(c).cast("double").alias(c) if c in fc else F.col(c)
-            for c in features.columns
-        ]
+    return frame.select(
+        *[F.col(c).cast("double").alias(c) if c in fc else F.col(c) for c in frame.columns]
     )
-    return add_class_weight(casted)
+
+
+def _prepare(features: DataFrame, feature_cols: list[str]) -> DataFrame:
+    return add_class_weight(cast_features(features, feature_cols))
 
 
 # Reference CV search space (``pipeline/train.py:160-172``): 3-fold CV over
@@ -123,63 +125,68 @@ def train_churn_model(
     reference CLI's ``--metric aucroc|aucpr`` choice (``train.py:141,167``),
     default aucpr as there."""
     cols = list(feature_cols or FEATURE_COLS)
+    estimator = build_churn_pipeline(cols)
+    if cross_validate:
+        lr = estimator.getStages()[-1]
+        grid = (
+            ParamGridBuilder()
+            .addGrid(lr.regParam, list(cv_reg_params or CV_REG_PARAMS))
+            .addGrid(lr.elasticNetParam, list(cv_elastic_params or CV_ELASTIC_PARAMS))
+            .build()
+        )
+        metric_name = "areaUnderROC" if cv_metric == "aucroc" else "areaUnderPR"
+        evaluator = BinaryClassificationEvaluator(
+            labelCol="label", rawPredictionCol="rawPrediction", metricName=metric_name
+        )
+        estimator = CrossValidator(
+            estimator=estimator,
+            estimatorParamMaps=grid,
+            evaluator=evaluator,
+            numFolds=cv_num_folds or CV_NUM_FOLDS,
+            parallelism=4,
+            seed=seed,
+        )
     prepared = _prepare(features, cols).cache()
-    pipeline = build_churn_pipeline(cols)
-    if not cross_validate:
-        return pipeline.fit(prepared)
-    lr = pipeline.getStages()[-1]
-    grid = (
-        ParamGridBuilder()
-        .addGrid(lr.regParam, list(cv_reg_params or CV_REG_PARAMS))
-        .addGrid(lr.elasticNetParam, list(cv_elastic_params or CV_ELASTIC_PARAMS))
-        .build()
-    )
-    metric_name = "areaUnderROC" if cv_metric == "aucroc" else "areaUnderPR"
-    evaluator = BinaryClassificationEvaluator(
-        labelCol="label", rawPredictionCol="rawPrediction", metricName=metric_name
-    )
-    cv = CrossValidator(
-        estimator=pipeline,
-        estimatorParamMaps=grid,
-        evaluator=evaluator,
-        numFolds=cv_num_folds or CV_NUM_FOLDS,
-        parallelism=4,
-        seed=seed,
-    )
-    return cv.fit(prepared).bestModel
+    try:
+        fitted = estimator.fit(prepared)
+    finally:
+        prepared.unpersist()
+    return fitted.bestModel if cross_validate else fitted
 
 
-def score_frame(
-    model: PipelineModel, features: DataFrame, threshold: float = 0.46
+def _churn_scores(
+    model: PipelineModel, frame: DataFrame, threshold: float, keep: list[str]
 ) -> DataFrame:
-    """Batch inference: transform → P(churn) → thresholded prediction
-    (reference ``eval.py:50-55``; p1 extraction via vector_to_array)."""
-    cols = [c for c in features.columns]
-    prepared = features
-    for c in FEATURE_COLS:
-        if c in cols:
-            prepared = prepared.withColumn(c, F.col(c).cast("double"))
-    if "class_weight" not in cols:
-        prepared = prepared.withColumn("class_weight", F.lit(1.0))
-    out = model.transform(prepared)
+    """``keep`` columns plus P(churn) and the thresholded prediction."""
     p1 = vector_to_array(F.col("probability")).getItem(1)
-    return out.select(
-        *[c for c in ("custkey", "label") if c in cols],
+    return model.transform(frame).select(
+        *keep,
         p1.alias("p_churn"),
         (p1 >= F.lit(threshold)).cast("double").alias("prediction"),
     )
 
 
+def score_frame(
+    model: PipelineModel, features: DataFrame, threshold: float = DEFAULT_THRESHOLD
+) -> DataFrame:
+    """Batch inference: transform → P(churn) → thresholded prediction
+    (reference ``eval.py:50-55``; p1 extraction via vector_to_array)."""
+    keep = [c for c in ("custkey", "label") if c in features.columns]
+    return _churn_scores(model, cast_features(features, FEATURE_COLS), threshold, keep)
+
+
 def evaluate_model(model: PipelineModel, features: DataFrame) -> dict[str, float]:
     """AUC-ROC / AUC-PR on a labeled split (reference ``eval.py:58-61``)."""
-    prepared = _prepare(features, FEATURE_COLS)
-    scored = model.transform(prepared).cache()
+    scored = model.transform(_prepare(features, FEATURE_COLS)).cache()
     out = {}
-    for metric in ("areaUnderROC", "areaUnderPR"):
-        ev = BinaryClassificationEvaluator(
-            labelCol="label", rawPredictionCol="rawPrediction", metricName=metric
-        )
-        out[metric] = float(ev.evaluate(scored))
+    try:
+        for metric in ("areaUnderROC", "areaUnderPR"):
+            ev = BinaryClassificationEvaluator(
+                labelCol="label", rawPredictionCol="rawPrediction", metricName=metric
+            )
+            out[metric] = float(ev.evaluate(scored))
+    finally:
+        scored.unpersist()
     return out
 
 
@@ -202,7 +209,10 @@ def coefficients_frame(spark: SparkSession, model: PipelineModel) -> DataFrame:
 
 
 def score_records(
-    spark: SparkSession, model: PipelineModel, records: list[dict], threshold: float = 0.46
+    spark: SparkSession,
+    model: PipelineModel,
+    records: list[dict],
+    threshold: float = DEFAULT_THRESHOLD,
 ) -> DataFrame:
     """Serving-path inference (reference ``serve_api.py:113-160``): missing
     features imputed as 0.0, unknown keys dropped, un-floatable values
@@ -217,10 +227,4 @@ def score_records(
 
     schema = T.StructType([T.StructField(c, T.DoubleType()) for c in FEATURE_COLS])
     cleaned = [{c: _coerce(r.get(c, 0.0)) for c in FEATURE_COLS} for r in records]
-    df = spark.createDataFrame(cleaned, schema).withColumn("class_weight", F.lit(1.0))
-    out = model.transform(df)
-    p1 = vector_to_array(F.col("probability")).getItem(1)
-    return out.select(
-        p1.alias("p_churn"),
-        (p1 >= F.lit(threshold)).cast("double").alias("prediction"),
-    )
+    return _churn_scores(model, spark.createDataFrame(cleaned, schema), threshold, [])

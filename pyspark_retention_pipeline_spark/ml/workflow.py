@@ -5,9 +5,12 @@ SURVEY.md §3).
 Scale fixes over the reference flagged in SURVEY §4:
   * the feature DAG is cached once before the four writes (the reference
     recomputes the whole DAG per write, ``etl.py:147-151``);
-  * the threshold search is the single-pass sweep operator, not 303 jobs;
-  * evaluation's confusion matrix is one conditional aggregation, not
-    4 filter+count actions (``eval.py:74-82``).
+  * the threshold search calls the single-pass sweep operator
+    (operators/threshold.py), not 303 jobs;
+  * evaluation's confusion matrix is one conditional aggregation over the
+    sweep's confusion cells, not 4 filter+count actions (``eval.py:74-82``).
+
+Every frame a step caches is released before the step returns.
 """
 
 from __future__ import annotations
@@ -20,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.retention import churn_feature_frame
-from ..operators.threshold import _with_metrics
+from ..operators.threshold import confusion_cells, pick_best, sweep_scores, with_metrics
 from .pipeline import (
     coefficients_frame,
     evaluate_model,
@@ -42,32 +45,28 @@ def run_feature_etl(
     (one fused aggregation pass) before anything is written — corrupt
     features fail the job instead of poisoning the model downstream.
     """
-    from pyspark.sql import functions as F
-
     from ..quality import run_checks
 
+    checks = [
+        ("custkey_not_null", F.col("custkey").isNull()),
+        ("label_binary", ~F.col("label").isin(0.0, 1.0)),
+        ("orders_positive", F.col("total_orders") <= 0),
+        ("recency_not_null", F.col("recency_days").isNull()),
+    ]
     features = churn_feature_frame(spark, sf_dir).cache()
-    if validate:
-        results = run_checks(
-            features,
-            [
-                ("custkey_not_null", F.col("custkey").isNull()),
-                ("label_binary", ~F.col("label").isin(0.0, 1.0)),
-                ("orders_positive", F.col("total_orders") <= 0),
-                ("recency_not_null", F.col("recency_days").isNull()),
-            ],
-        )
-        failed = [r for r in results if not r.passed]
-        if failed:
-            raise ValueError(f"feature quality contract violated: {failed}")
-    features.write.mode("overwrite").parquet(os.path.join(out_dir, "features"))
-    splits = features.randomSplit(SPLIT_WEIGHTS, seed=SEED)
-    names = ("train", "val", "test")
-    counts = {}
-    for name, df in zip(names, splits):
-        df.write.mode("overwrite").parquet(os.path.join(out_dir, name))
-        counts[name] = df.count()
-    features.unpersist()
+    try:
+        if validate:
+            failed = [r for r in run_checks(features, checks) if not r.passed]
+            if failed:
+                raise ValueError(f"feature quality contract violated: {failed}")
+        features.write.mode("overwrite").parquet(os.path.join(out_dir, "features"))
+        splits = features.randomSplit(SPLIT_WEIGHTS, seed=SEED)
+        counts = {}
+        for name, df in zip(("train", "val", "test"), splits):
+            df.write.mode("overwrite").parquet(os.path.join(out_dir, name))
+            counts[name] = df.count()
+    finally:
+        features.unpersist()
     return counts
 
 
@@ -80,23 +79,8 @@ def _sweep_best_threshold(
     ascending thresholds keeps the LOWEST t at the max metric value."""
     if thr_metric not in ("f1", "recall", "precision"):
         raise ValueError(f"unknown thr_metric {thr_metric!r}")
-    expanded = scored.select(
-        "label", F.col("p_churn").alias("score"), F.explode(F.sequence(F.lit(0), F.lit(100))).alias("i")
-    ).withColumn("t", F.col("i").cast("double") / F.lit(100.0))
-    hit = F.col("score") >= F.col("t")
-    pos = F.col("label") == 1
-    sweep = expanded.groupBy("t").agg(
-        F.sum(F.when(hit & pos, 1).otherwise(0)).alias("tp"),
-        F.sum(F.when(hit & ~pos, 1).otherwise(0)).alias("fp"),
-        F.sum(F.when(~hit & pos, 1).otherwise(0)).alias("fn"),
-        F.sum(F.when(~hit & ~pos, 1).otherwise(0)).alias("tn"),
-    )
-    best = (
-        _with_metrics(sweep)
-        .orderBy(F.col(thr_metric).desc(), F.col("t").asc())
-        .limit(1)
-        .collect()[0]
-    )
+    sweep = sweep_scores(scored.select("label", F.col("p_churn").alias("score")))
+    best = pick_best(with_metrics(sweep), thr_metric).collect()[0]
     return {
         "best_threshold": best["t"],
         "best_f1": best["f1"],
@@ -116,17 +100,18 @@ def run_training(
     model + metrics.json + coefficients.csv (reference ``train.py:137-192``).
     ``cv_metric``/``thr_metric`` mirror the reference CLI knobs
     (``--metric``, ``--thr_metric``) with the same defaults."""
-    train = spark.read.parquet(os.path.join(out_dir, "train")).cache()
-    val = spark.read.parquet(os.path.join(out_dir, "val")).cache()
-
+    train = spark.read.parquet(os.path.join(out_dir, "train"))
     model = train_churn_model(
         train, cross_validate=cross_validate, seed=SEED, cv_metric=cv_metric
     )
     model.write().overwrite().save(os.path.join(out_dir, "model"))
 
-    metrics = evaluate_model(model, val)
-    scored_val = score_frame(model, val).cache()
-    metrics.update(_sweep_best_threshold(scored_val, thr_metric=thr_metric))
+    val = spark.read.parquet(os.path.join(out_dir, "val")).cache()
+    try:
+        metrics = evaluate_model(model, val)
+        metrics.update(_sweep_best_threshold(score_frame(model, val), thr_metric=thr_metric))
+    finally:
+        val.unpersist()
 
     with open(os.path.join(out_dir, "metrics.json"), "w") as f:
         json.dump(metrics, f, indent=2, sort_keys=True)
@@ -148,7 +133,6 @@ def run_plots(
     matplotlib when present, else the built-in raster encoder. Only the
     101-row curve and per-feature coefficients are collected — bounded
     artifact sinks."""
-    from ..operators.threshold import sweep_scores
     from ..viz import render_feature_importance, render_threshold_curve
 
     plot_dir = plot_dir or os.path.join(out_dir, "plots")
@@ -159,7 +143,7 @@ def run_plots(
         F.col("label"), F.col("p_churn").alias("score")
     )
     curve = (
-        _with_metrics(sweep_scores(scored))
+        with_metrics(sweep_scores(scored))
         .select("t", "precision", "recall", "f1")
         .orderBy("t")
     )
@@ -190,21 +174,18 @@ def run_plots(
 def run_eval(spark: SparkSession, out_dir: str) -> dict[str, float]:
     """Held-out evaluation: AUCs + confusion matrix at the persisted best
     threshold, confusion cells in ONE conditional aggregation."""
-    test = spark.read.parquet(os.path.join(out_dir, "test")).cache()
     model = PipelineModel.load(os.path.join(out_dir, "model"))
     with open(os.path.join(out_dir, "metrics.json")) as f:
         threshold = json.load(f)["best_threshold"]
 
-    metrics = evaluate_model(model, test)
-    scored = score_frame(model, test, threshold=threshold)
-    pos = F.col("label") == 1
-    hit = F.col("prediction") == 1.0
-    cm = scored.agg(
-        F.sum(F.when(hit & pos, 1).otherwise(0)).alias("tp"),
-        F.sum(F.when(hit & ~pos, 1).otherwise(0)).alias("fp"),
-        F.sum(F.when(~hit & pos, 1).otherwise(0)).alias("fn"),
-        F.sum(F.when(~hit & ~pos, 1).otherwise(0)).alias("tn"),
-    ).collect()[0]
+    test = spark.read.parquet(os.path.join(out_dir, "test")).cache()
+    try:
+        metrics = evaluate_model(model, test)
+        scored = score_frame(model, test, threshold=threshold)
+        hit = F.col("prediction") == 1.0
+        cm = scored.agg(*confusion_cells(hit, F.col("label") == 1)).collect()[0]
+    finally:
+        test.unpersist()
     metrics.update({k: int(cm[k]) for k in ("tp", "fp", "fn", "tn")})
     metrics["threshold"] = threshold
     return metrics

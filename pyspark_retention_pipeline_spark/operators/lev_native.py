@@ -30,9 +30,10 @@ pure-Python fallback implements. Properties that keep this safe:
   a real cluster this would be a prebuilt wheel; ``addFile`` is the
   no-network form of the same move.
 * **Private, ownership-checked cache**: the .so lives under a per-user
-  mode-0700 cache directory (never the shared world-writable temp dir),
-  and every load first verifies the file is owned by the current euid and
-  not group/world-writable, so another local user cannot pre-plant a
+  mode-0700 cache directory (never the shared world-writable temp dir)
+  that must itself be owned by the current euid, and every load first
+  verifies the file is owned by the current euid and not
+  group/world-writable, so another local user cannot pre-plant a
   malicious library at a predictable path. Writes use a pid-unique temp
   name + atomic ``os.replace`` so racing processes never load a
   half-written file.
@@ -46,8 +47,11 @@ from __future__ import annotations
 
 import ctypes
 import hashlib
+import logging
 import os
 import subprocess
+
+_log = logging.getLogger(__name__)
 
 _C_SOURCE = r"""
 #include <stdint.h>
@@ -223,6 +227,7 @@ _CHECK_CASES = [
 _lib = None
 _tried = False
 _shipped = set()
+_warned_rejected = False
 
 
 def _so_name() -> str:
@@ -234,27 +239,43 @@ def _cache_dir() -> str:
     """Per-user mode-0700 cache directory for the compiled kernel. Never
     the shared system temp dir: a predictable name there would let another
     local user pre-plant a .so whose constructors run before the
-    self-check (CDLL loads first, checks after)."""
+    self-check (CDLL loads first, checks after). Raises ``OSError`` when
+    the directory belongs to another user, which leaves the kernel
+    unavailable."""
     base = os.environ.get("XDG_CACHE_HOME") or os.path.join(
         os.path.expanduser("~"), ".cache"
     )
     d = os.path.join(base, "prp_lev")
     os.makedirs(d, mode=0o700, exist_ok=True)
+    if os.stat(d).st_uid != os.geteuid():
+        raise OSError(f"kernel cache directory not owned by this user: {d}")
+    # makedirs applies its mode only on creation, and through the umask
+    os.chmod(d, 0o700)
     return d
 
 
 def _owned_and_private(path: str) -> bool:
     """True iff ``path`` is a regular file owned by the current euid and
-    not writable by group or other — the precondition for loading it."""
+    not writable by group or other — the precondition for loading it. The
+    first existing file that fails the check logs a warning, so a host-wide
+    fallback to pure Python (e.g. a group-writable SparkFiles copy under
+    umask 0002) is visible."""
+    global _warned_rejected
     try:
         st = os.stat(path)
     except OSError:
         return False
-    return (
-        os.path.isfile(path)
-        and st.st_uid == os.geteuid()
-        and not (st.st_mode & 0o022)
-    )
+    ok = os.path.isfile(path) and st.st_uid == os.geteuid() and not (st.st_mode & 0o022)
+    if not ok and not _warned_rejected:
+        _warned_rejected = True
+        _log.warning(
+            "native Levenshtein kernel %s not loaded: uid %d, mode %o "
+            "(must be owned by this user and not group/world-writable)",
+            path,
+            st.st_uid,
+            st.st_mode & 0o777,
+        )
+    return ok
 
 
 def _on_worker() -> bool:

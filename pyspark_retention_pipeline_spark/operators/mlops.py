@@ -86,18 +86,14 @@ def ml_threshold_from_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator — the fusion of the ML tier with operators/threshold.py (the
     reference's 303-job sweep collapsed into one aggregation)."""
     from ..ml import score_frame
-    from .threshold import _with_metrics, sweep_scores
+    from .threshold import pick_best, sweep_scores, with_metrics
 
     model, features = _train(spark, sf_dir)
     scored = score_frame(model, features).select(
         F.col("label"), F.col("p_churn").alias("score")
     )
-    return (
-        _with_metrics(sweep_scores(scored))
-        .select("t", "precision", "recall", "f1")
-        .orderBy(F.col("f1").desc(), F.col("t").asc())
-        .limit(1)
-    )
+    curve = with_metrics(sweep_scores(scored)).select("t", "precision", "recall", "f1")
+    return pick_best(curve, "f1")
 
 
 # --- learned quality classifier (fastText shape) ---------------------------
@@ -203,7 +199,7 @@ def _train_quality(spark: SparkSession, sf_dir: str):
     checkpoint."""
     from pyspark.ml import PipelineModel
 
-    from ..ml.pipeline import _prepare, build_churn_pipeline
+    from ..ml import add_class_weight, build_churn_pipeline, cast_features
 
     app_id = spark.sparkContext.applicationId
     stale = [k for k in _QC_CACHE if k[0] != app_id]
@@ -212,7 +208,7 @@ def _train_quality(spark: SparkSession, sf_dir: str):
     key = (app_id, sf_dir)
     if key not in _QC_CACHE:
         features = quality_feature_frame(spark, sf_dir).cache()
-        prepared = _prepare(features, _QC_FEATURE_COLS).cache()
+        prepared = add_class_weight(cast_features(features, _QC_FEATURE_COLS)).cache()
         stages = build_churn_pipeline(_QC_FEATURE_COLS).getStages()
         fitted = []
         cur = prepared
@@ -242,15 +238,10 @@ def quality_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Spearman + accuracy-vs-label bands)."""
     from pyspark.ml.functions import vector_to_array
 
+    from ..ml import cast_features
+
     model, features = _train_quality(spark, sf_dir)
-    fc = set(_QC_FEATURE_COLS)
-    prepared = features.select(
-        *[
-            F.col(c).cast("double").alias(c) if c in fc else F.col(c)
-            for c in features.columns
-        ]
-    )
-    return model.transform(prepared).select(
+    return model.transform(cast_features(features, _QC_FEATURE_COLS)).select(
         "doc_id",
         F.col("label").cast("long").alias("label"),
         F.round(vector_to_array("probability")[1], 6).alias("qc_score"),

@@ -15,7 +15,7 @@ operators (see operators/mlops.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..constants import CUTOFF, LOOKAHEAD_END
@@ -77,27 +77,29 @@ def _scored_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def confusion_cells(hit: Column, pos: Column) -> list[Column]:
+    """The four confusion cells tp/fp/fn/tn as conditional-sum aggregates of
+    a predicted-positive predicate ``hit`` and a true-positive one ``pos``."""
+    return [
+        F.sum(F.when(hit & pos, 1).otherwise(0)).alias("tp"),
+        F.sum(F.when(hit & ~pos, 1).otherwise(0)).alias("fp"),
+        F.sum(F.when(~hit & pos, 1).otherwise(0)).alias("fn"),
+        F.sum(F.when(~hit & ~pos, 1).otherwise(0)).alias("tn"),
+    ]
+
+
 def sweep_scores(scored: DataFrame, n_steps: int = 100) -> DataFrame:
     """(label, score) frame → confusion cells per threshold t in {0..n}/n in
     ONE aggregation pass (the reference's 303-job loop collapsed; shared by
-    the synthetic-score query below and the real-model sweep in
-    operators/mlops.py)."""
+    the synthetic-score query below and the real-model sweeps in
+    operators/mlops.py and ml/workflow.py)."""
     expanded = scored.select(
         "label",
         "score",
         F.explode(F.sequence(F.lit(0), F.lit(n_steps))).alias("i"),
     ).withColumn("t", F.col("i").cast("double") / F.lit(float(n_steps)))
     hit = F.col("score") >= F.col("t")
-    pos = F.col("label") == 1
-    return (
-        expanded.groupBy("t")
-        .agg(
-            F.sum(F.when(hit & pos, 1).otherwise(0)).alias("tp"),
-            F.sum(F.when(hit & ~pos, 1).otherwise(0)).alias("fp"),
-            F.sum(F.when(~hit & pos, 1).otherwise(0)).alias("fn"),
-            F.sum(F.when(~hit & ~pos, 1).otherwise(0)).alias("tn"),
-        )
-    )
+    return expanded.groupBy("t").agg(*confusion_cells(hit, F.col("label") == 1))
 
 
 @query("threshold_sweep", oracle=_SCORED_CTE + _SWEEP_SELECT, tags=("M9", "A7"))
@@ -106,7 +108,8 @@ def threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sweep_scores(_scored_labels(spark, sf_dir))
 
 
-def _with_metrics(sweep: DataFrame) -> DataFrame:
+def with_metrics(sweep: DataFrame) -> DataFrame:
+    """Add precision/recall/F1 columns to a confusion-cell sweep."""
     precision = F.col("tp") / F.greatest(F.col("tp") + F.col("fp"), F.lit(1))
     recall = F.col("tp") / F.greatest(F.col("tp") + F.col("fn"), F.lit(1))
     return (
@@ -120,6 +123,13 @@ def _with_metrics(sweep: DataFrame) -> DataFrame:
     )
 
 
+def pick_best(curve: DataFrame, metric: str) -> DataFrame:
+    """The one row of ``curve`` with the highest ``metric``, the lowest ``t``
+    among ties — the reference's strict ``>`` over ascending thresholds
+    (``pipeline/train.py:81-100``)."""
+    return curve.orderBy(F.col(metric).desc(), F.col("t").asc()).limit(1)
+
+
 @query(
     "threshold_curve",
     oracle=_SCORED_CTE + ", sweep AS (" + _SWEEP_SELECT + ")" + _METRICS_SELECT,
@@ -128,7 +138,7 @@ def _with_metrics(sweep: DataFrame) -> DataFrame:
 def threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full precision/recall/F1 curve (the reference's
     ``docs/threshold_curve.csv`` artifact, computed in one pass)."""
-    return _with_metrics(threshold_sweep(spark, sf_dir))
+    return with_metrics(threshold_sweep(spark, sf_dir))
 
 
 @query(
@@ -148,11 +158,7 @@ def best_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     greater F1 is required to move off the lowest best threshold
     (``pipeline/train.py:81-100``) — equivalently ORDER BY f1 DESC, t ASC."""
     curve = threshold_curve(spark, sf_dir)
-    return (
-        curve.select("t", "precision", "recall", "f1")
-        .orderBy(F.col("f1").desc(), F.col("t").asc())
-        .limit(1)
-    )
+    return pick_best(curve.select("t", "precision", "recall", "f1"), "f1")
 
 
 @query(
@@ -181,10 +187,7 @@ def confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     hit = F.col("score") >= F.lit(0.46)
     pos = F.col("label") == 1
     return scored.agg(
-        F.sum(F.when(hit & pos, 1).otherwise(0)).alias("tp"),
-        F.sum(F.when(hit & ~pos, 1).otherwise(0)).alias("fp"),
-        F.sum(F.when(~hit & pos, 1).otherwise(0)).alias("fn"),
-        F.sum(F.when(~hit & ~pos, 1).otherwise(0)).alias("tn"),
+        *confusion_cells(hit, pos),
         (F.sum(F.when(pos, 1).otherwise(0)) / F.greatest(F.count("*"), F.lit(1))).alias(
             "pos_rate"
         ),

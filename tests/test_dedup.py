@@ -764,6 +764,61 @@ def test_lev_native_rejects_unsafe_cache_file(tmp_path):
     assert lev_native._owned_and_private(str(p))
 
 
+def test_lev_native_cache_dir_private_and_owned(monkeypatch, tmp_path):
+    """The kernel cache directory is forced to mode 0700 even when it
+    already exists with a looser mode; a directory owned by another user
+    is refused, which leaves the kernel unavailable without compiling."""
+    import os
+    import stat
+    import subprocess
+
+    from pyspark_retention_pipeline_spark.operators import lev_native
+
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
+    pre = tmp_path / "prp_lev"
+    pre.mkdir()
+    pre.chmod(0o755)
+    assert lev_native._cache_dir() == str(pre)
+    assert stat.S_IMODE(os.stat(pre).st_mode) == 0o700
+
+    other_uid = os.geteuid() + 1
+    monkeypatch.setattr(os, "geteuid", lambda: other_uid)
+    with pytest.raises(OSError):
+        lev_native._cache_dir()
+
+    def _no_compile(*a, **k):
+        raise AssertionError("compiler invoked for a foreign cache directory")
+
+    monkeypatch.setattr(subprocess, "run", _no_compile)
+    monkeypatch.setattr(lev_native, "_sparkfiles_so", lambda: None)
+    monkeypatch.setattr(lev_native, "_on_worker", lambda: False)
+    monkeypatch.setattr(lev_native, "_lib", None)
+    monkeypatch.setattr(lev_native, "_tried", False)
+    assert lev_native.get_kernel() is None
+
+
+def test_lev_native_rejected_so_warns_once(monkeypatch, tmp_path, caplog):
+    """A .so that fails the ownership/mode check logs one warning per
+    process, so a silent fallback to pure Python is visible; an absent
+    file is the normal not-yet-compiled case and logs nothing."""
+    import logging
+
+    from pyspark_retention_pipeline_spark.operators import lev_native
+
+    monkeypatch.setattr(lev_native, "_warned_rejected", False)
+    p = tmp_path / "shared.so"
+    p.write_bytes(b"\x7fELF")
+    p.chmod(0o664)
+    with caplog.at_level(logging.WARNING, logger=lev_native.__name__):
+        assert not lev_native._owned_and_private(str(tmp_path / "absent.so"))
+        assert not caplog.records
+        assert not lev_native._owned_and_private(str(p))
+        assert not lev_native._owned_and_private(str(p))
+    records = [r for r in caplog.records if r.name == lev_native.__name__]
+    assert len(records) == 1
+    assert str(p) in records[0].getMessage()
+
+
 def test_lev_batch_resilient_survives_native_failures(monkeypatch):
     """The Arrow boundary's in-worker body falls back to pure Python when
     the native path RAISES (not only when it is absent), and routes pairs

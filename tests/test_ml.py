@@ -89,8 +89,8 @@ def test_golden_auc_and_threshold_on_reference_shaped_split(spark):
     from pyspark.sql import functions as F
 
     from pyspark_retention_pipeline_spark.operators.threshold import (
-        _with_metrics,
         sweep_scores,
+        with_metrics,
     )
 
     rng = np.random.default_rng(42)
@@ -113,8 +113,11 @@ def test_golden_auc_and_threshold_on_reference_shaped_split(spark):
     schema = "label double, " + ", ".join(f"{c} double" for c in FEATURE_COLS)
     rows = [(float(y[i]), *[float(v) for v in X[i]]) for i in range(n)]
     df = spark.createDataFrame(rows, schema)
+    persisted_before = len(spark.sparkContext._jsc.getPersistentRDDs())
     model = train_churn_model(df)
     metrics = evaluate_model(model, df)
+    # training and evaluation release every frame they cache
+    assert len(spark.sparkContext._jsc.getPersistentRDDs()) == persisted_before
 
     assert abs(metrics["areaUnderROC"] - bayes_auc) < 0.05, (metrics, bayes_auc)
     assert 0.6 < metrics["areaUnderROC"] < 0.95
@@ -122,7 +125,7 @@ def test_golden_auc_and_threshold_on_reference_shaped_split(spark):
 
     scored = score_frame(model, df).select("label", F.col("p_churn").alias("score"))
     best = (
-        _with_metrics(sweep_scores(scored))
+        with_metrics(sweep_scores(scored))
         .orderBy(F.col("f1").desc(), F.col("t").asc())
         .limit(1)
         .collect()[0]

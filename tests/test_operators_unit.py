@@ -48,10 +48,10 @@ def test_sessionize_gap_semantics(spark, monkeypatch, tmp_path):
 
 def test_threshold_metrics_guard_division(spark):
     # tp=fp=fn=0 -> precision=recall=0, f1=0 (the reference's max(...,1) guard).
-    from pyspark_retention_pipeline_spark.operators.threshold import _with_metrics
+    from pyspark_retention_pipeline_spark.operators.threshold import with_metrics
 
     sweep = spark.createDataFrame([(1.0, 0, 0, 0, 10)], "t double, tp long, fp long, fn long, tn long")
-    row = _with_metrics(sweep).collect()[0]
+    row = with_metrics(sweep).collect()[0]
     assert row["precision"] == 0.0 and row["recall"] == 0.0 and row["f1"] == 0.0
 
 

@@ -85,7 +85,7 @@ def test_sessionize_matches_python_reference(spark, gaps_s, monkeypatch):
 def test_threshold_curve_invariants(spark, labels, data):
     """Recall is non-increasing in t; tp+fn is constant; precision/recall
     stay in [0,1] under the reference's guard semantics."""
-    from pyspark_retention_pipeline_spark.operators.threshold import _with_metrics
+    from pyspark_retention_pipeline_spark.operators.threshold import with_metrics
 
     scores = [
         data.draw(st.integers(min_value=0, max_value=100)) / 100.0 for _ in labels
@@ -103,7 +103,7 @@ def test_threshold_curve_invariants(spark, labels, data):
         F.sum(F.when(~hit & pos, 1).otherwise(0)).alias("fn"),
         F.sum(F.when(~hit & ~pos, 1).otherwise(0)).alias("tn"),
     )
-    curve = _with_metrics(sweep).orderBy("t").collect()
+    curve = with_metrics(sweep).orderBy("t").collect()
     n_pos = sum(1 for l in labels if l)
     recalls = [r["recall"] for r in curve]
     assert all(recalls[i] >= recalls[i + 1] - 1e-12 for i in range(len(recalls) - 1))

@@ -15,6 +15,8 @@ from pyspark_retention_pipeline_spark.ml.workflow import (
 
 def test_full_lifecycle(spark, sf_dir, tmp_path):
     out = str(tmp_path / "artifacts")
+    # Every frame the lifecycle caches is released by the step that cached it.
+    persisted_before = len(spark.sparkContext._jsc.getPersistentRDDs())
 
     counts = run_feature_etl(spark, sf_dir, out)
     assert set(counts) == {"train", "val", "test"}
@@ -37,6 +39,25 @@ def test_full_lifecycle(spark, sf_dir, tmp_path):
     assert test_metrics["tp"] + test_metrics["fp"] + test_metrics["fn"] + test_metrics["tn"] == n_test
     assert test_metrics["threshold"] == metrics["best_threshold"]
 
+    # The eval's confusion cells are the sweep's row at t = threshold on the
+    # same split: both count with one predicate.
+    from pyspark.ml import PipelineModel
+    from pyspark.sql import functions as F
+
+    from pyspark_retention_pipeline_spark.ml import score_frame
+    from pyspark_retention_pipeline_spark.operators.threshold import sweep_scores
+
+    model = PipelineModel.load(os.path.join(out, "model"))
+    scored = score_frame(model, spark.read.parquet(os.path.join(out, "test")))
+    sweep_row = (
+        sweep_scores(scored.select("label", F.col("p_churn").alias("score")))
+        .where(F.col("t") == test_metrics["threshold"])
+        .collect()
+    )
+    assert len(sweep_row) == 1
+    for cell in ("tp", "fp", "fn", "tn"):
+        assert test_metrics[cell] == sweep_row[0][cell], cell
+
     # Plot stage (reference plot_threshold.py / plot_feature_importance.py):
     # curve CSV with 101 rows + two decodable PNG artifacts.
     from pyspark_retention_pipeline_spark.ml.workflow import run_plots
@@ -49,6 +70,8 @@ def test_full_lifecycle(spark, sf_dir, tmp_path):
     for key in ("curve_png", "importance_png"):
         img = decode_png(open(paths[key], "rb").read())
         assert img.shape == (500, 700, 3)
+
+    assert len(spark.sparkContext._jsc.getPersistentRDDs()) == persisted_before
 
 
 def test_split_determinism(spark, sf_dir, tmp_path):
