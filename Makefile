@@ -3,7 +3,7 @@
 SF_DIR ?= /root/testdata/sf0.001
 OUT_DIR ?= ./data/artifacts
 
-.PHONY: test test-all test-gate test-gated bench etl train eval plots plans sweep
+.PHONY: test test-all test-gate test-gated bench perfbench etl train eval plots plans sweep
 
 # Default tier: everything not marked `slow` — sized to finish inside the
 # driver's pytest timeout (round-16 verdict item 1). The slow tier (full
@@ -43,6 +43,10 @@ test-gated:
 
 bench:
 	python bench.py
+
+# Self-test of the repository benchmark (perfbench/) at tiny scale.
+perfbench:
+	python3 -m pytest perfbench -q
 
 etl:
 	python -c "from pyspark_retention_pipeline_spark.session import get_spark; \

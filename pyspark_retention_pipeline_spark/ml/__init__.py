@@ -2,10 +2,12 @@
 
 from .pipeline import (
     FEATURE_COLS,
+    LinearChurnModel,
     add_class_weight,
     build_churn_pipeline,
     cast_features,
     coefficients_frame,
+    compile_churn_model,
     evaluate_model,
     score_frame,
     score_records,
@@ -14,10 +16,12 @@ from .pipeline import (
 
 __all__ = [
     "FEATURE_COLS",
+    "LinearChurnModel",
     "add_class_weight",
     "build_churn_pipeline",
     "cast_features",
     "coefficients_frame",
+    "compile_churn_model",
     "evaluate_model",
     "score_frame",
     "score_records",

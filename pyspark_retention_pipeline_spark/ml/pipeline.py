@@ -7,15 +7,25 @@ with one scale-relevant difference: class weights are derived *inside the
 plan* (broadcast scalar join) rather than collecting label counts to the
 driver (reference ``train.py:40-55``). Threshold selection over these scores
 lives in ml/workflow.py.
+
+Two scoring paths give the same numbers: :func:`score_frame` transforms a
+DataFrame with the fitted ``PipelineModel``; :func:`score_records` scores a
+few serving payloads on the driver with numpy, from the stages read once by
+:func:`compile_churn_model`, and launches no Spark job.
 """
 
 from __future__ import annotations
 
+import math
+from dataclasses import dataclass
+
+import numpy as np
 from pyspark.ml import Pipeline, PipelineModel
 from pyspark.ml.classification import LogisticRegression
 from pyspark.ml.evaluation import BinaryClassificationEvaluator
 from pyspark.ml.feature import Imputer, StandardScaler, VectorAssembler
 from pyspark.ml.functions import vector_to_array
+from pyspark.ml.linalg import SparseVector
 from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -154,25 +164,18 @@ def train_churn_model(
     return fitted.bestModel if cross_validate else fitted
 
 
-def _churn_scores(
-    model: PipelineModel, frame: DataFrame, threshold: float, keep: list[str]
-) -> DataFrame:
-    """``keep`` columns plus P(churn) and the thresholded prediction."""
-    p1 = vector_to_array(F.col("probability")).getItem(1)
-    return model.transform(frame).select(
-        *keep,
-        p1.alias("p_churn"),
-        (p1 >= F.lit(threshold)).cast("double").alias("prediction"),
-    )
-
-
 def score_frame(
     model: PipelineModel, features: DataFrame, threshold: float = DEFAULT_THRESHOLD
 ) -> DataFrame:
     """Batch inference: transform → P(churn) → thresholded prediction
     (reference ``eval.py:50-55``; p1 extraction via vector_to_array)."""
     keep = [c for c in ("custkey", "label") if c in features.columns]
-    return _churn_scores(model, cast_features(features, FEATURE_COLS), threshold, keep)
+    p1 = vector_to_array(F.col("probability")).getItem(1)
+    return model.transform(cast_features(features, FEATURE_COLS)).select(
+        *keep,
+        p1.alias("p_churn"),
+        (p1 >= F.lit(threshold)).cast("double").alias("prediction"),
+    )
 
 
 def evaluate_model(model: PipelineModel, features: DataFrame) -> dict[str, float]:
@@ -208,23 +211,110 @@ def coefficients_frame(spark: SparkSession, model: PipelineModel) -> DataFrame:
     return spark.createDataFrame(rows, schema).orderBy(F.abs(F.col("coefficient")).desc())
 
 
+_CHURN_STAGES = (
+    "ImputerModel",
+    "VectorAssembler",
+    "StandardScalerModel",
+    "LogisticRegressionModel",
+)
+
+
+@dataclass(frozen=True)
+class LinearChurnModel:
+    """The fitted churn pipeline as plain arrays, for scoring on the driver.
+
+    ``surrogates``, ``mean`` and ``scale`` are indexed like ``feature_cols``;
+    ``coefficients`` covers only the ``active`` feature indices, the entries
+    Spark's dot product reads (a compressed sparse coefficient vector skips
+    its zeros, so ``inf * 0`` never turns the margin into NaN there)."""
+
+    feature_cols: tuple[str, ...]
+    surrogates: np.ndarray
+    mean: np.ndarray
+    scale: np.ndarray
+    active: np.ndarray
+    coefficients: np.ndarray
+    intercept: float
+
+
+def compile_churn_model(model: PipelineModel) -> LinearChurnModel:
+    """Read the four fitted churn stages once into a :class:`LinearChurnModel`.
+
+    Collecting the Imputer surrogates is its only Spark work (a local relation
+    in a fitted or loaded model: no job on Spark 4.1).
+    Raises ``ValueError`` for any stage list other than Imputer(NaN missing) →
+    VectorAssembler → StandardScaler(withMean, withStd) → binary LR."""
+    names = tuple(type(s).__name__ for s in model.stages)
+    if names != _CHURN_STAGES:
+        raise ValueError(
+            f"not a churn pipeline: stages {list(names)}, expected {list(_CHURN_STAGES)}"
+        )
+    imputer, assembler, scaler, lr = model.stages
+    if not math.isnan(imputer.getMissingValue()):
+        raise ValueError("churn pipeline Imputer must treat NaN (the default) as missing")
+    if not (scaler.getWithMean() and scaler.getWithStd()):
+        raise ValueError("churn pipeline StandardScaler must have withMean and withStd set")
+    raw_of = dict(zip(imputer.getOutputCols(), imputer.getInputCols()))
+    cols = tuple(raw_of[c] for c in assembler.getInputCols())
+    surrogate_row = imputer.surrogateDF.collect()[0]
+    std = scaler.std.toArray()
+    coefficients = lr.coefficients
+    if isinstance(coefficients, SparseVector):
+        active, w = coefficients.indices, coefficients.values
+    else:
+        w = coefficients.toArray()
+        active = np.arange(len(w))
+    return LinearChurnModel(
+        feature_cols=cols,
+        surrogates=np.array([float(surrogate_row[c]) for c in cols]),
+        mean=scaler.mean.toArray(),
+        scale=np.divide(1.0, std, out=np.zeros_like(std), where=std != 0),
+        active=np.asarray(active, dtype=np.int64),
+        coefficients=np.asarray(w, dtype=float),
+        intercept=float(lr.intercept),
+    )
+
+
+def _coerce(v) -> float:
+    try:
+        return float(v)
+    except (TypeError, ValueError):
+        return 0.0
+
+
 def score_records(
-    spark: SparkSession,
-    model: PipelineModel,
-    records: list[dict],
-    threshold: float = DEFAULT_THRESHOLD,
-) -> DataFrame:
-    """Serving-path inference (reference ``serve_api.py:113-160``): missing
-    features imputed as 0.0, unknown keys dropped, un-floatable values
-    coerced to 0.0 (``serve_api.py:122-130``'s try/float/except rule),
-    everything double by an explicit schema at createDataFrame time."""
+    linear: LinearChurnModel, records: list[dict], threshold: float = DEFAULT_THRESHOLD
+) -> list[dict]:
+    """Serving-path inference on the driver, no Spark job (reference
+    ``serve_api.py:113-160``): one ``{"p_churn", "prediction"}`` dict per
+    record, equal to :func:`score_frame` on the same values.
 
-    def _coerce(v) -> float:
-        try:
-            return float(v)
-        except (TypeError, ValueError):
-            return 0.0
+    Payload rule: a missing, ``None`` or un-floatable feature is 0.0, unknown
+    keys are dropped, ``"nan"``/NaN takes the Imputer surrogate and ±inf is
+    kept. A NaN probability (from inputs with opposite infinities) predicts
+    1.0, because Spark orders NaN above every double."""
+    cols = linear.feature_cols
+    x = np.array([[_coerce(r.get(c, 0.0)) for c in cols] for r in records], dtype=float)
+    x = x.reshape(len(records), len(cols))
+    x = np.where(np.isnan(x), linear.surrogates, x)
+    with np.errstate(invalid="ignore"):
+        z = (x - linear.mean) * linear.scale
+        # Spark's left-to-right dot product, so margins match it bit for bit.
+        dot = np.zeros(len(records))
+        for j, w in zip(linear.active, linear.coefficients):
+            dot = dot + z[:, j] * w
+    out = []
+    for m in (dot + linear.intercept).tolist():
+        p = _p_churn(m)
+        out.append({"p_churn": p, "prediction": 1.0 if p != p or p >= threshold else 0.0})
+    return out
 
-    schema = T.StructType([T.StructField(c, T.DoubleType()) for c in FEATURE_COLS])
-    cleaned = [{c: _coerce(r.get(c, 0.0)) for c in FEATURE_COLS} for r in records]
-    return _churn_scores(model, spark.createDataFrame(cleaned, schema), threshold, [])
+
+def _p_churn(margin: float) -> float:
+    """Spark's binary LR probability, p1 = 1 - 1/(1 + e^margin), with libm's
+    ``exp`` (numpy's vectorized one can be an ulp off Spark's)."""
+    try:
+        e = math.exp(margin)
+    except OverflowError:
+        e = math.inf
+    return 1.0 - 1.0 / (1.0 + e)

@@ -3,21 +3,25 @@
 Library-first: :class:`ChurnScorer` is the engine artifact — model loading,
 schema authority (the persisted VectorAssembler input columns, mirroring
 ``serve_api.py:87-89`` where the model artifact defines the feature schema),
-payload coercion (missing → 0.0, unknown dropped, all → double), thresholded
-prediction. The HTTP layer is a thin optional wrapper: FastAPI is not in this
-container, so :func:`create_app` import-gates it (SURVEY §7 phase 3 — the API
-is glue, not engine).
+payload coercion, thresholded prediction. The scorer reads the fitted stages
+once (:func:`ml.compile_churn_model`) and scores every request on the driver
+with numpy (:func:`ml.score_records`): a request launches no Spark job. It is
+safe to share between threads and counts its requests, records and errors in
+:meth:`ChurnScorer.health`. The HTTP layer is a thin optional wrapper: FastAPI
+is not in this container, so :func:`create_app` import-gates it (SURVEY §7
+phase 3 — the API is glue, not engine).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import threading
 
 from pyspark.ml import PipelineModel
-from pyspark.ml.feature import VectorAssembler
 from pyspark.sql import SparkSession
 
+from .. import ml
 from ..constants import DEFAULT_THRESHOLD
 
 
@@ -31,9 +35,11 @@ class ChurnScorer:
         self.spark = spark
         self.model = model
         self.threshold = float(threshold)
-        assembler = next(s for s in model.stages if isinstance(s, VectorAssembler))
+        self.linear = ml.compile_churn_model(model)
         # The model artifact is the schema authority (serve_api.py:87-98).
-        self.feature_cols = [c.removesuffix("_imp") for c in assembler.getInputCols()]
+        self.feature_cols = list(self.linear.feature_cols)
+        self._lock = threading.Lock()
+        self._counts = {"requests": 0, "records": 0, "errors": 0}
 
     @classmethod
     def load(cls, spark: SparkSession, artifacts_dir: str) -> "ChurnScorer":
@@ -58,22 +64,33 @@ class ChurnScorer:
 
     def health(self) -> dict:
         # Reference /health returns the schema inline (serve_api.py:180-184).
+        with self._lock:
+            counts = dict(self._counts)
         return {
             "status": "ok",
             "n_features": len(self.feature_cols),
             "features": self.feature_cols,
             "threshold": self.threshold,
+            **counts,
         }
 
     def predict(self, records: list[dict]) -> list[dict]:
-        """Score a batch of feature dicts (missing → 0.0, unknown dropped)."""
-        from ..ml import score_records
+        """Score a batch of feature dicts (missing, None or non-numeric → 0.0,
+        "nan" → the training mean, unknown keys dropped)."""
+        try:
+            # Looked up on the package at call time, so a wrapper installed
+            # there sees every serving call.
+            rows = ml.score_records(self.linear, records, threshold=self.threshold)
+        except Exception:
+            self._count(requests=1, errors=1)
+            raise
+        self._count(requests=1, records=len(rows))
+        return [{"probability": r["p_churn"], "prediction": r["prediction"]} for r in rows]
 
-        rows = score_records(self.spark, self.model, records, threshold=self.threshold)
-        return [
-            {"probability": r["p_churn"], "prediction": r["prediction"]}
-            for r in rows.collect()
-        ]
+    def _count(self, **deltas: int) -> None:
+        with self._lock:
+            for k, v in deltas.items():
+                self._counts[k] += v
 
 
 def create_app(scorer: ChurnScorer):

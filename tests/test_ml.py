@@ -9,6 +9,7 @@ from pyspark_retention_pipeline_spark.ml import (
     FEATURE_COLS,
     add_class_weight,
     coefficients_frame,
+    compile_churn_model,
     evaluate_model,
     score_frame,
     score_records,
@@ -57,16 +58,15 @@ def test_coefficients_one_per_feature(spark, model):
     assert {r["feature"] for r in coefs} == set(FEATURE_COLS)
 
 
-def test_serving_coercion(spark, model):
+def test_serving_coercion(model):
     # Missing features -> 0.0; unknown keys dropped (reference serve_api.py).
     out = score_records(
-        spark,
-        model,
+        compile_churn_model(model),
         [
             {"total_orders": 5, "recency_days": 10, "unknown_key": 123},
             {c: 1.0 for c in FEATURE_COLS},
         ],
-    ).collect()
+    )
     assert len(out) == 2
     for r in out:
         assert 0.0 <= r["p_churn"] <= 1.0

@@ -3,8 +3,18 @@ payload coercion, thresholded output, optional HTTP wrapper gating."""
 
 from __future__ import annotations
 
-import pytest
+import json
+import math
+import threading
+import uuid
 
+import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
+from pyspark.ml import PipelineModel
+from pyspark.sql import types as T
+
+from pyspark_retention_pipeline_spark import ml
 from pyspark_retention_pipeline_spark.ml import FEATURE_COLS, train_churn_model
 from pyspark_retention_pipeline_spark.operators.retention import churn_feature_frame
 from pyspark_retention_pipeline_spark.serving import ChurnScorer, create_app
@@ -76,6 +86,168 @@ def test_coercion_rules_pinned(scorer):
     as_str = scorer.predict([{c: "1.0" for c in FEATURE_COLS}])
     as_num = scorer.predict([{c: 1.0 for c in FEATURE_COLS}])
     assert round(as_str[0]["probability"], 12) == round(as_num[0]["probability"], 12)
+    # "nan" takes the feature's Imputer surrogate (its training mean), and
+    # "inf" is kept as infinity.
+    surrogates = scorer.model.stages[0].surrogateDF.collect()[0]
+    for c in FEATURE_COLS:
+        as_nan, as_mean = scorer.predict([{c: "nan"}, {c: surrogates[c]}])
+        assert as_nan == as_mean, c
+        as_inf_str, as_inf = scorer.predict([{c: "inf"}, {c: float("inf")}])
+        assert as_inf_str == as_inf, c
+
+
+# --- Driver-side scoring: parity with ml.score_frame, no Spark jobs --------
+
+
+@pytest.fixture(scope="module")
+def sparse_scorer(spark, sf_dir):
+    """An L1-regularized model with a constant feature: most coefficients are
+    exactly 0 (Spark stores them as a sparse vector) and one scaler std is 0."""
+    from pyspark.ml.linalg import SparseVector
+    from pyspark.sql import functions as F
+
+    features = churn_feature_frame(spark, sf_dir).withColumn("recent90_orders", F.lit(2.0))
+    pipeline = ml.build_churn_pipeline()
+    pipeline.getStages()[-1].setRegParam(0.02).setElasticNetParam(1.0)
+    model = pipeline.fit(ml.add_class_weight(ml.cast_features(features, FEATURE_COLS)))
+    coefficients = model.stages[-1].coefficients
+    assert isinstance(coefficients, SparseVector) and 0 < coefficients.numNonzeros() < 8
+    assert 0.0 in model.stages[2].std.toArray()
+    return ChurnScorer(spark, model, threshold=0.5)
+
+
+def _num(v) -> float:
+    """The serving payload rule, written out independently of the package."""
+    try:
+        return float(v)
+    except (TypeError, ValueError):
+        return 0.0
+
+
+def _reference(spark, scorer, records: list[dict]) -> list:
+    """``ml.score_frame`` rows for ``records``, in record order."""
+    schema = T.StructType(
+        [T.StructField("custkey", T.LongType())]
+        + [T.StructField(c, T.DoubleType()) for c in scorer.feature_cols]
+    )
+    rows = [(i, *[_num(r.get(c)) for c in scorer.feature_cols]) for i, r in enumerate(records)]
+    scored = ml.score_frame(scorer.model, spark.createDataFrame(rows, schema), scorer.threshold)
+    return sorted(scored.collect(), key=lambda r: r["custkey"])
+
+
+VALUES = st.one_of(
+    st.sampled_from(
+        [None, "n/a", "nan", float("nan"), float("inf"), float("-inf"), "inf", "-inf", "3.5"]
+    ),
+    st.floats(min_value=-1e4, max_value=1e6, allow_nan=False),
+    st.floats(min_value=-1e4, max_value=1e6, allow_nan=False).map(str),
+)
+PAYLOAD = st.dictionaries(st.sampled_from(FEATURE_COLS + ["unknown_key"]), VALUES)
+
+
+@pytest.mark.parametrize("which", ["scorer", "sparse_scorer"])
+@given(records=st.lists(PAYLOAD, min_size=1, max_size=64))
+@settings(
+    max_examples=15, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture]
+)
+def test_predict_matches_score_frame(spark, request, which, records):
+    scorer = request.getfixturevalue(which)
+    got = scorer.predict(records)
+    want = _reference(spark, scorer, records)
+    assert len(got) == len(want)
+    for rec, g, w in zip(records, got, want):
+        p, ref = g["probability"], w["p_churn"]
+        assert math.isnan(p) == math.isnan(ref), (rec, g, ref)
+        if not math.isnan(ref):
+            assert abs(p - ref) <= 1e-12, (rec, g, ref)
+        assert g["prediction"] == w["prediction"], (rec, g, w)
+
+
+def test_opposite_infinities_predict_churn(scorer):
+    # inf in a positive- and a negative-coefficient feature: the margin and
+    # p are NaN, and Spark's NaN-above-everything ordering predicts 1.0.
+    coefs = dict(zip(FEATURE_COLS, scorer.model.stages[-1].coefficients.toArray()))
+    up = next(c for c, w in coefs.items() if w > 0)
+    down = next(c for c, w in coefs.items() if w < 0)
+    (out,) = scorer.predict([{up: "inf", down: float("inf")}])
+    assert math.isnan(out["probability"]) and out["prediction"] == 1.0
+
+
+def test_requests_run_no_spark_jobs(spark, scorer):
+    sc = spark.sparkContext
+    payloads = [{c: float(i % 7) for c in FEATURE_COLS} for i in range(256)]
+
+    def jobs_in_group(fn) -> int:
+        group = f"serving-test-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "serving test")
+        fn()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    persisted = set(sc._jsc.getPersistentRDDs().keySet())
+    assert jobs_in_group(lambda: scorer.predict(payloads[:1])) == 0
+    assert jobs_in_group(lambda: scorer.predict(payloads)) == 0
+    assert set(sc._jsc.getPersistentRDDs().keySet()) == persisted
+    # The counting itself works: the DataFrame path does launch jobs.
+    assert jobs_in_group(lambda: _reference(spark, scorer, payloads[:1])) >= 1
+
+
+def test_loaded_scorer_matches_in_memory(spark, scorer, tmp_path):
+    scorer.model.write().save(str(tmp_path / "model"))
+    (tmp_path / "metrics.json").write_text(json.dumps({"best_threshold": scorer.threshold}))
+    loaded = ChurnScorer.load(spark, str(tmp_path))
+    payloads = [{}, {c: float(i + 1) for i, c in enumerate(FEATURE_COLS)}, {"total_qty": "nan"}]
+    assert loaded.threshold == scorer.threshold
+    assert loaded.feature_cols == scorer.feature_cols
+    assert loaded.predict(payloads) == scorer.predict(payloads)
+
+
+def test_non_churn_pipeline_is_rejected(scorer):
+    tail = PipelineModel(stages=scorer.model.stages[1:])
+    with pytest.raises(ValueError, match="VectorAssembler.*StandardScalerModel"):
+        ml.compile_churn_model(tail)
+    with pytest.raises(ValueError, match="LogisticRegressionModel"):
+        ChurnScorer(scorer.spark, tail)
+
+
+def test_concurrent_predict_matches_serial_and_counts(spark, scorer):
+    import sys
+
+    fresh = ChurnScorer(spark, scorer.model, scorer.threshold)
+    batches = [
+        [{c: float((i * 13 + j) % 97) for c in FEATURE_COLS[: 1 + i % 8]} for j in range(1 + i % 5)]
+        for i in range(80)
+    ]
+    serial = [scorer.predict(b) for b in batches]
+    n_clients = 8  # more clients than cores
+    results: dict[int, list] = {}
+    errors: list[Exception] = []
+
+    def client(k: int) -> None:
+        for i in range(k, len(batches), n_clients):
+            results[i] = fresh.predict(batches[i])
+        try:
+            fresh.predict([None])  # not a dict: one failed request per client
+        except AttributeError as e:
+            errors.append(e)
+
+    threads = [threading.Thread(target=client, args=(k,)) for k in range(n_clients)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # switch threads often, so lost updates would show
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert [results[i] for i in range(len(batches))] == serial
+    health = fresh.health()
+    assert len(errors) == n_clients
+    assert health["requests"] == len(batches) + n_clients
+    assert health["records"] == sum(len(b) for b in batches)
+    assert health["errors"] == n_clients
 
 
 # --- HTTP route layer (reference serve_api.py:177-221) --------------------
