@@ -9,6 +9,7 @@ from .pipeline import (
     coefficients_frame,
     compile_churn_model,
     evaluate_model,
+    fit_pipeline,
     score_frame,
     score_records,
     train_churn_model,
@@ -23,6 +24,7 @@ __all__ = [
     "coefficients_frame",
     "compile_churn_model",
     "evaluate_model",
+    "fit_pipeline",
     "score_frame",
     "score_records",
     "train_churn_model",

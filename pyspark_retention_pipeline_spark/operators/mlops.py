@@ -186,20 +186,12 @@ def quality_feature_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _train_quality(spark: SparkSession, sf_dir: str):
     """Session-cached quality-classifier fit — the ``_train`` convention
-    (one training per (session, sf_dir); stale-app eviction).
-
-    The pipeline object IS the M1–M5 builder's (Imputer → Assembler →
-    Scaler → weighted LR), but the fit is staged by hand with a
-    MATERIALIZED 3-column frame in front of the LR: ``Pipeline.fit`` runs
-    LBFGS's 80 treeAggregate jobs against the lazy featurization plan, and
-    at 256 hashed features the per-job whole-stage-codegen of that
-    256-column projection dominates — measured 315 s at sf0.001 vs ~25 s
-    staged (the churn tier's 8 columns never hit this cliff). Identical
-    math: Pipeline.fit is exactly this sequential stage loop, minus the
-    checkpoint."""
-    from pyspark.ml import PipelineModel
-
-    from ..ml import add_class_weight, build_churn_pipeline, cast_features
+    (one training per (session, sf_dir); stale-app eviction). The fit is
+    ``ml.fit_pipeline``, which materializes the LR input so the 256-column
+    featurization plan does not re-run per LBFGS job, and releases every
+    frame it caches. The one frame left cached is the session cache's
+    feature frame, which scoring reads."""
+    from ..ml import add_class_weight, cast_features, fit_pipeline
 
     app_id = spark.sparkContext.applicationId
     stale = [k for k in _QC_CACHE if k[0] != app_id]
@@ -208,20 +200,8 @@ def _train_quality(spark: SparkSession, sf_dir: str):
     key = (app_id, sf_dir)
     if key not in _QC_CACHE:
         features = quality_feature_frame(spark, sf_dir).cache()
-        prepared = add_class_weight(cast_features(features, _QC_FEATURE_COLS)).cache()
-        stages = build_churn_pipeline(_QC_FEATURE_COLS).getStages()
-        fitted = []
-        cur = prepared
-        for st in stages[:-1]:
-            if hasattr(st, "fit"):
-                st = st.fit(cur)
-            fitted.append(st)
-            cur = st.transform(cur)
-        lr_input = cur.select(
-            "features_scaled", "label", "class_weight"
-        ).localCheckpoint()  # eager: LBFGS iterates over materialized rows
-        lr_model = stages[-1].fit(lr_input)
-        _QC_CACHE[key] = (PipelineModel(fitted + [lr_model]), features)
+        prepared = add_class_weight(cast_features(features, _QC_FEATURE_COLS))
+        _QC_CACHE[key] = (fit_pipeline(prepared, _QC_FEATURE_COLS), features)
     return _QC_CACHE[key]
 
 

@@ -8,13 +8,17 @@ import pytest
 from pyspark_retention_pipeline_spark.ml import (
     FEATURE_COLS,
     add_class_weight,
+    build_churn_pipeline,
+    cast_features,
     coefficients_frame,
     compile_churn_model,
     evaluate_model,
+    fit_pipeline,
     score_frame,
     score_records,
     train_churn_model,
 )
+from pyspark_retention_pipeline_spark.ml.pipeline import fit_partitions, parse_byte_string
 from pyspark_retention_pipeline_spark.operators.retention import churn_feature_frame
 
 
@@ -71,6 +75,146 @@ def test_serving_coercion(model):
     for r in out:
         assert 0.0 <= r["p_churn"] <= 1.0
         assert r["prediction"] in (0.0, 1.0)
+
+
+def _prepared(features, cols=FEATURE_COLS):
+    return add_class_weight(cast_features(features, list(cols)))
+
+
+@pytest.mark.parametrize(
+    "text, expected",
+    [
+        ("134217728b", 134217728),
+        ("64k", 64 << 10),
+        ("128m", 128 << 20),
+        ("128MB", 128 << 20),
+        ("2g", 2 << 30),
+        ("1048576", 1048576),
+        (" 4 kb ", 4096),
+    ],
+)
+def test_parse_byte_string(text, expected):
+    assert parse_byte_string(text) == expected
+
+
+@pytest.mark.parametrize("text", ["", "m", "1.5g", "12 parsecs", "-1b", "4bb"])
+def test_parse_byte_string_rejects(text):
+    with pytest.raises(ValueError):
+        parse_byte_string(text)
+
+
+def test_fit_partitions_rule():
+    # rows × (features + label + weight) × 8 bytes per maxPartitionBytes
+    assert fit_partitions(539, 8, 128 << 20) == 1
+    assert fit_partitions(0, 8, 128 << 20) == 1
+    assert fit_partitions(150, 8, 4096) == 3  # 12000 bytes
+    assert fit_partitions(100, 3, 4000) == 1  # exactly one partition's bytes
+    assert fit_partitions(100, 3, 3999) == 2
+
+
+def test_fit_pipeline_matches_pipeline_fit(features):
+    """The staged, sized fit is ``Pipeline.fit``'s math: only the summation
+    order over partitions differs."""
+    import numpy as np
+
+    staged = fit_pipeline(_prepared(features), FEATURE_COLS)
+    prepared = _prepared(features).cache()
+    try:
+        plain = build_churn_pipeline(FEATURE_COLS).fit(prepared)
+    finally:
+        prepared.unpersist()
+    a, b = staged.stages[-1], plain.stages[-1]
+    assert a.summary.totalIterations == b.summary.totalIterations
+    assert np.max(np.abs(a.coefficients.toArray() - b.coefficients.toArray())) <= 1e-8
+    assert abs(a.intercept - b.intercept) <= 1e-8
+    auc_a = evaluate_model(staged, features)["areaUnderROC"]
+    auc_b = evaluate_model(plain, features)["areaUnderROC"]
+    assert abs(auc_a - auc_b) <= 1e-9
+
+
+@pytest.mark.parametrize("source", ["churn", "quality"])
+def test_fit_pipeline_releases_its_caches(spark, sf_dir, features, source):
+    """``fit_pipeline`` caches the sized input and the LR input and releases
+    both, on the 8-feature churn frame and on the 256-feature quality frame.
+    The check is "nothing added": Spark's ContextCleaner may meanwhile drop
+    a localCheckpoint RDD the quality frame's construction left unreferenced."""
+    from pyspark_retention_pipeline_spark.operators import mlops
+
+    sc = spark.sparkContext
+    if source == "churn":
+        frame, cols = features, FEATURE_COLS
+    else:
+        frame = mlops.quality_feature_frame(spark, sf_dir).cache()
+        cols = [f"f{b}" for b in range(mlops.QC_BUCKETS)]
+    frame.count()
+    try:
+        persisted = set(sc._jsc.getPersistentRDDs().keySet())
+        model = fit_pipeline(_prepared(frame, cols), cols)
+        assert set(sc._jsc.getPersistentRDDs().keySet()) <= persisted
+        assert len(model.stages[-1].coefficients) == len(cols)
+    finally:
+        if source == "quality":
+            frame.unpersist()
+
+
+def _stages_run(spark, fn) -> list[list]:
+    """Run ``fn`` under a fresh job group; for each of its jobs in order, the
+    status-tracker infos of the stages that ran (skipped stages excluded)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"ml-test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "ml test")
+    fn()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    out = []
+    for job in sorted(tracker.getJobIdsForGroup(group)):
+        infos = [tracker.getStageInfo(s) for s in tracker.getJobInfo(job).stageIds]
+        out.append([i for i in infos if i is not None and i.numCompletedTasks > 0])
+    return out
+
+
+def test_fit_pipeline_runs_one_task_per_stage(spark, features):
+    """At the default ``spark.sql.files.maxPartitionBytes`` the fixture (8
+    partitions) fits in one partition: every stage after the cache-and-count
+    jobs runs a single task, LBFGS iterations included."""
+    assert features.rdd.getNumPartitions() > 1
+
+    def count_once():
+        cached = _prepared(features).cache()
+        cached.count()
+        cached.unpersist()
+
+    n_count_jobs = len(_stages_run(spark, count_once))
+    jobs = _stages_run(spark, lambda: fit_pipeline(_prepared(features), FEATURE_COLS))
+    assert any(s.numTasks > 1 for job in jobs[:n_count_jobs] for s in job)
+    after = [s for job in jobs[n_count_jobs:] for s in job]
+    assert len(after) >= 10  # Imputer, scaler, LR summary and the LBFGS iterations
+    assert {s.numTasks for s in after} == {1}
+
+
+def test_fit_pipeline_sizes_lr_input_to_max_partition_bytes(spark, features):
+    """With a small ``spark.sql.files.maxPartitionBytes`` the scaler and LR
+    passes read the computed k > 1 partitions: the first stage of every
+    ``treeAggregate`` job runs k tasks (its final-aggregate stage runs one)."""
+    key = "spark.sql.files.maxPartitionBytes"
+    rows = features.count()
+    original = spark.conf.get(key)
+    spark.conf.set(key, "4k")
+    try:
+        k = fit_partitions(rows, len(FEATURE_COLS), parse_byte_string(spark.conf.get(key)))
+        assert 1 < k < features.rdd.getNumPartitions()
+        jobs = _stages_run(spark, lambda: fit_pipeline(_prepared(features), FEATURE_COLS))
+    finally:
+        spark.conf.set(key, original)
+    passes = [
+        min(job, key=lambda s: s.stageId)
+        for job in jobs
+        if any(s.name.startswith("treeAggregate") for s in job)
+    ]
+    assert len(passes) >= 10
+    assert {s.numTasks for s in passes} == {k}
 
 
 def test_golden_auc_and_threshold_on_reference_shaped_split(spark):
