@@ -22,20 +22,19 @@ few serving payloads on the driver with numpy, from the stages read once by
 from __future__ import annotations
 
 import math
-import re
 from collections.abc import Iterator
 from contextlib import contextmanager
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.ml import Estimator, Pipeline, PipelineModel
+from pyspark.ml import Pipeline, PipelineModel
 from pyspark.ml.classification import LogisticRegression
 from pyspark.ml.evaluation import BinaryClassificationEvaluator
 from pyspark.ml.feature import Imputer, StandardScaler, VectorAssembler
 from pyspark.ml.functions import vector_to_array
 from pyspark.ml.linalg import SparseVector
 from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -117,47 +116,54 @@ def _prepare(features: DataFrame, feature_cols: list[str]) -> DataFrame:
     return add_class_weight(cast_features(features, feature_cols))
 
 
-_BYTE_UNITS = {"b": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40, "p": 1 << 50}
-
-
-def parse_byte_string(text: str) -> int:
-    """Bytes in a Spark byte-size string: ``134217728b``, ``128m``, ``128mb``,
-    ``1g`` or a bare ``134217728`` (read as bytes, as Spark reads
-    ``spark.sql.files.maxPartitionBytes``). Binary units, case-insensitive."""
-    m = re.fullmatch(r"\s*(\d+)\s*(b|[kmgtp]b?)?\s*", text.lower())
-    if m is None:
-        raise ValueError(f"not a byte-size string: {text!r}")
-    return int(m.group(1)) * _BYTE_UNITS[(m.group(2) or "b")[0]]
-
-
-def fit_partitions(rows: int, n_features: int, max_partition_bytes: int) -> int:
+def fit_partitions(rows: int, n_features: int, task_bytes: int) -> int:
     """Partitions for a fit over ``rows`` rows of ``n_features`` doubles plus
-    label and weight: one per ``max_partition_bytes`` of those 8-byte values,
-    at least one."""
-    return max(1, math.ceil(rows * (n_features + 2) * 8 / max_partition_bytes))
+    label and weight: one per ``task_bytes`` of those 8-byte values, at least
+    one."""
+    return max(1, math.ceil(rows * (n_features + 2) * 8 / task_bytes))
 
 
 @contextmanager
 def _sized(frame: DataFrame, n_features: int) -> Iterator[DataFrame]:
     """``frame`` cached, counted, and coalesced to :func:`fit_partitions`
-    partitions under Spark's own ``spark.sql.files.maxPartitionBytes``; the
-    cache is released on exit.
+    partitions of Spark's own ``spark.sql.files.openCostInBytes`` (4 MB by
+    default: the bytes Spark reckons a task scans in the time a fixed
+    per-file cost takes); the cache is released on exit.
 
     An iterative fit pays a task launch per partition per job, and LBFGS runs
     a job per iteration, so a few hundred rows spread over one partition per
-    input file cost more in scheduling than in compute. The count comes
-    before the coalesce: coalescing the lazy plan would fold its upstream
-    work into the few coalesced tasks. Coalescing only merges: a frame
-    already at k partitions or fewer keeps its own."""
+    input file cost more in scheduling than in compute. A partition is kept
+    only when it carries at least that fixed cost's worth of bytes: on a
+    4-core host one task beat four up to ~100k churn rows (8 MB) and lost
+    beyond (docs/SCALE.md). The count comes before the coalesce: coalescing
+    the lazy plan would fold its upstream work into the few coalesced
+    tasks. Coalescing only merges: a frame already at k partitions or fewer
+    keeps its own."""
     cached = frame.cache()
     try:
         rows = cached.count()
-        limit = parse_byte_string(
-            frame.sparkSession.conf.get("spark.sql.files.maxPartitionBytes")
-        )
-        yield cached.coalesce(fit_partitions(rows, n_features, limit))
+        conf = frame.sparkSession._jsparkSession.sessionState().conf()
+        yield cached.coalesce(fit_partitions(rows, n_features, conf.filesOpenCostInBytes()))
     finally:
         cached.unpersist()
+
+
+@contextmanager
+def _checkpointed(frame: DataFrame) -> Iterator[DataFrame]:
+    """``frame`` materialized by an eager ``localCheckpoint``, whose RDD is
+    unpersisted on exit.
+
+    LBFGS reads its input once per iteration, and a checkpoint's rows read
+    faster than a cached frame's columnar batches: on a 4-core host the
+    quality classifier fitted in 5.5 s against 8.5 s cached (256-wide
+    vectors), the churn model in 1.7 s against 2.1 s. Spark drops a local
+    checkpoint only when its RDD is garbage-collected, so the RDD is taken
+    from the checkpoint's plan, a ``LogicalRDD``, and released here."""
+    checkpointed = frame.localCheckpoint()
+    try:
+        yield checkpointed
+    finally:
+        checkpointed._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def fit_pipeline(prepared: DataFrame, cols: list[str]) -> PipelineModel:
@@ -167,31 +173,24 @@ def fit_pipeline(prepared: DataFrame, cols: list[str]) -> PipelineModel:
     ``LogisticRegression``.
 
     The frame is materialized and sized (:func:`_sized`), the Imputer and
-    StandardScaler are fitted stage by stage on it, and the LR fits on a
-    cached 3-column frame (``features_scaled``, ``label``,
-    ``class_weight``), so LBFGS's job per iteration reads materialized rows
-    instead of re-running the featurization plan. At the quality
+    StandardScaler are fitted on it, and the LR fits on a checkpointed
+    3-column frame (``features_scaled``, ``label``, ``class_weight``;
+    :func:`_checkpointed`), so LBFGS's job per iteration reads materialized
+    rows instead of re-running the featurization plan. At the quality
     classifier's 256 hashed features the per-job codegen of that plan
     dominated: 315 s at sf0.001 through ``Pipeline.fit`` against ~25 s
     staged over a materialized LR input. The math is ``Pipeline.fit``'s;
     only the summation order over partitions can differ (|Δcoef| ≤ 1e-8).
     ``prepared`` is cached for the fit and uncached after it, so pass a
-    frame the caller has not cached itself; nothing cached here outlives
+    frame the caller has not cached itself; nothing persisted here outlives
     the call."""
     stages = build_churn_pipeline(cols).getStages()
-    fitted = []
-    with _sized(prepared, len(cols)) as cur:
-        for stage in stages[:-1]:
-            if isinstance(stage, Estimator):
-                stage = stage.fit(cur)
-            fitted.append(stage)
-            cur = stage.transform(cur)
-        lr_input = cur.select("features_scaled", "label", "class_weight").cache()
-        try:
-            fitted.append(stages[-1].fit(lr_input))
-        finally:
-            lr_input.unpersist()
-    return PipelineModel(fitted)
+    with _sized(prepared, len(cols)) as sized:
+        prefix = Pipeline(stages=stages[:-1]).fit(sized)
+        lr_input = prefix.transform(sized).select("features_scaled", "label", "class_weight")
+        with _checkpointed(lr_input) as rows:
+            lr = stages[-1].fit(rows)
+    return PipelineModel(prefix.stages + [lr])
 
 
 # Reference CV search space (``pipeline/train.py:160-172``): 3-fold CV over
@@ -199,6 +198,15 @@ def fit_pipeline(prepared: DataFrame, cols: list[str]) -> PipelineModel:
 CV_REG_PARAMS = [0.0, 0.01, 0.1]
 CV_ELASTIC_PARAMS = [0.0, 0.5, 1.0]
 CV_NUM_FOLDS = 3
+
+
+def _cv_fold(seed: int, n_folds: int) -> Column:
+    """The fold CrossValidator's own seeded split draws for a row: validation
+    fold i holds the rows whose ``rand(seed)`` lies in [i·h, (i+1)·h), h = 1/n
+    (``pyspark.ml.tuning.CrossValidator._kFold``, same bounds arithmetic)."""
+    r = F.rand(seed)
+    h = 1.0 / n_folds
+    return sum((r >= i * h).cast("int") for i in range(1, n_folds))
 
 
 def train_churn_model(
@@ -235,15 +243,20 @@ def train_churn_model(
     evaluator = BinaryClassificationEvaluator(
         labelCol="label", rawPredictionCol="rawPrediction", metricName=metric_name
     )
+    n_folds = cv_num_folds or CV_NUM_FOLDS
     cv = CrossValidator(
         estimator=estimator,
         estimatorParamMaps=grid,
         evaluator=evaluator,
-        numFolds=cv_num_folds or CV_NUM_FOLDS,
+        numFolds=n_folds,
         parallelism=4,
-        seed=seed,
+        foldCol="cv_fold",
     )
-    with _sized(prepared, len(cols)) as sized:
+    # The folds are drawn on ``prepared`` before sizing: rand's stream depends
+    # on the partition, so drawing them after the coalesce would move rows
+    # between folds and could change the selected model.
+    folded = prepared.withColumn("cv_fold", _cv_fold(seed, n_folds))
+    with _sized(folded, len(cols)) as sized:
         return cv.fit(sized).bestModel
 
 

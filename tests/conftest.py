@@ -41,3 +41,27 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+
+@pytest.fixture
+def persistent_rdds(spark):
+    """A callable returning ``(ids, cached)``: the ids of the RDDs persisted
+    now, and those of them that are not local checkpoints.
+
+    A leak check around some code asserts that the ids afterwards are a
+    subset of ``ids`` (nothing it persisted is left behind) and a superset
+    of ``cached`` (it released no cache it did not make). The two sets
+    differ because operators' ``localCheckpoint`` RDDs stay persisted after
+    the frames that read them are gone, until Spark's ContextCleaner drops
+    them at some later JVM GC, which may come while the checked code runs;
+    a cached frame is held by the CacheManager and goes only by an
+    unpersist."""
+    sc = spark.sparkContext
+
+    def snapshot() -> tuple[set[int], set[int]]:
+        rdds = sc._jsc.getPersistentRDDs()
+        ids = set(rdds.keySet())
+        return ids, {i for i in ids if not rdds.get(i).rdd().isLocallyCheckpointed()}
+
+    return snapshot

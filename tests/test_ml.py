@@ -18,13 +18,15 @@ from pyspark_retention_pipeline_spark.ml import (
     score_records,
     train_churn_model,
 )
-from pyspark_retention_pipeline_spark.ml.pipeline import fit_partitions, parse_byte_string
+from pyspark_retention_pipeline_spark.ml.pipeline import fit_partitions
 from pyspark_retention_pipeline_spark.operators.retention import churn_feature_frame
 
 
 @pytest.fixture(scope="module")
 def features(spark, sf_dir):
-    return churn_feature_frame(spark, sf_dir).cache()
+    frame = churn_feature_frame(spark, sf_dir).cache()
+    yield frame
+    frame.unpersist()
 
 
 @pytest.fixture(scope="module")
@@ -81,30 +83,8 @@ def _prepared(features, cols=FEATURE_COLS):
     return add_class_weight(cast_features(features, list(cols)))
 
 
-@pytest.mark.parametrize(
-    "text, expected",
-    [
-        ("134217728b", 134217728),
-        ("64k", 64 << 10),
-        ("128m", 128 << 20),
-        ("128MB", 128 << 20),
-        ("2g", 2 << 30),
-        ("1048576", 1048576),
-        (" 4 kb ", 4096),
-    ],
-)
-def test_parse_byte_string(text, expected):
-    assert parse_byte_string(text) == expected
-
-
-@pytest.mark.parametrize("text", ["", "m", "1.5g", "12 parsecs", "-1b", "4bb"])
-def test_parse_byte_string_rejects(text):
-    with pytest.raises(ValueError):
-        parse_byte_string(text)
-
-
 def test_fit_partitions_rule():
-    # rows × (features + label + weight) × 8 bytes per maxPartitionBytes
+    # rows × (features + label + weight) × 8 bytes per task_bytes
     assert fit_partitions(539, 8, 128 << 20) == 1
     assert fit_partitions(0, 8, 128 << 20) == 1
     assert fit_partitions(150, 8, 4096) == 3  # 12000 bytes
@@ -133,14 +113,11 @@ def test_fit_pipeline_matches_pipeline_fit(features):
 
 
 @pytest.mark.parametrize("source", ["churn", "quality"])
-def test_fit_pipeline_releases_its_caches(spark, sf_dir, features, source):
+def test_fit_pipeline_releases_its_caches(spark, sf_dir, features, persistent_rdds, source):
     """``fit_pipeline`` caches the sized input and the LR input and releases
-    both, on the 8-feature churn frame and on the 256-feature quality frame.
-    The check is "nothing added": Spark's ContextCleaner may meanwhile drop
-    a localCheckpoint RDD the quality frame's construction left unreferenced."""
+    both, on the 8-feature churn frame and on the 256-feature quality frame."""
     from pyspark_retention_pipeline_spark.operators import mlops
 
-    sc = spark.sparkContext
     if source == "churn":
         frame, cols = features, FEATURE_COLS
     else:
@@ -148,9 +125,11 @@ def test_fit_pipeline_releases_its_caches(spark, sf_dir, features, source):
         cols = [f"f{b}" for b in range(mlops.QC_BUCKETS)]
     frame.count()
     try:
-        persisted = set(sc._jsc.getPersistentRDDs().keySet())
+        persisted, cached = persistent_rdds()
         model = fit_pipeline(_prepared(frame, cols), cols)
-        assert set(sc._jsc.getPersistentRDDs().keySet()) <= persisted
+        after, _ = persistent_rdds()
+        assert after <= persisted
+        assert cached <= after
         assert len(model.stages[-1].coefficients) == len(cols)
     finally:
         if source == "quality":
@@ -176,7 +155,7 @@ def _stages_run(spark, fn) -> list[list]:
 
 
 def test_fit_pipeline_runs_one_task_per_stage(spark, features):
-    """At the default ``spark.sql.files.maxPartitionBytes`` the fixture (8
+    """At the default ``spark.sql.files.openCostInBytes`` the fixture (8
     partitions) fits in one partition: every stage after the cache-and-count
     jobs runs a single task, LBFGS iterations included."""
     assert features.rdd.getNumPartitions() > 1
@@ -194,16 +173,16 @@ def test_fit_pipeline_runs_one_task_per_stage(spark, features):
     assert {s.numTasks for s in after} == {1}
 
 
-def test_fit_pipeline_sizes_lr_input_to_max_partition_bytes(spark, features):
-    """With a small ``spark.sql.files.maxPartitionBytes`` the scaler and LR
+def test_fit_pipeline_sizes_lr_input_to_open_cost_in_bytes(spark, features):
+    """With a small ``spark.sql.files.openCostInBytes`` the scaler and LR
     passes read the computed k > 1 partitions: the first stage of every
     ``treeAggregate`` job runs k tasks (its final-aggregate stage runs one)."""
-    key = "spark.sql.files.maxPartitionBytes"
+    key = "spark.sql.files.openCostInBytes"
     rows = features.count()
     original = spark.conf.get(key)
     spark.conf.set(key, "4k")
     try:
-        k = fit_partitions(rows, len(FEATURE_COLS), parse_byte_string(spark.conf.get(key)))
+        k = fit_partitions(rows, len(FEATURE_COLS), 4 << 10)  # Spark reads "4k" as 4096
         assert 1 < k < features.rdd.getNumPartitions()
         jobs = _stages_run(spark, lambda: fit_pipeline(_prepared(features), FEATURE_COLS))
     finally:
@@ -215,6 +194,30 @@ def test_fit_pipeline_sizes_lr_input_to_max_partition_bytes(spark, features):
     ]
     assert len(passes) >= 10
     assert {s.numTasks for s in passes} == {k}
+
+
+def test_cv_folds_are_crossvalidators_own_split(features):
+    """The CV path draws its folds before sizing, and they are the rows
+    CrossValidator's seeded split puts in each validation fold of the
+    unsized frame: the coalesce cannot move a row to another fold."""
+    from pyspark.ml.tuning import CrossValidator
+    from pyspark.sql import functions as F
+
+    from pyspark_retention_pipeline_spark.ml.pipeline import _cv_fold, _sized
+
+    def keys(frame):
+        return {r.custkey for r in frame.select("custkey").collect()}
+
+    prepared = _prepared(features)
+    for seed, n_folds in ((42, 3), (7, 2)):
+        split = CrossValidator(numFolds=n_folds, seed=seed)._kFold(prepared)
+        own = [keys(validation) for _, validation in split]
+        folded = prepared.withColumn("cv_fold", _cv_fold(seed, n_folds))
+        with _sized(folded, len(FEATURE_COLS)) as sized:
+            assert sized.rdd.getNumPartitions() < prepared.rdd.getNumPartitions()
+            drawn = [keys(sized.filter(F.col("cv_fold") == i)) for i in range(n_folds)]
+        assert drawn == own
+        assert all(own)
 
 
 def test_golden_auc_and_threshold_on_reference_shaped_split(spark):

@@ -13,12 +13,13 @@ from pyspark_retention_pipeline_spark.ml.workflow import (
 )
 
 
-def test_full_lifecycle(spark, sf_dir, tmp_path):
+def test_full_lifecycle(spark, sf_dir, tmp_path, persistent_rdds):
     out = str(tmp_path / "artifacts")
-    # Every frame the lifecycle caches is released by the step that cached it.
-    # Compared as id sets, not counts: Spark's ContextCleaner may drop RDDs
-    # that earlier tests persisted and no longer reference while this runs.
-    persisted_before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    # Every frame the lifecycle caches is released by the step that cached
+    # it, and it releases no cache it did not make (see ``persistent_rdds``).
+    held = spark.range(3).cache()  # a cache the lifecycle must not release
+    held.count()
+    persisted_before, cached_before = persistent_rdds()
 
     counts = run_feature_etl(spark, sf_dir, out)
     assert set(counts) == {"train", "val", "test"}
@@ -73,7 +74,10 @@ def test_full_lifecycle(spark, sf_dir, tmp_path):
         img = decode_png(open(paths[key], "rb").read())
         assert img.shape == (500, 700, 3)
 
-    assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) <= persisted_before
+    persisted_after, _ = persistent_rdds()
+    assert persisted_after <= persisted_before
+    assert cached_before <= persisted_after
+    held.unpersist()
 
 
 def test_split_determinism(spark, sf_dir, tmp_path):
