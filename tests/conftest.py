@@ -43,7 +43,6 @@ def sf_dir() -> str:
     return SF_DIR
 
 
-
 @pytest.fixture
 def persistent_rdds(spark):
     """A callable returning ``(ids, cached)``: the ids of the RDDs persisted

@@ -85,8 +85,9 @@ def _prepared(features, cols=FEATURE_COLS):
 
 def test_fit_partitions_rule():
     # rows × (features + label + weight) × 8 bytes per task_bytes
-    assert fit_partitions(539, 8, 128 << 20) == 1
-    assert fit_partitions(0, 8, 128 << 20) == 1
+    assert fit_partitions(539, 8, 4 << 20) == 1
+    assert fit_partitions(0, 8, 4 << 20) == 1
+    assert fit_partitions(100_000, 8, 4 << 20) == 2  # 8 MB
     assert fit_partitions(150, 8, 4096) == 3  # 12000 bytes
     assert fit_partitions(100, 3, 4000) == 1  # exactly one partition's bytes
     assert fit_partitions(100, 3, 3999) == 2
@@ -114,8 +115,9 @@ def test_fit_pipeline_matches_pipeline_fit(features):
 
 @pytest.mark.parametrize("source", ["churn", "quality"])
 def test_fit_pipeline_releases_its_caches(spark, sf_dir, features, persistent_rdds, source):
-    """``fit_pipeline`` caches the sized input and the LR input and releases
-    both, on the 8-feature churn frame and on the 256-feature quality frame."""
+    """``fit_pipeline`` caches the sized input and checkpoints the LR input,
+    and releases both, on the 8-feature churn frame and on the 256-feature
+    quality frame."""
     from pyspark_retention_pipeline_spark.operators import mlops
 
     if source == "churn":
