@@ -112,10 +112,6 @@ def cast_features(frame: DataFrame, cols: list[str]) -> DataFrame:
     )
 
 
-def _prepare(features: DataFrame, feature_cols: list[str]) -> DataFrame:
-    return add_class_weight(cast_features(features, feature_cols))
-
-
 def fit_partitions(rows: int, n_features: int, task_bytes: int) -> int:
     """Partitions for a fit over ``rows`` rows of ``n_features`` doubles plus
     label and weight: one per ``task_bytes`` of those 8-byte values, at least
@@ -228,7 +224,7 @@ def train_churn_model(
     reference CLI's ``--metric aucroc|aucpr`` choice (``train.py:141,167``),
     default aucpr as there."""
     cols = list(feature_cols or FEATURE_COLS)
-    prepared = _prepare(features, cols)
+    prepared = add_class_weight(cast_features(features, cols))
     if not cross_validate:
         return fit_pipeline(prepared, cols)
     estimator = build_churn_pipeline(cols)
@@ -275,8 +271,10 @@ def score_frame(
 
 
 def evaluate_model(model: PipelineModel, features: DataFrame) -> dict[str, float]:
-    """AUC-ROC / AUC-PR on a labeled split (reference ``eval.py:58-61``)."""
-    scored = model.transform(_prepare(features, FEATURE_COLS)).cache()
+    """AUC-ROC / AUC-PR on a labeled split (reference ``eval.py:58-61``).
+    Neither evaluator reads ``class_weight``, so the split is scored cast
+    but unweighted, as :func:`score_frame` scores it."""
+    scored = model.transform(cast_features(features, FEATURE_COLS)).cache()
     out = {}
     try:
         for metric in ("areaUnderROC", "areaUnderPR"):

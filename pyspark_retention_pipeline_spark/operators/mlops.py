@@ -17,34 +17,40 @@ from ..tables import load_table
 from .retention import churn_feature_frame
 
 
-# One training per (session, sf_dir): the four ML queries share the fitted
+# One training per (session, sf_dir): the ML queries share the fitted
 # model instead of re-training per query (matters for the driver's
-# correctness sweep, which calls each query independently). Keyed by the
-# session's applicationId — stable for a session's lifetime and never reused
-# by a successor session, unlike id(spark), which a new SparkSession object
-# can legitimately land on after the old one is garbage-collected and would
-# then be served DataFrames bound to a dead SparkContext (round-1 advisor
-# finding).
+# correctness sweep, which calls each query independently).
 _MODEL_CACHE: dict[tuple[str, str], tuple] = {}
+
+
+def _session_cached(cache: dict, spark: SparkSession, sf_dir: str, build):
+    """``cache[(applicationId, sf_dir)]``, filled by ``build()`` on a miss.
+
+    The applicationId is stable for a session's lifetime and never reused
+    by a successor session, unlike id(spark), which a new SparkSession
+    object can land on after the old one is garbage-collected and would
+    then be served DataFrames bound to a dead SparkContext. Entries of
+    other applications are evicted: a long-lived process that creates
+    successive sessions would otherwise keep models and cached DataFrames
+    bound to stopped contexts, and only the current session's entries can
+    ever be served."""
+    app_id = spark.sparkContext.applicationId
+    for k in [k for k in cache if k[0] != app_id]:
+        del cache[k]
+    key = (app_id, sf_dir)
+    if key not in cache:
+        cache[key] = build()
+    return cache[key]
 
 
 def _train(spark: SparkSession, sf_dir: str):
     from ..ml import train_churn_model
 
-    app_id = spark.sparkContext.applicationId
-    # Evict entries from other applications: a long-lived process that
-    # creates successive SparkSessions would otherwise accumulate models and
-    # cached DataFrames bound to stopped contexts indefinitely (round-2
-    # advisor finding). Only the current session's entries can ever be
-    # served, so dropping the rest loses nothing.
-    stale = [k for k in _MODEL_CACHE if k[0] != app_id]
-    for k in stale:
-        del _MODEL_CACHE[k]
-    key = (app_id, sf_dir)
-    if key not in _MODEL_CACHE:
+    def build():
         features = churn_feature_frame(spark, sf_dir).cache()
-        _MODEL_CACHE[key] = (train_churn_model(features), features)
-    return _MODEL_CACHE[key]
+        return train_churn_model(features), features
+
+    return _session_cached(_MODEL_CACHE, spark, sf_dir, build)
 
 
 @query("ml_churn_scores", tags=("M11", "ml"))
@@ -185,24 +191,19 @@ def quality_feature_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _train_quality(spark: SparkSession, sf_dir: str):
-    """Session-cached quality-classifier fit — the ``_train`` convention
-    (one training per (session, sf_dir); stale-app eviction). The fit is
+    """Session-cached quality-classifier fit, like ``_train``. The fit is
     ``ml.fit_pipeline``, which materializes the LR input so the 256-column
     featurization plan does not re-run per LBFGS job, and releases every
     frame it caches. The one frame left cached is the session cache's
     feature frame, which scoring reads."""
     from ..ml import add_class_weight, cast_features, fit_pipeline
 
-    app_id = spark.sparkContext.applicationId
-    stale = [k for k in _QC_CACHE if k[0] != app_id]
-    for k in stale:
-        del _QC_CACHE[k]
-    key = (app_id, sf_dir)
-    if key not in _QC_CACHE:
+    def build():
         features = quality_feature_frame(spark, sf_dir).cache()
         prepared = add_class_weight(cast_features(features, _QC_FEATURE_COLS))
-        _QC_CACHE[key] = (fit_pipeline(prepared, _QC_FEATURE_COLS), features)
-    return _QC_CACHE[key]
+        return fit_pipeline(prepared, _QC_FEATURE_COLS), features
+
+    return _session_cached(_QC_CACHE, spark, sf_dir, build)
 
 
 @query("quality_classifier_scores", tags=("ml", "text-quality", "fasttext-shape"))

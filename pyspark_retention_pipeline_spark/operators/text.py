@@ -1773,123 +1773,6 @@ def simhash_jaccard_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _myers_edit_distance(a: str, b: str) -> int:
-    """Exact unit-cost Levenshtein distance via Myers' bit-parallel DP
-    (Myers 1999, J. ACM 46(3); Hyyrö 2001's scoring formulation) — the
-    SAME value as Spark's ``levenshtein`` and the oracle's, computed in
-    O(⌈m/w⌉·n) word operations instead of O(m·n) cell updates. Python's
-    arbitrary-precision ints make the pattern bitmask one "word" at any
-    length, so no outer block loop is needed. Code-point semantics match
-    Spark exactly: both iterate unicode code points (Python ``str``), so
-    the swap is value-identical on any input, not just ASCII.
-
-    Measured at sf0.1 (30 912 candidate pairs, 6.08e9 DP cells): the JVM
-    ``levenshtein`` costs ~74 core-seconds (~12 ns/cell); this fold costs
-    ~17 core-seconds single-core pure Python — the 64-bit parallelism
-    out-runs the interpreter overhead ~4× (guide §4.2's "do the heavy
-    lifting with a better algorithm at the Arrow boundary", with the
-    per-pair loop as the vectorized unit)."""
-    if a == b:
-        return 0
-    if len(a) > len(b):
-        a, b = b, a  # pattern = shorter side: fewer mask bits per step
-    m = len(a)
-    if m == 0:
-        return len(b)
-    peq: dict[str, int] = {}
-    for i, ch in enumerate(a):
-        peq[ch] = peq.get(ch, 0) | (1 << i)
-    mask = (1 << m) - 1
-    hibit = 1 << (m - 1)
-    vp, vn, score = mask, 0, m
-    get = peq.get
-    for ch in b:
-        eq = get(ch, 0)
-        d0 = (((eq & vp) + vp) ^ vp) | eq | vn
-        hp = vn | ~(d0 | vp)
-        hn = d0 & vp
-        if hp & hibit:
-            score += 1
-        elif hn & hibit:
-            score -= 1
-        hp = ((hp << 1) | 1) & mask
-        hn = (hn << 1) & mask
-        vp = hn | (~(d0 | hp) & mask)
-        vn = d0 & hp
-    return score
-
-
-# Pairs whose shorter side exceeds this go straight to the pure-Python
-# path: the C kernel's Peq table grows with the square of the longest
-# pattern in a batch (tsize ~ 2m slots x m/64 words x 8 bytes ≈ m^2/4
-# bytes), so one ~100k-char pair would force a multi-GB malloc per worker
-# where the big-int fold just runs slower. 16384 bounds the table at
-# ~64 MiB per worker.
-_NATIVE_MAX_PATTERN = 16384
-
-
-def _lev_batch_resilient(a_strs, b_strs):
-    """Batch edit distances with the native kernel where safe, pure Python
-    otherwise — the in-worker body of :func:`_myers_lev_column`, module-level
-    so the fallback contract is unit-testable. Never raises out of the
-    native path: kernel absence, allocation failure, or un-encodable input
-    (lone surrogates) all land on the pure-Python per-pair loop, keeping
-    lev_native's 'strict improvement by construction' contract."""
-    from .lev_native import lev_batch
-
-    f = _myers_edit_distance
-    res = [None] * len(a_strs)
-    native_idx, xs, ys = [], [], []
-    for i, (x, y) in enumerate(zip(a_strs, b_strs)):
-        if x is None or y is None:
-            continue
-        if min(len(x), len(y)) > _NATIVE_MAX_PATTERN:
-            res[i] = f(x, y)
-        else:
-            native_idx.append(i)
-            xs.append(x)
-            ys.append(y)
-    if xs:
-        try:
-            ds = lev_batch(xs, ys)
-        except Exception:
-            ds = None
-        if ds is None:  # no kernel on this host, or native path failed
-            ds = [f(x, y) for x, y in zip(xs, ys)]
-        for i, d in zip(native_idx, ds):
-            res[i] = d
-    return res
-
-
-def _myers_lev_column(ta: F.Column, tb: F.Column) -> F.Column:
-    """Arrow-batched column form of :func:`_myers_edit_distance` — one of
-    the engine's sanctioned Python boundaries (the ``multimodal.py`` /
-    BLAS-kNN class): batch-serialized via Arrow (never pickled rows), fed
-    exactly the two text columns it needs, output a plain BIGINT. Callers
-    bind the result to ONE column and derive everything else from that
-    column, so the UDF cannot be duplicated by the optimizer (guide §4.4).
-
-    Inside the boundary the batch goes to the native Myers kernel
-    (:mod:`.lev_native` — same recurrence compiled to C, self-checked at
-    load, measured ~5× on the pinned DP stage at sf0.1); the kernel is
-    compiled ON THE DRIVER here and shipped via ``addFile`` so executors
-    never invoke a compiler, and any native-path failure falls back to the
-    pure-Python big-int fold (:func:`_lev_batch_resilient`), value barrier
-    unchanged."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    from .lev_native import ensure_kernel_shipped
-
-    ensure_kernel_shipped()  # driver-side compile + addFile; non-fatal
-
-    @pandas_udf("long")
-    def lev(a, b):
-        return pd.Series(_lev_batch_resilient(list(a), list(b)), dtype="Int64")
-
-    return lev(ta, tb)
-
-
 @query(
     "neardup_edit_verify",
     oracle=f"""
@@ -1965,13 +1848,9 @@ def neardup_edit_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exchange of the reduced pair set, never the corpus.
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     j = j.repartition(n_parts)
-    # Round-15 optimization (guide §4.2): the exact DP moved from the JVM
-    # levenshtein expression (~12 ns/cell; 2.33 s wall for the 6.08e9-cell
-    # pair set at sf0.1/32) to the Myers bit-parallel Arrow boundary
-    # (~4× fewer core-seconds, measured 3.06 → ~1.9 s query wall). The
-    # distance is bound to ONE column and edit_sim derives from it, so the
-    # plan carries exactly one ArrowEvalPython evaluation.
-    j = j.withColumn("edit_dist", _myers_lev_column(F.col("ta"), F.col("tb")))
+    # The distance is bound to ONE column and edit_sim derives from it, so
+    # the plan evaluates levenshtein once per pair.
+    j = j.withColumn("edit_dist", F.levenshtein("ta", "tb").cast("long"))
     maxlen = F.greatest(F.length("ta"), F.length("tb")).cast("long")
     sim_u = F.round(
         (maxlen - F.col("edit_dist")) * F.lit(1_000_000.0) / maxlen

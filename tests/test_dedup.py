@@ -19,6 +19,17 @@ def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+def _classic_lev(a: str, b: str) -> int:
+    """Unit-cost Levenshtein distance by the classic O(m·n) DP."""
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
+        prev = cur
+    return prev[-1]
+
+
 def test_identical_docs_share_signature(spark):
     text = "the quick brown fox jumps over the lazy dog again and again"
     docs = _docs(spark, [(1, text), (2, text), (3, "completely different words here now")])
@@ -292,20 +303,9 @@ def test_prefix_edit_distance_pairs_nonempty_and_correct(spark, sf_dir):
         .collect()
     }
 
-    def lev(a: str, b: str) -> int:
-        prev = list(range(len(b) + 1))
-        for i, ca in enumerate(a, 1):
-            cur = [i]
-            for j, cb in enumerate(b, 1):
-                cur.append(
-                    min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb))
-                )
-            prev = cur
-        return prev[-1]
-
     for r in rows[:25]:
         assert r.d1 < r.d2
-        assert r.edit_dist == lev(pfx[r.d1], pfx[r.d2])
+        assert r.edit_dist == _classic_lev(pfx[r.d1], pfx[r.d2])
         assert r.edit_dist <= EDIT_MAX
 
 
@@ -628,237 +628,53 @@ def test_neardup_edit_verify_planted(spark, monkeypatch):
     assert not any(9 in p or 4 in p for p in got)
 
 
-def test_myers_edit_distance_exact():
-    """The round-15 Myers bit-parallel swap must be VALUE-identical to the
-    classic O(m·n) DP (and hence to Spark's ``levenshtein`` and the DuckDB
-    oracle's): edge cases, unicode code points, and a seeded randomized
-    sweep across length ranges that cross typical word boundaries."""
+def test_levenshtein_matches_classic_dp(spark):
+    """Spark's ``levenshtein``, the one edit distance of the package and the
+    oracle's, counts unicode code points: it must equal the classic O(m·n)
+    DP over Python strings on the edge cases, non-ASCII and astral-plane
+    characters, and a seeded randomized sweep."""
     import random
 
-    from pyspark_retention_pipeline_spark.operators.text import (
-        _myers_edit_distance as myers,
-    )
-
-    def classic(a, b):
-        prev = list(range(len(b) + 1))
-        for i, ca in enumerate(a, 1):
-            cur = [i]
-            for j, cb in enumerate(b, 1):
-                cur.append(
-                    min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb))
-                )
-            prev = cur
-        return prev[-1]
-
-    assert myers("", "") == 0
-    assert myers("", "abc") == 3
-    assert myers("abc", "") == 3
-    assert myers("kitten", "sitting") == 3
-    assert myers("flaw", "lawn") == 2
-    # non-ASCII code points count as single characters on both sides
-    assert myers("café", "cafe") == 1
-    assert myers("日本語", "日語") == 1
-
+    pairs = [
+        ("", ""),
+        ("", "abc"),
+        ("abc", ""),
+        ("kitten", "sitting"),
+        ("flaw", "lawn"),
+        ("café", "cafe"),
+        ("日本語", "日語"),
+        ("𝔘", "U"),
+        ("a𝔘b", "ab"),
+    ]
     rng = random.Random(151)
-    alphabet = "ab cdé"
+    alphabet = "ab cdé日𝔘"
     for _ in range(300):
         la, lb = rng.randint(0, 80), rng.randint(0, 80)
-        a = "".join(rng.choice(alphabet) for _ in range(la))
-        b = "".join(rng.choice(alphabet) for _ in range(lb))
-        assert myers(a, b) == classic(a, b), (a, b)
-
-
-def test_lev_native_kernel_matches_python():
-    """The round-15 native Myers kernel (``lev_native``) must be
-    VALUE-identical to the pure-Python big-int fold it accelerates —
-    randomized sweep across single-word (≤64) and multi-word (65..600)
-    pattern lengths, unicode incl. astral plane, plus near-dup-shaped
-    mutated copies (the workload's actual distribution). Skips only when
-    no C compiler exists on the host (the production path then runs the
-    pure-Python fallback, covered by test_myers_edit_distance_exact)."""
-    import random
-
-    import pytest
-
-    from pyspark_retention_pipeline_spark.operators import lev_native
-    from pyspark_retention_pipeline_spark.operators.text import (
-        _myers_edit_distance as myers,
+        pairs.append(
+            (
+                "".join(rng.choice(alphabet) for _ in range(la)),
+                "".join(rng.choice(alphabet) for _ in range(lb)),
+            )
+        )
+    df = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(pairs)], "i long, a string, b string"
     )
-
-    if lev_native.get_kernel() is None:
-        pytest.skip("no C compiler / kernel unavailable; fallback path active")
-
-    rng = random.Random(1551)
-    alphabet = "ab cdé日𝔘"
-    pairs = [("", ""), ("", "xyz"), ("a" * 64, "a" * 64 + "b"), ("a" * 65, "b" * 65)]
-    for _ in range(250):
-        la = rng.randint(0, 600)
-        a = "".join(rng.choice(alphabet) for _ in range(la))
-        if rng.random() < 0.5:
-            b = list(a)
-            for _ in range(rng.randint(0, 15)):
-                if not b:
-                    break
-                op, i = rng.random(), rng.randrange(len(b))
-                if op < 0.4:
-                    b[i] = rng.choice(alphabet)
-                elif op < 0.7:
-                    b.insert(i, rng.choice(alphabet))
-                else:
-                    del b[i]
-            b = "".join(b)
-        else:
-            b = "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 600)))
-        pairs.append((a, b))
-    got = lev_native.lev_batch([a for a, _ in pairs], [b for _, b in pairs])
-    want = [myers(a, b) for a, b in pairs]
-    assert got == want
-
-
-def test_lev_native_unavailable_falls_back(monkeypatch):
-    """When the kernel cannot load, ``lev_batch`` returns None and the
-    Arrow boundary's in-worker branch takes the pure-Python path — the
-    optimization can never be a correctness or availability risk."""
-    from pyspark_retention_pipeline_spark.operators import lev_native
-
-    monkeypatch.setattr(lev_native, "_lib", None)
-    monkeypatch.setattr(lev_native, "_tried", True)
-    assert lev_native.lev_batch(["abc"], ["abd"]) is None
-
-
-def test_lev_native_worker_never_compiles(monkeypatch, tmp_path):
-    """Executor-side Python workers must never invoke the C compiler
-    (round-16 posture: the driver compiles once and ships the .so via
-    addFile). A worker that finds no distributed or cached .so returns
-    None — pure-Python fallback — rather than compiling."""
-    import subprocess
-
-    from pyspark_retention_pipeline_spark.operators import lev_native
-
-    monkeypatch.setattr(lev_native, "_lib", None)
-    monkeypatch.setattr(lev_native, "_tried", False)
-    monkeypatch.setattr(lev_native, "_on_worker", lambda: True)
-    monkeypatch.setattr(lev_native, "_sparkfiles_so", lambda: None)
-    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))  # empty cache
-
-    def _no_compile(*a, **k):
-        raise AssertionError("compiler invoked in the executor path")
-
-    monkeypatch.setattr(subprocess, "run", _no_compile)
-    assert lev_native.get_kernel() is None
-    monkeypatch.setattr(lev_native, "_lib", None)
-    monkeypatch.setattr(lev_native, "_tried", True)
-
-
-def test_lev_native_rejects_unsafe_cache_file(tmp_path):
-    """A cached .so that is group/world-writable (or foreign-owned) must
-    not be loaded — the pre-planted-library hardening from the round-15
-    advice."""
-    from pyspark_retention_pipeline_spark.operators import lev_native
-
-    p = tmp_path / "planted.so"
-    p.write_bytes(b"\x7fELF")
-    p.chmod(0o777)
-    assert not lev_native._owned_and_private(str(p))
-    p.chmod(0o500)
-    assert lev_native._owned_and_private(str(p))
-
-
-def test_lev_native_cache_dir_private_and_owned(monkeypatch, tmp_path):
-    """The kernel cache directory is forced to mode 0700 even when it
-    already exists with a looser mode; a directory owned by another user
-    is refused, which leaves the kernel unavailable without compiling."""
-    import os
-    import stat
-    import subprocess
-
-    from pyspark_retention_pipeline_spark.operators import lev_native
-
-    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
-    pre = tmp_path / "prp_lev"
-    pre.mkdir()
-    pre.chmod(0o755)
-    assert lev_native._cache_dir() == str(pre)
-    assert stat.S_IMODE(os.stat(pre).st_mode) == 0o700
-
-    other_uid = os.geteuid() + 1
-    monkeypatch.setattr(os, "geteuid", lambda: other_uid)
-    with pytest.raises(OSError):
-        lev_native._cache_dir()
-
-    def _no_compile(*a, **k):
-        raise AssertionError("compiler invoked for a foreign cache directory")
-
-    monkeypatch.setattr(subprocess, "run", _no_compile)
-    monkeypatch.setattr(lev_native, "_sparkfiles_so", lambda: None)
-    monkeypatch.setattr(lev_native, "_on_worker", lambda: False)
-    monkeypatch.setattr(lev_native, "_lib", None)
-    monkeypatch.setattr(lev_native, "_tried", False)
-    assert lev_native.get_kernel() is None
-
-
-def test_lev_native_rejected_so_warns_once(monkeypatch, tmp_path, caplog):
-    """A .so that fails the ownership/mode check logs one warning per
-    process, so a silent fallback to pure Python is visible; an absent
-    file is the normal not-yet-compiled case and logs nothing."""
-    import logging
-
-    from pyspark_retention_pipeline_spark.operators import lev_native
-
-    monkeypatch.setattr(lev_native, "_warned_rejected", False)
-    p = tmp_path / "shared.so"
-    p.write_bytes(b"\x7fELF")
-    p.chmod(0o664)
-    with caplog.at_level(logging.WARNING, logger=lev_native.__name__):
-        assert not lev_native._owned_and_private(str(tmp_path / "absent.so"))
-        assert not caplog.records
-        assert not lev_native._owned_and_private(str(p))
-        assert not lev_native._owned_and_private(str(p))
-    records = [r for r in caplog.records if r.name == lev_native.__name__]
-    assert len(records) == 1
-    assert str(p) in records[0].getMessage()
-
-
-def test_lev_batch_resilient_survives_native_failures(monkeypatch):
-    """The Arrow boundary's in-worker body falls back to pure Python when
-    the native path RAISES (not only when it is absent), and routes pairs
-    longer than the Peq-allocation bound to Python without ever handing
-    them to the kernel."""
-    import pyspark_retention_pipeline_spark.operators.text as tx
-    from pyspark_retention_pipeline_spark.operators import lev_native
-
-    def _boom(xs, ys):
-        raise MemoryError("simulated myers_batch allocation failure")
-
-    monkeypatch.setattr(lev_native, "lev_batch", _boom)
-    got = tx._lev_batch_resilient(["kitten", None], ["sitting", "x"])
-    assert got == [3, None]
-
-    # long pairs never reach the kernel: lev_batch asserting on any call
-    # proves the routing, while the Python path still returns the value
-    long_a = "a" * (tx._NATIVE_MAX_PATTERN + 1)
-    long_b = "a" * (tx._NATIVE_MAX_PATTERN + 2)
-
-    def _never(xs, ys):
-        raise AssertionError("long pair routed to native kernel")
-
-    monkeypatch.setattr(lev_native, "lev_batch", _never)
-    assert tx._lev_batch_resilient([long_a], [long_b]) == [1]
+    got = {
+        r.i: r.d for r in df.select("i", F.levenshtein("a", "b").alias("d")).collect()
+    }
+    for i, (a, b) in enumerate(pairs):
+        assert got[i] == _classic_lev(a, b), (a, b)
 
 
 def test_neardup_edit_verify_single_arrow_eval(spark, sf_dir):
-    """The DP crosses the Python boundary exactly once: one ArrowEvalPython
-    node (the Myers batch), never a duplicated evaluation (guide §4.4 —
-    ``edit_dist`` is bound to one column and ``edit_sim`` derives from it)
-    and never a pickled-row BatchEvalPython."""
+    """The DP runs in the JVM, once per pair: the executed plan evaluates
+    exactly one ``levenshtein`` (``edit_dist`` is bound to one column and
+    ``edit_sim`` derives from it, so Catalyst does not inline the DP twice)
+    and crosses no Python worker boundary."""
     import pyspark_retention_pipeline_spark.operators.text as tx
     from pyspark_retention_pipeline_spark.plans import explain_str
 
-    import re
-
     plan = explain_str(tx.neardup_edit_verify(spark, sf_dir))
-    # formatted explain names each node once in the tree and once in the
-    # numbered detail section — count the detail entries.
-    nodes = re.findall(r"^\(\d+\) ArrowEvalPython", plan, re.M)
-    assert len(nodes) == 1, plan.count("ArrowEvalPython")
+    assert plan.count("levenshtein(") == 1, plan
+    assert "ArrowEvalPython" not in plan
     assert "BatchEvalPython" not in plan

@@ -198,6 +198,47 @@ def test_fit_pipeline_sizes_lr_input_to_open_cost_in_bytes(spark, features):
     assert {s.numTasks for s in passes} == {k}
 
 
+def test_evaluate_model_scores_the_cast_frame(spark, model, features):
+    """``evaluate_model`` scores the cast split without ``class_weight``,
+    which neither evaluator reads: the AUCs equal the class-weighted
+    frame's to the bit, and a call runs 10 jobs (scoring the weighted
+    frame ran 12: its label-count aggregate and broadcast)."""
+    from pyspark.ml.evaluation import BinaryClassificationEvaluator
+
+    weighted = model.transform(_prepared(features))
+    want = {
+        m: BinaryClassificationEvaluator(metricName=m).evaluate(weighted)
+        for m in ("areaUnderROC", "areaUnderPR")
+    }
+    got = {}
+    jobs = _stages_run(spark, lambda: got.update(evaluate_model(model, features)))
+    assert got == want
+    assert len(jobs) == 10
+
+
+def test_session_cache_builds_once_and_evicts_other_apps():
+    """The ML registry queries' session cache builds once per
+    (applicationId, sf_dir) and drops entries of other applications."""
+    from types import SimpleNamespace
+
+    from pyspark_retention_pipeline_spark.operators.mlops import _session_cached
+
+    def session(app_id):
+        return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+
+    cache, builds = {}, []
+
+    def build():
+        builds.append(1)
+        return len(builds)
+
+    assert _session_cached(cache, session("a"), "sf", build) == 1
+    assert _session_cached(cache, session("a"), "sf", build) == 1
+    assert _session_cached(cache, session("a"), "sf2", build) == 2
+    assert _session_cached(cache, session("b"), "sf", build) == 3
+    assert set(cache) == {("b", "sf")}
+
+
 def test_cv_folds_are_crossvalidators_own_split(features):
     """The CV path draws its folds before sizing, and they are the rows
     CrossValidator's seeded split puts in each validation fold of the
