@@ -13,10 +13,10 @@ models, the churn model and the quality classifier of ``operators/mlops.py``.
 It stages the fit over a materialized frame sized to its bytes, so each LBFGS
 iteration launches as few tasks as the data needs.
 
-Two scoring paths give the same numbers: :func:`score_frame` transforms a
-DataFrame with the fitted ``PipelineModel``; :func:`score_records` scores a
-few serving payloads on the driver with numpy, from the stages read once by
-:func:`compile_churn_model`, and launches no Spark job.
+The churn model has one scoring definition, the :class:`LinearChurnModel`
+that :func:`compile_churn_model` reads from the fitted stages: :func:`_scores`
+projects it over a DataFrame as Column expressions, and :func:`score_records`
+is its numpy form, which scores payloads on the driver with no Spark job.
 """
 
 from __future__ import annotations
@@ -31,12 +31,11 @@ from pyspark.ml import Pipeline, PipelineModel
 from pyspark.ml.classification import LogisticRegression
 from pyspark.ml.evaluation import BinaryClassificationEvaluator
 from pyspark.ml.feature import Imputer, StandardScaler, VectorAssembler
-from pyspark.ml.functions import vector_to_array
 from pyspark.ml.linalg import SparseVector
 from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+from pyspark.storagelevel import StorageLevel
 
 from ..constants import DEFAULT_THRESHOLD
 
@@ -120,11 +119,26 @@ def fit_partitions(rows: int, n_features: int, task_bytes: int) -> int:
 
 
 @contextmanager
+def cached(frame: DataFrame) -> Iterator[DataFrame]:
+    """``frame`` cached for the block and released after it, unless its plan
+    is cached already: Spark keeps one cache entry per plan, so releasing
+    that entry would drop another caller's cache."""
+    mine = frame.storageLevel == StorageLevel.NONE
+    if mine:
+        frame.cache()
+    try:
+        yield frame
+    finally:
+        if mine:
+            frame.unpersist()
+
+
+@contextmanager
 def _sized(frame: DataFrame, n_features: int) -> Iterator[DataFrame]:
     """``frame`` cached, counted, and coalesced to :func:`fit_partitions`
     partitions of Spark's own ``spark.sql.files.openCostInBytes`` (4 MB by
     default: the bytes Spark reckons a task scans in the time a fixed
-    per-file cost takes); the cache is released on exit.
+    per-file cost takes), under :func:`cached`.
 
     An iterative fit pays a task launch per partition per job, and LBFGS runs
     a job per iteration, so a few hundred rows spread over one partition per
@@ -135,13 +149,10 @@ def _sized(frame: DataFrame, n_features: int) -> Iterator[DataFrame]:
     the lazy plan would fold its upstream work into the few coalesced
     tasks. Coalescing only merges: a frame already at k partitions or fewer
     keeps its own."""
-    cached = frame.cache()
-    try:
-        rows = cached.count()
+    with cached(frame) as rows:
+        n = rows.count()
         conf = frame.sparkSession._jsparkSession.sessionState().conf()
-        yield cached.coalesce(fit_partitions(rows, n_features, conf.filesOpenCostInBytes()))
-    finally:
-        cached.unpersist()
+        yield rows.coalesce(fit_partitions(n, n_features, conf.filesOpenCostInBytes()))
 
 
 @contextmanager
@@ -177,9 +188,7 @@ def fit_pipeline(prepared: DataFrame, cols: list[str]) -> PipelineModel:
     dominated: 315 s at sf0.001 through ``Pipeline.fit`` against ~25 s
     staged over a materialized LR input. The math is ``Pipeline.fit``'s;
     only the summation order over partitions can differ (|Δcoef| ≤ 1e-8).
-    ``prepared`` is cached for the fit and uncached after it, so pass a
-    frame the caller has not cached itself; nothing persisted here outlives
-    the call."""
+    Nothing persisted here outlives the call."""
     stages = build_churn_pipeline(cols).getStages()
     with _sized(prepared, len(cols)) as sized:
         prefix = Pipeline(stages=stages[:-1]).fit(sized)
@@ -256,66 +265,80 @@ def train_churn_model(
         return cv.fit(sized).bestModel
 
 
-def score_frame(
-    model: PipelineModel, features: DataFrame, threshold: float = DEFAULT_THRESHOLD
+def _scores(
+    linear: LinearChurnModel, features: DataFrame, threshold: float = DEFAULT_THRESHOLD
 ) -> DataFrame:
-    """Batch inference: transform → P(churn) → thresholded prediction
-    (reference ``eval.py:50-55``; p1 extraction via vector_to_array)."""
+    """``custkey`` and ``label`` when present, then ``margin``, ``p_churn`` and
+    ``prediction``, in the fitted stages' order of operations: a null or NaN
+    feature takes its surrogate, then ``(x − mean)·scale``, a left-to-right sum
+    over the ``active`` coefficients and the intercept, so ``margin`` is the LR
+    stage's ``rawPrediction[1]`` bit for bit. p1 = 1 − 1/(1 + e^margin) as there,
+    but SQL's ``exp`` (``StrictMath``) can be an ulp off MLlib's ``Math.exp``."""
     keep = [c for c in ("custkey", "label") if c in features.columns]
-    p1 = vector_to_array(F.col("probability")).getItem(1)
-    return model.transform(cast_features(features, FEATURE_COLS)).select(
+    cols = list(linear.feature_cols)
+    z = [
+        (F.when(F.isnull(c) | F.isnan(c), float(s)).otherwise(F.col(c)) - float(m)) * float(k)
+        for c, s, m, k in zip(cols, linear.surrogates, linear.mean, linear.scale)
+    ]
+    margin = F.lit(0.0)
+    for j, w in zip(linear.active, linear.coefficients):
+        margin = margin + z[j] * float(w)
+    margin = margin + linear.intercept
+    p1 = 1.0 - 1.0 / (1.0 + F.exp(margin))
+    return cast_features(features, cols).select(
         *keep,
+        margin.alias("margin"),
         p1.alias("p_churn"),
         (p1 >= F.lit(threshold)).cast("double").alias("prediction"),
     )
 
 
+def score_frame(
+    model: PipelineModel, features: DataFrame, threshold: float = DEFAULT_THRESHOLD
+) -> DataFrame:
+    """Batch inference: P(churn) → thresholded prediction (reference
+    ``eval.py:50-55``), :func:`_scores` without the margin."""
+    return _scores(compile_churn_model(model), features, threshold).drop("margin")
+
+
+@contextmanager
+def evaluated(
+    model: PipelineModel, features: DataFrame, threshold: float = DEFAULT_THRESHOLD
+) -> Iterator[tuple[DataFrame, dict[str, float]]]:
+    """A labeled split scored once into a cached :func:`_scores` projection,
+    with the AUC-ROC and AUC-PR of its margin (reference ``eval.py:58-61``)."""
+    with cached(_scores(compile_churn_model(model), features, threshold)) as scored:
+        ev = BinaryClassificationEvaluator(rawPredictionCol="margin")
+        metrics = {m: ev.setMetricName(m).evaluate(scored) for m in ("areaUnderROC", "areaUnderPR")}
+        yield scored, metrics
+
+
 def evaluate_model(model: PipelineModel, features: DataFrame) -> dict[str, float]:
-    """AUC-ROC / AUC-PR on a labeled split (reference ``eval.py:58-61``).
-    Neither evaluator reads ``class_weight``, so the split is scored cast
-    but unweighted, as :func:`score_frame` scores it."""
-    scored = model.transform(cast_features(features, FEATURE_COLS)).cache()
-    out = {}
-    try:
-        for metric in ("areaUnderROC", "areaUnderPR"):
-            ev = BinaryClassificationEvaluator(
-                labelCol="label", rawPredictionCol="rawPrediction", metricName=metric
-            )
-            out[metric] = float(ev.evaluate(scored))
-    finally:
-        scored.unpersist()
-    return out
+    """AUC-ROC / AUC-PR on a labeled split (:func:`evaluated`)."""
+    with evaluated(model, features) as (_, metrics):
+        return metrics
 
 
 def coefficients_frame(spark: SparkSession, model: PipelineModel) -> DataFrame:
     """Signed coefficients ranked by |β| (reference ``train.py:110-122``
-    coefficient export)."""
-    lr_model = model.stages[-1]
-    assembler = next(s for s in model.stages if isinstance(s, VectorAssembler))
-    names = [c.removesuffix("_imp") for c in assembler.getInputCols()]
-    rows = [
-        (name, float(coef)) for name, coef in zip(names, lr_model.coefficients.toArray())
-    ]
-    schema = T.StructType(
-        [
-            T.StructField("feature", T.StringType()),
-            T.StructField("coefficient", T.DoubleType()),
-        ]
+    coefficient export); a coefficient a sparse vector does not store is 0."""
+    linear = compile_churn_model(model)
+    coefficients = np.zeros(len(linear.feature_cols))
+    coefficients[linear.active] = linear.coefficients
+    rows = list(zip(linear.feature_cols, coefficients.tolist()))
+    return spark.createDataFrame(rows, "feature string, coefficient double").orderBy(
+        F.abs(F.col("coefficient")).desc()
     )
-    return spark.createDataFrame(rows, schema).orderBy(F.abs(F.col("coefficient")).desc())
 
 
 _CHURN_STAGES = (
-    "ImputerModel",
-    "VectorAssembler",
-    "StandardScalerModel",
-    "LogisticRegressionModel",
+    "ImputerModel", "VectorAssembler", "StandardScalerModel", "LogisticRegressionModel"
 )
 
 
 @dataclass(frozen=True)
 class LinearChurnModel:
-    """The fitted churn pipeline as plain arrays, for scoring on the driver.
+    """The fitted churn pipeline as plain arrays, the one definition of its scores.
 
     ``surrogates``, ``mean`` and ``scale`` are indexed like ``feature_cols``;
     ``coefficients`` covers only the ``active`` feature indices, the entries
@@ -332,12 +355,11 @@ class LinearChurnModel:
 
 
 def compile_churn_model(model: PipelineModel) -> LinearChurnModel:
-    """Read the four fitted churn stages once into a :class:`LinearChurnModel`.
-
-    Collecting the Imputer surrogates is its only Spark work (a local relation
-    in a fitted or loaded model: no job on Spark 4.1).
-    Raises ``ValueError`` for any stage list other than Imputer(NaN missing) →
-    VectorAssembler → StandardScaler(withMean, withStd) → binary LR."""
+    """Read the four fitted churn stages into a :class:`LinearChurnModel`, from
+    which every churn score is computed. Collecting the Imputer surrogates is
+    its only Spark work (a local relation in a fitted or loaded model: no job
+    on Spark 4.1). Raises ``ValueError`` for any stage list other than Imputer
+    (NaN missing) → VectorAssembler → StandardScaler(withMean, withStd) → binary LR."""
     names = tuple(type(s).__name__ for s in model.stages)
     if names != _CHURN_STAGES:
         raise ValueError(
@@ -352,19 +374,15 @@ def compile_churn_model(model: PipelineModel) -> LinearChurnModel:
     cols = tuple(raw_of[c] for c in assembler.getInputCols())
     surrogate_row = imputer.surrogateDF.collect()[0]
     std = scaler.std.toArray()
-    coefficients = lr.coefficients
-    if isinstance(coefficients, SparseVector):
-        active, w = coefficients.indices, coefficients.values
-    else:
-        w = coefficients.toArray()
-        active = np.arange(len(w))
+    w = lr.coefficients
+    active = w.indices if isinstance(w, SparseVector) else np.arange(len(w))
     return LinearChurnModel(
         feature_cols=cols,
         surrogates=np.array([float(surrogate_row[c]) for c in cols]),
         mean=scaler.mean.toArray(),
         scale=np.divide(1.0, std, out=np.zeros_like(std), where=std != 0),
         active=np.asarray(active, dtype=np.int64),
-        coefficients=np.asarray(w, dtype=float),
+        coefficients=np.asarray(w.values, dtype=float),
         intercept=float(lr.intercept),
     )
 
@@ -397,11 +415,8 @@ def score_records(
         dot = np.zeros(len(records))
         for j, w in zip(linear.active, linear.coefficients):
             dot = dot + z[:, j] * w
-    out = []
-    for m in (dot + linear.intercept).tolist():
-        p = _p_churn(m)
-        out.append({"p_churn": p, "prediction": 1.0 if p != p or p >= threshold else 0.0})
-    return out
+    ps = [_p_churn(m) for m in (dot + linear.intercept).tolist()]
+    return [{"p_churn": p, "prediction": 1.0 if p != p or p >= threshold else 0.0} for p in ps]
 
 
 def _p_churn(margin: float) -> float:

@@ -10,7 +10,7 @@ Scale fixes over the reference flagged in SURVEY §4:
   * evaluation's confusion matrix is one conditional aggregation over the
     sweep's confusion cells, not 4 filter+count actions (``eval.py:74-82``).
 
-Every frame a step caches is released before the step returns.
+Every frame a step caches is released before the step returns, and no other.
 """
 
 from __future__ import annotations
@@ -24,12 +24,7 @@ from pyspark.sql import functions as F
 
 from ..operators.retention import churn_feature_frame
 from ..operators.threshold import confusion_cells, pick_best, sweep_scores, with_metrics
-from .pipeline import (
-    coefficients_frame,
-    evaluate_model,
-    score_frame,
-    train_churn_model,
-)
+from .pipeline import cached, coefficients_frame, evaluated, score_frame, train_churn_model
 
 SPLIT_WEIGHTS = [0.7, 0.15, 0.15]
 SEED = 42
@@ -53,8 +48,7 @@ def run_feature_etl(
         ("orders_positive", F.col("total_orders") <= 0),
         ("recency_not_null", F.col("recency_days").isNull()),
     ]
-    features = churn_feature_frame(spark, sf_dir).cache()
-    try:
+    with cached(churn_feature_frame(spark, sf_dir)) as features:
         if validate:
             failed = [r for r in run_checks(features, checks) if not r.passed]
             if failed:
@@ -65,8 +59,6 @@ def run_feature_etl(
         for name, df in zip(("train", "val", "test"), splits):
             df.write.mode("overwrite").parquet(os.path.join(out_dir, name))
             counts[name] = df.count()
-    finally:
-        features.unpersist()
     return counts
 
 
@@ -106,12 +98,9 @@ def run_training(
     )
     model.write().overwrite().save(os.path.join(out_dir, "model"))
 
-    val = spark.read.parquet(os.path.join(out_dir, "val")).cache()
-    try:
-        metrics = evaluate_model(model, val)
-        metrics.update(_sweep_best_threshold(score_frame(model, val), thr_metric=thr_metric))
-    finally:
-        val.unpersist()
+    val = spark.read.parquet(os.path.join(out_dir, "val"))
+    with evaluated(model, val) as (scored, metrics):
+        metrics.update(_sweep_best_threshold(scored, thr_metric=thr_metric))
 
     with open(os.path.join(out_dir, "metrics.json"), "w") as f:
         json.dump(metrics, f, indent=2, sort_keys=True)
@@ -178,14 +167,10 @@ def run_eval(spark: SparkSession, out_dir: str) -> dict[str, float]:
     with open(os.path.join(out_dir, "metrics.json")) as f:
         threshold = json.load(f)["best_threshold"]
 
-    test = spark.read.parquet(os.path.join(out_dir, "test")).cache()
-    try:
-        metrics = evaluate_model(model, test)
-        scored = score_frame(model, test, threshold=threshold)
+    test = spark.read.parquet(os.path.join(out_dir, "test"))
+    with evaluated(model, test, threshold) as (scored, metrics):
         hit = F.col("prediction") == 1.0
         cm = scored.agg(*confusion_cells(hit, F.col("label") == 1)).collect()[0]
-    finally:
-        test.unpersist()
     metrics.update({k: int(cm[k]) for k in ("tp", "fp", "fn", "tn")})
     metrics["threshold"] = threshold
     return metrics

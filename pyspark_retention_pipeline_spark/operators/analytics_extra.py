@@ -870,7 +870,7 @@ FROM spine LEFT JOIN monthly ON spine.m = monthly.mm
 @query(
     "recursive_month_spine",
     oracle=_RECURSIVE_SPINE_SQL,
-    tags=("recursive-cte", "spark4", "spine"),
+    tags=("spine",),
 )
 def recursive_month_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-free monthly revenue series with RECURSIVE-CTE semantics. The

@@ -3,9 +3,11 @@
 Library-first: :class:`ChurnScorer` is the engine artifact — model loading,
 schema authority (the persisted VectorAssembler input columns, mirroring
 ``serve_api.py:87-89`` where the model artifact defines the feature schema),
-payload coercion, thresholded prediction. The scorer reads the fitted stages
-once (:func:`ml.compile_churn_model`) and scores every request on the driver
-with numpy (:func:`ml.score_records`): a request launches no Spark job. It is
+payload coercion, thresholded prediction. The scorer compiles the fitted
+stages once into the model's one scoring definition
+(:func:`ml.compile_churn_model`, which :func:`ml.score_frame` projects over
+DataFrames) and scores every request on the driver with its numpy form
+(:func:`ml.score_records`): a request launches no Spark job. It is
 safe to share between threads and counts its requests, records and errors in
 :meth:`ChurnScorer.health`. The HTTP layer is a thin optional wrapper: FastAPI
 is not in this container, so :func:`create_app` import-gates it (SURVEY §7

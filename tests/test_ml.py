@@ -198,6 +198,74 @@ def test_fit_pipeline_sizes_lr_input_to_open_cost_in_bytes(spark, features):
     assert {s.numTasks for s in passes} == {k}
 
 
+@pytest.fixture(scope="module")
+def sparse_model(features):
+    """An L1 model fitted with a constant feature, on that frame: most
+    coefficients are exactly 0 (a sparse vector) and one scaler std is 0 (the
+    shape of ``tests/test_serving.py``'s ``sparse_scorer``)."""
+    from pyspark.ml.linalg import SparseVector
+    from pyspark.sql import functions as F
+
+    frame = features.withColumn("recent90_orders", F.lit(2.0))
+    pipeline = build_churn_pipeline()
+    pipeline.getStages()[-1].setRegParam(0.02).setElasticNetParam(1.0)
+    model = pipeline.fit(_prepared(frame))
+    assert isinstance(model.stages[-1].coefficients, SparseVector)
+    assert 0.0 in model.stages[2].std.toArray()
+    return model, frame
+
+
+@pytest.fixture(scope="module")
+def cv_model(features):
+    model = train_churn_model(
+        features,
+        cross_validate=True,
+        cv_reg_params=[0.0, 0.02],
+        cv_elastic_params=[1.0],
+        cv_num_folds=2,
+    )
+    return model, features
+
+
+@pytest.mark.parametrize("which", ["fit", "sparse", "cv"])
+def test_compiled_scores_match_mllib(request, model, features, which):
+    """The compiled projection against MLlib's ``transform``, which stays the
+    reference: ``margin`` is ``rawPrediction[1]`` exactly, the AUCs are the
+    evaluator's on ``rawPrediction`` exactly, ``p_churn`` is within 4.5e-16
+    of ``probability[1]`` (SQL's ``exp`` against ``Math.exp``), and no
+    prediction flips at any of the sweep's 101 thresholds."""
+    from pyspark.ml.evaluation import BinaryClassificationEvaluator
+    from pyspark.ml.functions import vector_to_array
+
+    from pyspark_retention_pipeline_spark.ml.pipeline import _scores
+
+    if which == "fit":
+        fitted, frame = model, features
+    else:
+        fitted, frame = request.getfixturevalue(f"{which}_model")
+    reference = fitted.transform(cast_features(frame, FEATURE_COLS))
+    want = {
+        m: BinaryClassificationEvaluator(metricName=m).evaluate(reference)
+        for m in ("areaUnderROC", "areaUnderPR")
+    }
+    assert evaluate_model(fitted, frame) == want
+    mllib = reference.select(
+        "custkey",
+        vector_to_array("rawPrediction")[1].alias("margin"),
+        vector_to_array("probability")[1].alias("p_churn"),
+    )
+    ref = {r.custkey: (r.margin, r.p_churn) for r in mllib.collect()}
+    scored = _scores(compile_churn_model(fitted), frame)
+    got = {r.custkey: (r.margin, r.p_churn) for r in scored.collect()}
+    assert got.keys() == ref.keys() and len(got) == features.count()
+    thresholds = [i / 100 for i in range(101)]
+    for key, (margin, p) in got.items():
+        ref_margin, ref_p = ref[key]
+        assert margin == ref_margin, key
+        assert abs(p - ref_p) <= 4.5e-16, key
+        assert [p >= t for t in thresholds] == [ref_p >= t for t in thresholds], key
+
+
 def test_evaluate_model_scores_the_cast_frame(spark, model, features):
     """``evaluate_model`` scores the cast split without ``class_weight``,
     which neither evaluator reads: the AUCs equal the class-weighted

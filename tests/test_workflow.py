@@ -80,6 +80,36 @@ def test_full_lifecycle(spark, sf_dir, tmp_path, persistent_rdds):
     held.unpersist()
 
 
+def test_lifecycle_keeps_a_callers_cache(spark, sf_dir, tmp_path, persistent_rdds):
+    """Spark keeps one cache entry per plan, so a step that cached and then
+    released the caller's plan would drop the caller's cache. The caller's
+    caches of the feature frame and of the fit's input survive
+    ``run_feature_etl`` and ``train_churn_model`` on the same plans."""
+    from pyspark.storagelevel import StorageLevel
+
+    from pyspark_retention_pipeline_spark.ml import (
+        FEATURE_COLS,
+        add_class_weight,
+        cast_features,
+        train_churn_model,
+    )
+    from pyspark_retention_pipeline_spark.operators.retention import churn_feature_frame
+
+    held = churn_feature_frame(spark, sf_dir).cache()
+    prepared = add_class_weight(cast_features(held, FEATURE_COLS)).cache()
+    prepared.count()
+    try:
+        _, cached_before = persistent_rdds()
+        run_feature_etl(spark, sf_dir, str(tmp_path / "artifacts"))
+        train_churn_model(churn_feature_frame(spark, sf_dir))
+        _, cached_after = persistent_rdds()
+        assert cached_before <= cached_after
+        assert StorageLevel.NONE not in (held.storageLevel, prepared.storageLevel)
+    finally:
+        prepared.unpersist()
+        held.unpersist()
+
+
 def test_split_determinism(spark, sf_dir, tmp_path):
     out1, out2 = str(tmp_path / "a"), str(tmp_path / "b")
     c1 = run_feature_etl(spark, sf_dir, out1)
