@@ -43,6 +43,27 @@ def sf_dir() -> str:
     return SF_DIR
 
 
+@pytest.fixture(scope="session")
+def sparse_churn_model(spark, sf_dir):
+    """An L1-regularized churn model fitted with a constant feature, and the
+    frame it was fitted on: most coefficients are exactly 0 (Spark stores
+    them as a sparse vector) and one scaler std is 0."""
+    from pyspark.ml.linalg import SparseVector
+    from pyspark.sql import functions as F
+
+    from pyspark_retention_pipeline_spark import ml
+    from pyspark_retention_pipeline_spark.operators.retention import churn_feature_frame
+
+    features = churn_feature_frame(spark, sf_dir).withColumn("recent90_orders", F.lit(2.0))
+    pipeline = ml.build_churn_pipeline()
+    pipeline.getStages()[-1].setRegParam(0.02).setElasticNetParam(1.0)
+    model = pipeline.fit(ml.add_class_weight(ml.cast_features(features, ml.FEATURE_COLS)))
+    coefficients = model.stages[-1].coefficients
+    assert isinstance(coefficients, SparseVector) and 0 < coefficients.numNonzeros() < 8
+    assert 0.0 in model.stages[2].std.toArray()
+    return model, features
+
+
 @pytest.fixture
 def persistent_rdds(spark):
     """A callable returning ``(ids, cached)``: the ids of the RDDs persisted

@@ -199,24 +199,8 @@ def test_fit_pipeline_sizes_lr_input_to_open_cost_in_bytes(spark, features):
 
 
 @pytest.fixture(scope="module")
-def sparse_model(features):
-    """An L1 model fitted with a constant feature, on that frame: most
-    coefficients are exactly 0 (a sparse vector) and one scaler std is 0 (the
-    shape of ``tests/test_serving.py``'s ``sparse_scorer``)."""
-    from pyspark.ml.linalg import SparseVector
-    from pyspark.sql import functions as F
-
-    frame = features.withColumn("recent90_orders", F.lit(2.0))
-    pipeline = build_churn_pipeline()
-    pipeline.getStages()[-1].setRegParam(0.02).setElasticNetParam(1.0)
-    model = pipeline.fit(_prepared(frame))
-    assert isinstance(model.stages[-1].coefficients, SparseVector)
-    assert 0.0 in model.stages[2].std.toArray()
-    return model, frame
-
-
-@pytest.fixture(scope="module")
-def cv_model(features):
+def cv_churn_model(features):
+    """The best model of a small CV search (2×1 grid, 2 folds), and its frame."""
     model = train_churn_model(
         features,
         cross_validate=True,
@@ -242,7 +226,7 @@ def test_compiled_scores_match_mllib(request, model, features, which):
     if which == "fit":
         fitted, frame = model, features
     else:
-        fitted, frame = request.getfixturevalue(f"{which}_model")
+        fitted, frame = request.getfixturevalue(f"{which}_churn_model")
     reference = fitted.transform(cast_features(frame, FEATURE_COLS))
     want = {
         m: BinaryClassificationEvaluator(metricName=m).evaluate(reference)
@@ -257,7 +241,7 @@ def test_compiled_scores_match_mllib(request, model, features, which):
     ref = {r.custkey: (r.margin, r.p_churn) for r in mllib.collect()}
     scored = _scores(compile_churn_model(fitted), frame)
     got = {r.custkey: (r.margin, r.p_churn) for r in scored.collect()}
-    assert got.keys() == ref.keys() and len(got) == features.count()
+    assert got.keys() == ref.keys() and len(got) == frame.count()
     thresholds = [i / 100 for i in range(101)]
     for key, (margin, p) in got.items():
         ref_margin, ref_p = ref[key]

@@ -100,20 +100,8 @@ def test_coercion_rules_pinned(scorer):
 
 
 @pytest.fixture(scope="module")
-def sparse_scorer(spark, sf_dir):
-    """An L1-regularized model with a constant feature: most coefficients are
-    exactly 0 (Spark stores them as a sparse vector) and one scaler std is 0."""
-    from pyspark.ml.linalg import SparseVector
-    from pyspark.sql import functions as F
-
-    features = churn_feature_frame(spark, sf_dir).withColumn("recent90_orders", F.lit(2.0))
-    pipeline = ml.build_churn_pipeline()
-    pipeline.getStages()[-1].setRegParam(0.02).setElasticNetParam(1.0)
-    model = pipeline.fit(ml.add_class_weight(ml.cast_features(features, FEATURE_COLS)))
-    coefficients = model.stages[-1].coefficients
-    assert isinstance(coefficients, SparseVector) and 0 < coefficients.numNonzeros() < 8
-    assert 0.0 in model.stages[2].std.toArray()
-    return ChurnScorer(spark, model, threshold=0.5)
+def sparse_scorer(spark, sparse_churn_model):
+    return ChurnScorer(spark, sparse_churn_model[0], threshold=0.5)
 
 
 def _num(v) -> float:
