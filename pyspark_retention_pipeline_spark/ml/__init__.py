@@ -13,6 +13,8 @@ from .pipeline import (
     score_frame,
     score_records,
     train_churn_model,
+    weighted_glr,
+    weighted_lr,
 )
 
 __all__ = [
@@ -28,4 +30,6 @@ __all__ = [
     "score_frame",
     "score_records",
     "train_churn_model",
+    "weighted_glr",
+    "weighted_lr",
 ]

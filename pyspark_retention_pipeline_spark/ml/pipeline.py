@@ -1,22 +1,27 @@
 """Churn-model pipeline (SURVEY.md §2.11 M1-M11, reference parity for
 ``pipeline/train.py`` / ``eval.py`` / ``serve_api.py``) built Spark-first.
 
-Stages mirror the reference exactly — Imputer(mean) → VectorAssembler →
-StandardScaler(withMean, withStd) → weighted LogisticRegression(maxIter=80) —
-with one scale-relevant difference: class weights are derived *inside the
-plan* (broadcast scalar join) rather than collecting label counts to the
-driver (reference ``train.py:40-55``). Threshold selection over these scores
-lives in ml/workflow.py.
+The feature stages mirror the reference exactly — Imputer(mean) →
+VectorAssembler → StandardScaler(withMean, withStd) — and class weights are
+derived *inside the plan* (broadcast scalar join) rather than collecting label
+counts to the driver (reference ``train.py:40-55``). The reference's last stage
+is a weighted LBFGS ``LogisticRegression`` (:func:`weighted_lr`); the churn
+model fits the same weighted logistic likelihood as a binomial/logit
+``GeneralizedLinearRegression`` by IRLS (:func:`weighted_glr`), a handful of
+Newton iterations where LBFGS ran dozens, each one a Spark job. The CV path and
+the quality classifier keep the LBFGS stage. Threshold selection over these
+scores lives in ml/workflow.py.
 
-:func:`fit_pipeline` is the one fit routine of both logistic-regression
-models, the churn model and the quality classifier of ``operators/mlops.py``.
-It stages the fit over a materialized frame sized to its bytes, so each LBFGS
-iteration launches as few tasks as the data needs.
+:func:`fit_pipeline` is the one fit routine of the churn model and the quality
+classifier of ``operators/mlops.py``, with the last stage as an argument. It
+stages the fit over a materialized frame sized to its bytes, so each iteration
+launches as few tasks as the data needs.
 
 The churn model has one scoring definition, the :class:`LinearChurnModel`
-that :func:`compile_churn_model` reads from the fitted stages: :func:`_scores`
-projects it over a DataFrame as Column expressions, and :func:`score_records`
-is its numpy form, which scores payloads on the driver with no Spark job.
+that :func:`compile_churn_model` reads from the fitted stages (either last
+stage): :func:`_scores` projects it over a DataFrame as Column expressions,
+and :func:`score_records` is its numpy form, which scores payloads on the
+driver with no Spark job.
 """
 
 from __future__ import annotations
@@ -27,11 +32,12 @@ from contextlib import contextmanager
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.ml import Pipeline, PipelineModel
+from pyspark.ml import Estimator, Pipeline, PipelineModel
 from pyspark.ml.classification import LogisticRegression
 from pyspark.ml.evaluation import BinaryClassificationEvaluator
 from pyspark.ml.feature import Imputer, StandardScaler, VectorAssembler
 from pyspark.ml.linalg import SparseVector
+from pyspark.ml.regression import GeneralizedLinearRegression, GeneralizedLinearRegressionModel
 from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -71,26 +77,47 @@ def add_class_weight(features: DataFrame, label_col: str = "label") -> DataFrame
     )
 
 
+def _feature_stages(cols: list[str]) -> list:
+    """Imputer → VectorAssembler → StandardScaler over ``cols``, into
+    ``features_scaled``."""
+    imputed = [f"{c}_imp" for c in cols]
+    return [
+        Imputer(strategy="mean", inputCols=cols, outputCols=imputed),
+        VectorAssembler(inputCols=imputed, outputCol="features"),
+        StandardScaler(
+            inputCol="features", outputCol="features_scaled", withMean=True, withStd=True
+        ),
+    ]
+
+
+def weighted_lr() -> LogisticRegression:
+    """The reference's last stage: class-weighted LR fitted by LBFGS
+    (``pipeline/train.py:154-158``)."""
+    return LogisticRegression(
+        featuresCol="features_scaled", labelCol="label", weightCol="class_weight", maxIter=80
+    )
+
+
+def weighted_glr() -> GeneralizedLinearRegression:
+    """The churn model's last stage: the same class-weighted logistic
+    likelihood as :func:`weighted_lr`, fitted by IRLS (MLlib*, ICDE 2019:
+    GLM training on Spark is bound by the scheduling per iteration). Newton
+    steps converge in a few iterations where LBFGS runs dozens, one Spark job
+    each. It takes no ``elasticNetParam`` and needs an unregularized MLE to
+    exist, so separable data does not converge."""
+    return GeneralizedLinearRegression(
+        family="binomial",
+        link="logit",
+        featuresCol="features_scaled",
+        labelCol="label",
+        weightCol="class_weight",
+    )
+
+
 def build_churn_pipeline(feature_cols: list[str] | None = None) -> Pipeline:
     """Imputer → VectorAssembler → StandardScaler → weighted LR
-    (reference ``pipeline/train.py:154-158``)."""
-    cols = list(feature_cols or FEATURE_COLS)
-    imputed = [f"{c}_imp" for c in cols]
-    return Pipeline(
-        stages=[
-            Imputer(strategy="mean", inputCols=cols, outputCols=imputed),
-            VectorAssembler(inputCols=imputed, outputCol="features"),
-            StandardScaler(
-                inputCol="features", outputCol="features_scaled", withMean=True, withStd=True
-            ),
-            LogisticRegression(
-                featuresCol="features_scaled",
-                labelCol="label",
-                weightCol="class_weight",
-                maxIter=80,
-            ),
-        ]
-    )
+    (reference ``pipeline/train.py:154-158``), the CV path's estimator."""
+    return Pipeline(stages=_feature_stages(list(feature_cols or FEATURE_COLS)) + [weighted_lr()])
 
 
 def cast_features(frame: DataFrame, cols: list[str]) -> DataFrame:
@@ -140,9 +167,9 @@ def _sized(frame: DataFrame, n_features: int) -> Iterator[DataFrame]:
     default: the bytes Spark reckons a task scans in the time a fixed
     per-file cost takes), under :func:`cached`.
 
-    An iterative fit pays a task launch per partition per job, and LBFGS runs
-    a job per iteration, so a few hundred rows spread over one partition per
-    input file cost more in scheduling than in compute. A partition is kept
+    An iterative fit pays a task launch per partition per job, and LBFGS and
+    IRLS run a job per iteration, so a few hundred rows spread over one
+    partition per input file cost more in scheduling than in compute. A partition is kept
     only when it carries at least that fixed cost's worth of bytes: on a
     4-core host one task beat four up to ~100k churn rows (8 MB) and lost
     beyond (docs/SCALE.md). The count comes before the coalesce: coalescing
@@ -160,11 +187,11 @@ def _checkpointed(frame: DataFrame) -> Iterator[DataFrame]:
     """``frame`` materialized by an eager ``localCheckpoint``, whose RDD is
     unpersisted on exit.
 
-    LBFGS reads its input once per iteration, and a checkpoint's rows read
-    faster than a cached frame's columnar batches: on a 4-core host the
-    quality classifier fitted in 5.5 s against 8.5 s cached (256-wide
-    vectors), the churn model in 1.7 s against 2.1 s. Spark drops a local
-    checkpoint only when its RDD is garbage-collected, so the RDD is taken
+    An iterative fit reads its input once per iteration, and a checkpoint's
+    rows read faster than a cached frame's columnar batches: on a 4-core host
+    the LBFGS quality classifier fitted in 5.5 s against 8.5 s cached
+    (256-wide vectors), the LBFGS churn model in 1.7 s against 2.1 s. Spark
+    drops a local checkpoint only when its RDD is garbage-collected, so the RDD is taken
     from the checkpoint's plan, a ``LogicalRDD``, and released here."""
     checkpointed = frame.localCheckpoint()
     try:
@@ -173,29 +200,43 @@ def _checkpointed(frame: DataFrame) -> Iterator[DataFrame]:
         checkpointed._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
-def fit_pipeline(prepared: DataFrame, cols: list[str]) -> PipelineModel:
-    """Fit :func:`build_churn_pipeline` over ``cols`` on ``prepared``, a frame
-    already cast (:func:`cast_features`) and class-weighted
-    (:func:`add_class_weight`) — the one place the package fits a
-    ``LogisticRegression``.
+@contextmanager
+def job_description(spark: SparkSession, description: str) -> Iterator[None]:
+    """Spark jobs of this thread carry ``description`` for the block; the
+    previous description (a job group's, say) comes back on exit. The job
+    group itself is left as it is."""
+    sc = spark.sparkContext
+    previous = sc.getLocalProperty("spark.job.description")
+    sc.setLocalProperty("spark.job.description", description)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", previous)
+
+
+def fit_pipeline(prepared: DataFrame, cols: list[str], final: Estimator) -> PipelineModel:
+    """Fit the feature stages over ``cols`` and then ``final``
+    (:func:`weighted_glr` for the churn model, :func:`weighted_lr` for the
+    quality classifier) on ``prepared``, a frame already cast
+    (:func:`cast_features`) and class-weighted (:func:`add_class_weight`).
+    Its jobs carry the description ``ml.fit``.
 
     The frame is materialized and sized (:func:`_sized`), the Imputer and
-    StandardScaler are fitted on it, and the LR fits on a checkpointed
+    StandardScaler are fitted on it, and ``final`` fits on a checkpointed
     3-column frame (``features_scaled``, ``label``, ``class_weight``;
-    :func:`_checkpointed`), so LBFGS's job per iteration reads materialized
-    rows instead of re-running the featurization plan. At the quality
+    :func:`_checkpointed`), so the job per iteration reads materialized rows
+    instead of re-running the featurization plan. At the quality
     classifier's 256 hashed features the per-job codegen of that plan
     dominated: 315 s at sf0.001 through ``Pipeline.fit`` against ~25 s
     staged over a materialized LR input. The math is ``Pipeline.fit``'s;
     only the summation order over partitions can differ (|Δcoef| ≤ 1e-8).
     Nothing persisted here outlives the call."""
-    stages = build_churn_pipeline(cols).getStages()
-    with _sized(prepared, len(cols)) as sized:
-        prefix = Pipeline(stages=stages[:-1]).fit(sized)
-        lr_input = prefix.transform(sized).select("features_scaled", "label", "class_weight")
-        with _checkpointed(lr_input) as rows:
-            lr = stages[-1].fit(rows)
-    return PipelineModel(prefix.stages + [lr])
+    with job_description(prepared.sparkSession, "ml.fit"), _sized(prepared, len(cols)) as sized:
+        prefix = Pipeline(stages=_feature_stages(cols)).fit(sized)
+        last_input = prefix.transform(sized).select("features_scaled", "label", "class_weight")
+        with _checkpointed(last_input) as rows:
+            last = final.fit(rows)
+    return PipelineModel(prefix.stages + [last])
 
 
 # Reference CV search space (``pipeline/train.py:160-172``): 3-fold CV over
@@ -231,11 +272,14 @@ def train_churn_model(
     can exercise the CV path in every default test run while the full
     reference configuration remains the default. ``cv_metric`` mirrors the
     reference CLI's ``--metric aucroc|aucpr`` choice (``train.py:141,167``),
-    default aucpr as there."""
+    default aucpr as there.
+
+    Without CV the last stage is :func:`weighted_glr`; the CV grid's
+    ``elasticNetParam`` needs :func:`weighted_lr`, which GLR does not take."""
     cols = list(feature_cols or FEATURE_COLS)
     prepared = add_class_weight(cast_features(features, cols))
     if not cross_validate:
-        return fit_pipeline(prepared, cols)
+        return fit_pipeline(prepared, cols, weighted_glr())
     estimator = build_churn_pipeline(cols)
     lr = estimator.getStages()[-1]
     grid = (
@@ -261,7 +305,7 @@ def train_churn_model(
     # on the partition, so drawing them after the coalesce would move rows
     # between folds and could change the selected model.
     folded = prepared.withColumn("cv_fold", _cv_fold(seed, n_folds))
-    with _sized(folded, len(cols)) as sized:
+    with job_description(features.sparkSession, "ml.fit"), _sized(folded, len(cols)) as sized:
         return cv.fit(sized).bestModel
 
 
@@ -271,9 +315,11 @@ def _scores(
     """``custkey`` and ``label`` when present, then ``margin``, ``p_churn`` and
     ``prediction``, in the fitted stages' order of operations: a null or NaN
     feature takes its surrogate, then ``(x − mean)·scale``, a left-to-right sum
-    over the ``active`` coefficients and the intercept, so ``margin`` is the LR
-    stage's ``rawPrediction[1]`` bit for bit. p1 = 1 − 1/(1 + e^margin) as there,
-    but SQL's ``exp`` (``StrictMath``) can be an ulp off MLlib's ``Math.exp``."""
+    over the ``active`` coefficients and the intercept, so ``margin`` is the last
+    stage's ``rawPrediction[1]`` (LR) or link prediction (GLR) bit for bit.
+    p1 = 1 − 1/(1 + e^margin) as in LR; SQL's ``exp`` (``StrictMath``) can be
+    an ulp off MLlib's ``Math.exp``, and GLR's logit unlink 1/(1 + e^−margin)
+    a rounding or two off this form."""
     keep = [c for c in ("custkey", "label") if c in features.columns]
     cols = list(linear.feature_cols)
     z = [
@@ -306,8 +352,10 @@ def evaluated(
     model: PipelineModel, features: DataFrame, threshold: float = DEFAULT_THRESHOLD
 ) -> Iterator[tuple[DataFrame, dict[str, float]]]:
     """A labeled split scored once into a cached :func:`_scores` projection,
-    with the AUC-ROC and AUC-PR of its margin (reference ``eval.py:58-61``)."""
-    with cached(_scores(compile_churn_model(model), features, threshold)) as scored:
+    with the AUC-ROC and AUC-PR of its margin (reference ``eval.py:58-61``).
+    Jobs in the block, the caller's too, carry the description ``ml.evaluate``."""
+    scores = _scores(compile_churn_model(model), features, threshold)
+    with job_description(features.sparkSession, "ml.evaluate"), cached(scores) as scored:
         ev = BinaryClassificationEvaluator(rawPredictionCol="margin")
         metrics = {m: ev.setMetricName(m).evaluate(scored) for m in ("areaUnderROC", "areaUnderPR")}
         yield scored, metrics
@@ -331,9 +379,8 @@ def coefficients_frame(spark: SparkSession, model: PipelineModel) -> DataFrame:
     )
 
 
-_CHURN_STAGES = (
-    "ImputerModel", "VectorAssembler", "StandardScalerModel", "LogisticRegressionModel"
-)
+_FEATURE_STAGES = ("ImputerModel", "VectorAssembler", "StandardScalerModel")
+_LAST_STAGES = ("LogisticRegressionModel", "GeneralizedLinearRegressionModel")
 
 
 @dataclass(frozen=True)
@@ -359,22 +406,32 @@ def compile_churn_model(model: PipelineModel) -> LinearChurnModel:
     which every churn score is computed. Collecting the Imputer surrogates is
     its only Spark work (a local relation in a fitted or loaded model: no job
     on Spark 4.1). Raises ``ValueError`` for any stage list other than Imputer
-    (NaN missing) → VectorAssembler → StandardScaler(withMean, withStd) → binary LR."""
+    (NaN missing) → VectorAssembler → StandardScaler(withMean, withStd) → a
+    binary LR or a binomial/logit GLR without offset: both are the same
+    logistic model, read from the same ``coefficients`` and ``intercept``."""
     names = tuple(type(s).__name__ for s in model.stages)
-    if names != _CHURN_STAGES:
+    if names[:-1] != _FEATURE_STAGES or names[-1] not in _LAST_STAGES:
         raise ValueError(
-            f"not a churn pipeline: stages {list(names)}, expected {list(_CHURN_STAGES)}"
+            f"not a churn pipeline: stages {list(names)}, expected {list(_FEATURE_STAGES)}"
+            f" and then one of {list(_LAST_STAGES)}"
         )
-    imputer, assembler, scaler, lr = model.stages
+    imputer, assembler, scaler, last = model.stages
     if not math.isnan(imputer.getMissingValue()):
         raise ValueError("churn pipeline Imputer must treat NaN (the default) as missing")
     if not (scaler.getWithMean() and scaler.getWithStd()):
         raise ValueError("churn pipeline StandardScaler must have withMean and withStd set")
+    if isinstance(last, GeneralizedLinearRegressionModel):
+        # An unset link is the family's canonical one, logit for the binomial.
+        link = last.getLink() if last.isDefined(last.link) else "logit"
+        if (last.getFamily().lower(), link.lower()) != ("binomial", "logit") or last.isDefined(
+            last.offsetCol
+        ):
+            raise ValueError("churn pipeline GLR must be binomial with the logit link, no offset")
     raw_of = dict(zip(imputer.getOutputCols(), imputer.getInputCols()))
     cols = tuple(raw_of[c] for c in assembler.getInputCols())
     surrogate_row = imputer.surrogateDF.collect()[0]
     std = scaler.std.toArray()
-    w = lr.coefficients
+    w = last.coefficients
     active = w.indices if isinstance(w, SparseVector) else np.arange(len(w))
     return LinearChurnModel(
         feature_cols=cols,
@@ -383,7 +440,7 @@ def compile_churn_model(model: PipelineModel) -> LinearChurnModel:
         scale=np.divide(1.0, std, out=np.zeros_like(std), where=std != 0),
         active=np.asarray(active, dtype=np.int64),
         coefficients=np.asarray(w.values, dtype=float),
-        intercept=float(lr.intercept),
+        intercept=float(last.intercept),
     )
 
 

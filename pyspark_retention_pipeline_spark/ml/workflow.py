@@ -24,7 +24,14 @@ from pyspark.sql import functions as F
 
 from ..operators.retention import churn_feature_frame
 from ..operators.threshold import confusion_cells, pick_best, sweep_scores, with_metrics
-from .pipeline import cached, coefficients_frame, evaluated, score_frame, train_churn_model
+from .pipeline import (
+    cached,
+    coefficients_frame,
+    evaluated,
+    job_description,
+    score_frame,
+    train_churn_model,
+)
 
 SPLIT_WEIGHTS = [0.7, 0.15, 0.15]
 SEED = 42
@@ -136,7 +143,8 @@ def run_plots(
         .select("t", "precision", "recall", "f1")
         .orderBy("t")
     )
-    rows = [r.asDict() for r in curve.collect()]
+    with job_description(spark, "ml.score"):
+        rows = [r.asDict() for r in curve.collect()]
 
     csv_path = os.path.join(plot_dir, "threshold_curve.csv")
     with open(csv_path, "w") as f:

@@ -826,7 +826,7 @@ WITH RECURSIVE bounds AS (
          MAX(year(o_orderdate) * 12 + month(o_orderdate) - 1) AS hi
   FROM orders
 ), spine(m) AS (
-  SELECT lo FROM bounds
+  SELECT lo FROM bounds WHERE lo IS NOT NULL
   UNION ALL
   SELECT m + 1 FROM spine WHERE m < (SELECT hi FROM bounds)
 ), monthly AS (

@@ -194,14 +194,16 @@ def _train_quality(spark: SparkSession, sf_dir: str):
     """Session-cached quality-classifier fit, like ``_train``. The fit is
     ``ml.fit_pipeline``, which materializes the LR input so the 256-column
     featurization plan does not re-run per LBFGS job, and releases every
-    frame it caches. The one frame left cached is the session cache's
+    frame it caches. The last stage stays the LBFGS ``ml.weighted_lr``:
+    separable data (the planted corpus of the tests) has no unregularized
+    MLE, so IRLS would not converge on it. The one frame left cached is the session cache's
     feature frame, which scoring reads."""
-    from ..ml import add_class_weight, cast_features, fit_pipeline
+    from ..ml import add_class_weight, cast_features, fit_pipeline, weighted_lr
 
     def build():
         features = quality_feature_frame(spark, sf_dir).cache()
         prepared = add_class_weight(cast_features(features, _QC_FEATURE_COLS))
-        return fit_pipeline(prepared, _QC_FEATURE_COLS), features
+        return fit_pipeline(prepared, _QC_FEATURE_COLS, weighted_lr()), features
 
     return _session_cached(_QC_CACHE, spark, sf_dir, build)
 

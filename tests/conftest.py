@@ -47,7 +47,9 @@ def sf_dir() -> str:
 def sparse_churn_model(spark, sf_dir):
     """An L1-regularized churn model fitted with a constant feature, and the
     frame it was fitted on: most coefficients are exactly 0 (Spark stores
-    them as a sparse vector) and one scaler std is 0."""
+    them as a sparse vector) and one scaler std is 0. Its last stage is the
+    reference's LBFGS ``LogisticRegression`` (``build_churn_pipeline``), as
+    in a CV model or an artifact saved before the churn fit moved to IRLS."""
     from pyspark.ml.linalg import SparseVector
     from pyspark.sql import functions as F
 
@@ -58,6 +60,7 @@ def sparse_churn_model(spark, sf_dir):
     pipeline = ml.build_churn_pipeline()
     pipeline.getStages()[-1].setRegParam(0.02).setElasticNetParam(1.0)
     model = pipeline.fit(ml.add_class_weight(ml.cast_features(features, ml.FEATURE_COLS)))
+    assert type(model.stages[-1]).__name__ == "LogisticRegressionModel"
     coefficients = model.stages[-1].coefficients
     assert isinstance(coefficients, SparseVector) and 0 < coefficients.numNonzeros() < 8
     assert 0.0 in model.stages[2].std.toArray()

@@ -236,6 +236,27 @@ def test_recursive_month_spine_is_gap_free(spark, sf_dir):
     assert sum(r.n_orders for r in rows) == o.count()
 
 
+def test_recursive_month_spine_is_empty_on_empty_orders(spark):
+    """On an empty ``orders`` table both forms return no rows: the engine's
+    ``sequence()`` over NULL bounds and the oracle's recursive anchor, which
+    skips the NULL bound that MIN over no rows gives."""
+    import duckdb
+
+    from pyspark_retention_pipeline_spark.operators.analytics_extra import (
+        _RECURSIVE_SPINE_SQL,
+        _SEQUENCE_SPINE_SQL,
+    )
+
+    session = spark.newSession()  # its own temp views: the shared orders view stays
+    session.createDataFrame([], "o_orderdate date, o_totalprice double").createOrReplaceTempView(
+        "orders"
+    )
+    assert session.sql(_SEQUENCE_SPINE_SQL).collect() == []
+    con = duckdb.connect()
+    con.execute("CREATE TABLE orders (o_orderdate DATE, o_totalprice DOUBLE)")
+    assert con.execute(_RECURSIVE_SPINE_SQL).fetchall() == []
+
+
 def test_drift_monitors_match_first_principles(spark, sf_dir):
     """PSI and KS recomputed in plain python over the collected orders —
     guards against a shared misconception in both engines' SQL."""

@@ -17,6 +17,8 @@ from pyspark_retention_pipeline_spark.ml import (
     score_frame,
     score_records,
     train_churn_model,
+    weighted_glr,
+    weighted_lr,
 )
 from pyspark_retention_pipeline_spark.ml.pipeline import fit_partitions
 from pyspark_retention_pipeline_spark.operators.retention import churn_feature_frame
@@ -93,24 +95,76 @@ def test_fit_partitions_rule():
     assert fit_partitions(100, 3, 3999) == 2
 
 
-def test_fit_pipeline_matches_pipeline_fit(features):
-    """The staged, sized fit is ``Pipeline.fit``'s math: only the summation
-    order over partitions differs."""
-    import numpy as np
+def _iterations(stage) -> int:
+    summary = stage.summary
+    return summary.numIterations if hasattr(summary, "numIterations") else summary.totalIterations
 
-    staged = fit_pipeline(_prepared(features), FEATURE_COLS)
-    prepared = _prepared(features).cache()
+
+def test_fit_pipeline_matches_pipeline_fit(features):
+    """The staged, sized fit is ``Pipeline.fit``'s math with the same last
+    stage, IRLS or LBFGS: only the summation order over partitions differs."""
+    import numpy as np
+    from pyspark.ml import Pipeline
+
+    for final in (weighted_glr, weighted_lr):
+        staged = fit_pipeline(_prepared(features), FEATURE_COLS, final())
+        feature_stages = build_churn_pipeline(FEATURE_COLS).getStages()[:-1]
+        prepared = _prepared(features).cache()
+        try:
+            plain = Pipeline(stages=feature_stages + [final()]).fit(prepared)
+        finally:
+            prepared.unpersist()
+        a, b = staged.stages[-1], plain.stages[-1]
+        assert type(a) is type(b)
+        iterations = _iterations(a), _iterations(b)
+        assert iterations[0] == iterations[1]
+        assert np.max(np.abs(a.coefficients.toArray() - b.coefficients.toArray())) <= 1e-8
+        assert abs(a.intercept - b.intercept) <= 1e-8
+        auc_a = evaluate_model(staged, features)["areaUnderROC"]
+        auc_b = evaluate_model(plain, features)["areaUnderROC"]
+        assert abs(auc_a - auc_b) <= 1e-9
+
+
+@pytest.mark.parametrize("constant", [False, True])
+def test_irls_fit_agrees_with_lbfgs(features, constant):
+    """The churn model's IRLS fit converges before its iteration cap and
+    lands on the reference's LBFGS fit (``build_churn_pipeline``): on the
+    workflow's train split, coefficients within 1e-4 and test AUC within
+    1e-3, also with a constant feature (scaler std 0, a zero column)."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from pyspark_retention_pipeline_spark.ml.workflow import SEED, SPLIT_WEIGHTS
+
+    frame = features.withColumn("recent90_orders", F.lit(2.0)) if constant else features
+    train, _, test = frame.randomSplit(SPLIT_WEIGHTS, seed=SEED)
+    irls = train_churn_model(train)
+    glr = irls.stages[-1]
+    assert type(glr).__name__ == "GeneralizedLinearRegressionModel"
+    iterations = glr.summary.numIterations
+    assert iterations < glr.getMaxIter()
+    prepared = _prepared(train).cache()
     try:
-        plain = build_churn_pipeline(FEATURE_COLS).fit(prepared)
+        lbfgs = build_churn_pipeline(FEATURE_COLS).fit(prepared)
     finally:
         prepared.unpersist()
-    a, b = staged.stages[-1], plain.stages[-1]
-    assert a.summary.totalIterations == b.summary.totalIterations
-    assert np.max(np.abs(a.coefficients.toArray() - b.coefficients.toArray())) <= 1e-8
-    assert abs(a.intercept - b.intercept) <= 1e-8
-    auc_a = evaluate_model(staged, features)["areaUnderROC"]
-    auc_b = evaluate_model(plain, features)["areaUnderROC"]
-    assert abs(auc_a - auc_b) <= 1e-9
+    lr = lbfgs.stages[-1]
+    assert np.max(np.abs(glr.coefficients.toArray() - lr.coefficients.toArray())) <= 1e-4
+    assert abs(glr.intercept - lr.intercept) <= 1e-4
+    auc_irls = evaluate_model(irls, test)["areaUnderROC"]
+    auc_lbfgs = evaluate_model(lbfgs, test)["areaUnderROC"]
+    assert abs(auc_irls - auc_lbfgs) <= 1e-3
+
+
+def test_glr_other_than_binomial_logit_is_rejected(model):
+    """A GLR last stage compiles only as the logistic model."""
+    from pyspark.ml import PipelineModel
+
+    glr = model.stages[-1]
+    for extra in ({glr.family: "poisson"}, {glr.link: "probit"}, {glr.offsetCol: "offset"}):
+        other = PipelineModel(model.stages[:-1] + [glr.copy(extra)])
+        with pytest.raises(ValueError, match="binomial with the logit link"):
+            compile_churn_model(other)
 
 
 @pytest.mark.parametrize("source", ["churn", "quality"])
@@ -121,14 +175,15 @@ def test_fit_pipeline_releases_its_caches(spark, sf_dir, features, persistent_rd
     from pyspark_retention_pipeline_spark.operators import mlops
 
     if source == "churn":
-        frame, cols = features, FEATURE_COLS
+        frame, cols, final = features, FEATURE_COLS, weighted_glr()
     else:
         frame = mlops.quality_feature_frame(spark, sf_dir).cache()
         cols = [f"f{b}" for b in range(mlops.QC_BUCKETS)]
+        final = weighted_lr()
     frame.count()
     try:
         persisted, cached = persistent_rdds()
-        model = fit_pipeline(_prepared(frame, cols), cols)
+        model = fit_pipeline(_prepared(frame, cols), cols, final)
         after, _ = persistent_rdds()
         assert after <= persisted
         assert cached <= after
@@ -156,10 +211,14 @@ def _stages_run(spark, fn) -> list[list]:
     return out
 
 
+def _fit_churn(features, fitted: list):
+    fitted.append(fit_pipeline(_prepared(features), FEATURE_COLS, weighted_glr()))
+
+
 def test_fit_pipeline_runs_one_task_per_stage(spark, features):
     """At the default ``spark.sql.files.openCostInBytes`` the fixture (8
     partitions) fits in one partition: every stage after the cache-and-count
-    jobs runs a single task, LBFGS iterations included."""
+    jobs runs a single task, IRLS iterations included."""
     assert features.rdd.getNumPartitions() > 1
 
     def count_once():
@@ -168,17 +227,24 @@ def test_fit_pipeline_runs_one_task_per_stage(spark, features):
         cached.unpersist()
 
     n_count_jobs = len(_stages_run(spark, count_once))
-    jobs = _stages_run(spark, lambda: fit_pipeline(_prepared(features), FEATURE_COLS))
+    fitted = []
+    jobs = _stages_run(spark, lambda: _fit_churn(features, fitted))
     assert any(s.numTasks > 1 for job in jobs[:n_count_jobs] for s in job)
     after = [s for job in jobs[n_count_jobs:] for s in job]
-    assert len(after) >= 10  # Imputer, scaler, LR summary and the LBFGS iterations
+    # a least-squares solve for the initial model and one per IRLS iteration,
+    # after the Imputer, scaler and checkpoint stages
+    iterations = fitted[0].stages[-1].summary.numIterations
+    solves = [s for s in after if s.name.startswith("treeAggregate")]
+    assert len(solves) == 1 + iterations
+    assert len(after) > len(solves)
     assert {s.numTasks for s in after} == {1}
 
 
 def test_fit_pipeline_sizes_lr_input_to_open_cost_in_bytes(spark, features):
-    """With a small ``spark.sql.files.openCostInBytes`` the scaler and LR
-    passes read the computed k > 1 partitions: the first stage of every
-    ``treeAggregate`` job runs k tasks (its final-aggregate stage runs one)."""
+    """With a small ``spark.sql.files.openCostInBytes`` the IRLS passes read
+    the computed k > 1 partitions: the first stage of every ``treeAggregate``
+    job, one least-squares solve for the initial model and one per iteration,
+    runs k tasks (its final-aggregate stage runs one)."""
     key = "spark.sql.files.openCostInBytes"
     rows = features.count()
     original = spark.conf.get(key)
@@ -186,7 +252,8 @@ def test_fit_pipeline_sizes_lr_input_to_open_cost_in_bytes(spark, features):
     try:
         k = fit_partitions(rows, len(FEATURE_COLS), 4 << 10)  # Spark reads "4k" as 4096
         assert 1 < k < features.rdd.getNumPartitions()
-        jobs = _stages_run(spark, lambda: fit_pipeline(_prepared(features), FEATURE_COLS))
+        fitted = []
+        jobs = _stages_run(spark, lambda: _fit_churn(features, fitted))
     finally:
         spark.conf.set(key, original)
     passes = [
@@ -194,8 +261,27 @@ def test_fit_pipeline_sizes_lr_input_to_open_cost_in_bytes(spark, features):
         for job in jobs
         if any(s.name.startswith("treeAggregate") for s in job)
     ]
-    assert len(passes) >= 10
+    iterations = fitted[0].stages[-1].summary.numIterations
+    assert len(passes) == 1 + iterations
     assert {s.numTasks for s in passes} == {k}
+
+
+def test_fit_jobs_carry_the_ml_fit_description(spark, features):
+    """Every job of a fit carries the description ``ml.fit``; the job group
+    and its description are the caller's again afterwards."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"ml-test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "ml test")
+    _fit_churn(features, [])
+    assert sc.getLocalProperty("spark.job.description") == "ml test"
+    assert sc.getLocalProperty("spark.jobGroup.id") == group
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert jobs
+    assert {store.job(j).description().get() for j in jobs} == {"ml.fit"}
 
 
 @pytest.fixture(scope="module")
@@ -211,34 +297,50 @@ def cv_churn_model(features):
     return model, features
 
 
+def _mllib_scores(fitted, frame):
+    """MLlib's ``transform`` of ``frame`` with its margin as ``mllib_margin``
+    and P(churn) as ``mllib_p``: ``rawPrediction[1]`` and ``probability[1]``
+    of an LR stage, the link prediction and ``prediction`` of a GLR stage."""
+    from pyspark.ml import PipelineModel
+    from pyspark.ml.functions import vector_to_array
+    from pyspark.sql import functions as F
+
+    last = fitted.stages[-1]
+    if type(last).__name__ == "GeneralizedLinearRegressionModel":
+        linked = last.copy({last.linkPredictionCol: "mllib_margin"})
+        out = PipelineModel(fitted.stages[:-1] + [linked]).transform(frame)
+        return out.withColumn("mllib_p", F.col("prediction"))
+    return fitted.transform(frame).select(
+        "*",
+        vector_to_array("rawPrediction")[1].alias("mllib_margin"),
+        vector_to_array("probability")[1].alias("mllib_p"),
+    )
+
+
 @pytest.mark.parametrize("which", ["fit", "sparse", "cv"])
 def test_compiled_scores_match_mllib(request, model, features, which):
     """The compiled projection against MLlib's ``transform``, which stays the
-    reference: ``margin`` is ``rawPrediction[1]`` exactly, the AUCs are the
-    evaluator's on ``rawPrediction`` exactly, ``p_churn`` is within 4.5e-16
-    of ``probability[1]`` (SQL's ``exp`` against ``Math.exp``), and no
-    prediction flips at any of the sweep's 101 thresholds."""
+    reference, for the IRLS churn fit (a GLR stage) and two LR stages:
+    ``margin`` is MLlib's margin exactly, the AUCs are the evaluator's on it
+    exactly, ``p_churn`` is within 4.5e-16 of MLlib's P(churn) (SQL's ``exp``
+    against ``Math.exp``; GLR's unlink 1/(1 + e^−m) against 1 − 1/(1 + e^m)),
+    and no prediction flips at any of the sweep's 101 thresholds."""
     from pyspark.ml.evaluation import BinaryClassificationEvaluator
-    from pyspark.ml.functions import vector_to_array
 
     from pyspark_retention_pipeline_spark.ml.pipeline import _scores
 
     if which == "fit":
         fitted, frame = model, features
+        assert type(fitted.stages[-1]).__name__ == "GeneralizedLinearRegressionModel"
     else:
         fitted, frame = request.getfixturevalue(f"{which}_churn_model")
-    reference = fitted.transform(cast_features(frame, FEATURE_COLS))
-    want = {
-        m: BinaryClassificationEvaluator(metricName=m).evaluate(reference)
-        for m in ("areaUnderROC", "areaUnderPR")
-    }
+        assert type(fitted.stages[-1]).__name__ == "LogisticRegressionModel"
+    reference = _mllib_scores(fitted, cast_features(frame, FEATURE_COLS))
+    ev = BinaryClassificationEvaluator(rawPredictionCol="mllib_margin")
+    want = {m: ev.setMetricName(m).evaluate(reference) for m in ("areaUnderROC", "areaUnderPR")}
     assert evaluate_model(fitted, frame) == want
-    mllib = reference.select(
-        "custkey",
-        vector_to_array("rawPrediction")[1].alias("margin"),
-        vector_to_array("probability")[1].alias("p_churn"),
-    )
-    ref = {r.custkey: (r.margin, r.p_churn) for r in mllib.collect()}
+    mllib = reference.select("custkey", "mllib_margin", "mllib_p")
+    ref = {r.custkey: (r.mllib_margin, r.mllib_p) for r in mllib.collect()}
     scored = _scores(compile_churn_model(fitted), frame)
     got = {r.custkey: (r.margin, r.p_churn) for r in scored.collect()}
     assert got.keys() == ref.keys() and len(got) == frame.count()
@@ -257,11 +359,9 @@ def test_evaluate_model_scores_the_cast_frame(spark, model, features):
     frame ran 12: its label-count aggregate and broadcast)."""
     from pyspark.ml.evaluation import BinaryClassificationEvaluator
 
-    weighted = model.transform(_prepared(features))
-    want = {
-        m: BinaryClassificationEvaluator(metricName=m).evaluate(weighted)
-        for m in ("areaUnderROC", "areaUnderPR")
-    }
+    weighted = _mllib_scores(model, _prepared(features))
+    ev = BinaryClassificationEvaluator(rawPredictionCol="mllib_margin")
+    want = {m: ev.setMetricName(m).evaluate(weighted) for m in ("areaUnderROC", "areaUnderPR")}
     got = {}
     jobs = _stages_run(spark, lambda: got.update(evaluate_model(model, features)))
     assert got == want

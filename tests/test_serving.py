@@ -190,6 +190,17 @@ def test_loaded_scorer_matches_in_memory(spark, scorer, tmp_path):
     assert loaded.predict(payloads) == scorer.predict(payloads)
 
 
+def test_loaded_lr_artifact_predicts_as_before(spark, sparse_scorer, tmp_path):
+    """A saved pipeline whose last stage is an LBFGS LR, as every artifact
+    fitted before the churn fit moved to IRLS, loads and predicts exactly as
+    the in-memory model does."""
+    sparse_scorer.model.write().save(str(tmp_path / "model"))
+    loaded = ChurnScorer.load(spark, str(tmp_path))
+    assert type(loaded.model.stages[-1]).__name__ == "LogisticRegressionModel"
+    payloads = [{}, {c: float(i + 1) for i, c in enumerate(FEATURE_COLS)}, {"total_qty": "nan"}]
+    assert loaded.predict(payloads) == sparse_scorer.predict(payloads)
+
+
 def test_non_churn_pipeline_is_rejected(scorer):
     tail = PipelineModel(stages=scorer.model.stages[1:])
     with pytest.raises(ValueError, match="VectorAssembler.*StandardScalerModel"):
