@@ -196,8 +196,8 @@ def _train_quality(spark: SparkSession, sf_dir: str):
     featurization plan does not re-run per LBFGS job, and releases every
     frame it caches. The last stage stays the LBFGS ``ml.weighted_lr``:
     separable data (the planted corpus of the tests) has no unregularized
-    MLE, so IRLS would not converge on it. The one frame left cached is the session cache's
-    feature frame, which scoring reads."""
+    MLE, so IRLS would not converge on it. The one frame left cached is the
+    session cache's feature frame, which scoring reads."""
     from ..ml import add_class_weight, cast_features, fit_pipeline, weighted_lr
 
     def build():

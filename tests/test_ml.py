@@ -116,8 +116,7 @@ def test_fit_pipeline_matches_pipeline_fit(features):
             prepared.unpersist()
         a, b = staged.stages[-1], plain.stages[-1]
         assert type(a) is type(b)
-        iterations = _iterations(a), _iterations(b)
-        assert iterations[0] == iterations[1]
+        assert _iterations(a) == _iterations(b)
         assert np.max(np.abs(a.coefficients.toArray() - b.coefficients.toArray())) <= 1e-8
         assert abs(a.intercept - b.intercept) <= 1e-8
         auc_a = evaluate_model(staged, features)["areaUnderROC"]
