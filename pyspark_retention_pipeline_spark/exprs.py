@@ -20,6 +20,18 @@ def ts_lit(value: str) -> Column:
     return F.to_timestamp_ntz(F.lit(value))
 
 
+def sql_double(value: float) -> str:
+    """SQL text for the double ``value``, exactly: its shortest round-trip
+    ``repr`` cast from a string (a bare ``0.1`` in Spark SQL is a DECIMAL).
+    Spark's cast reads ``inf``, ``-inf`` and ``nan`` too."""
+    return f"CAST('{float(value)!r}' AS DOUBLE)"
+
+
+def sql_name(name: str) -> str:
+    """``name`` as a back-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def money_sum(col: Column | str) -> Column:
     """SUM of a 2-decimal money column, rounded to recover the exact decimal
     value regardless of partial-aggregation order. (Safe only for inputs that

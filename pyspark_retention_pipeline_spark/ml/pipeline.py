@@ -19,9 +19,11 @@ launches as few tasks as the data needs.
 
 The churn model has one scoring definition, the :class:`LinearChurnModel`
 that :func:`compile_churn_model` reads from the fitted stages (either last
-stage): :func:`_scores` projects it over a DataFrame as Column expressions,
-and :func:`score_records` is its numpy form, which scores payloads on the
-driver with no Spark job.
+stage): :func:`_scores` projects it over a DataFrame as one ``selectExpr`` of
+SQL text, and :func:`score_records` is its numpy form, which scores payloads
+on the driver with no Spark job. Both AUCs of a scored split are one
+``operators.threshold.auc_metrics`` query over its margins, in place of two
+``BinaryClassificationEvaluator`` passes.
 """
 
 from __future__ import annotations
@@ -44,6 +46,8 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..constants import DEFAULT_THRESHOLD
+from ..exprs import sql_double, sql_name
+from ..operators.threshold import auc_metrics
 
 # The 8 engineered features of the reference model (FIXTURES.md §1.2; feature
 # selection rule = all columns except the key and the label, train.py:35-37).
@@ -319,23 +323,28 @@ def _scores(
     stage's ``rawPrediction[1]`` (LR) or link prediction (GLR) bit for bit.
     p1 = 1 − 1/(1 + e^margin) as in LR; SQL's ``exp`` (``StrictMath``) can be
     an ulp off MLlib's ``Math.exp``, and GLR's logit unlink 1/(1 + e^−margin)
-    a rounding or two off this form."""
-    keep = [c for c in ("custkey", "label") if c in features.columns]
-    cols = list(linear.feature_cols)
-    z = [
-        (F.when(F.isnull(c) | F.isnan(c), float(s)).otherwise(F.col(c)) - float(m)) * float(k)
-        for c, s, m, k in zip(cols, linear.surrogates, linear.mean, linear.scale)
-    ]
-    margin = F.lit(0.0)
-    for j, w in zip(linear.active, linear.coefficients):
-        margin = margin + z[j] * float(w)
-    margin = margin + linear.intercept
-    p1 = 1.0 - 1.0 / (1.0 + F.exp(margin))
-    return cast_features(features, cols).select(
+    a rounding or two off this form.
+
+    The projection is one ``selectExpr`` of SQL text, every double written
+    exactly (:func:`~pyspark_retention_pipeline_spark.exprs.sql_double`): one
+    parse on the JVM where building the same tree as Columns took about 150
+    py4j calls."""
+    keep = [sql_name(c) for c in ("custkey", "label") if c in features.columns]
+    z = []
+    for c, s, m, k in zip(linear.feature_cols, linear.surrogates, linear.mean, linear.scale):
+        x = f"CAST({sql_name(c)} AS DOUBLE)"
+        z.append(
+            f"(CASE WHEN isnull({x}) OR isnan({x}) THEN {sql_double(s)} ELSE {x} END"
+            f" - {sql_double(m)}) * {sql_double(k)}"
+        )
+    terms = [f"({z[j]}) * {sql_double(w)}" for j, w in zip(linear.active, linear.coefficients)]
+    margin = " + ".join([sql_double(0.0), *terms, sql_double(linear.intercept)])
+    one = sql_double(1.0)
+    return features.selectExpr(
         *keep,
-        margin.alias("margin"),
-        p1.alias("p_churn"),
-        (p1 >= F.lit(threshold)).cast("double").alias("prediction"),
+        f"{margin} AS margin",
+        f"{one} - {one} / ({one} + exp(margin)) AS p_churn",
+        f"CAST(p_churn >= {sql_double(threshold)} AS DOUBLE) AS prediction",
     )
 
 
@@ -352,19 +361,26 @@ def evaluated(
     model: PipelineModel, features: DataFrame, threshold: float = DEFAULT_THRESHOLD
 ) -> Iterator[tuple[DataFrame, dict[str, float]]]:
     """A labeled split scored once into a cached :func:`_scores` projection,
-    with the AUC-ROC and AUC-PR of its margin (reference ``eval.py:58-61``).
-    Jobs in the block, the caller's too, carry the description ``ml.evaluate``."""
+    for a caller that reads it again, with the AUC-ROC and AUC-PR of its
+    margin (reference ``eval.py:58-61``; :func:`auc_metrics`). Jobs in the
+    block, the caller's too, carry the description ``ml.evaluate``."""
     scores = _scores(compile_churn_model(model), features, threshold)
     with job_description(features.sparkSession, "ml.evaluate"), cached(scores) as scored:
-        ev = BinaryClassificationEvaluator(rawPredictionCol="margin")
-        metrics = {m: ev.setMetricName(m).evaluate(scored) for m in ("areaUnderROC", "areaUnderPR")}
-        yield scored, metrics
+        yield scored, _aucs(scored)
 
 
 def evaluate_model(model: PipelineModel, features: DataFrame) -> dict[str, float]:
-    """AUC-ROC / AUC-PR on a labeled split (:func:`evaluated`)."""
-    with evaluated(model, features) as (_, metrics):
-        return metrics
+    """AUC-ROC / AUC-PR on a labeled split: one :func:`auc_metrics` query over
+    the :func:`_scores` projection, nothing cached. Its jobs carry the
+    description ``ml.evaluate``."""
+    with job_description(features.sparkSession, "ml.evaluate"):
+        return _aucs(_scores(compile_churn_model(model), features))
+
+
+def _aucs(scored: DataFrame) -> dict[str, float]:
+    """The AUCs of a :func:`_scores` projection, ranked on ``margin``:
+    saturated margins tie in probability, not in margin."""
+    return auc_metrics(scored.selectExpr("label", "margin AS score")).collect()[0].asDict()
 
 
 def coefficients_frame(spark: SparkSession, model: PipelineModel) -> DataFrame:

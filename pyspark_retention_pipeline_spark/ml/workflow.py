@@ -8,7 +8,11 @@ Scale fixes over the reference flagged in SURVEY §4:
   * the threshold search calls the single-pass sweep operator
     (operators/threshold.py), not 303 jobs;
   * evaluation's confusion matrix is one conditional aggregation over the
-    sweep's confusion cells, not 4 filter+count actions (``eval.py:74-82``).
+    sweep's confusion cells, not 4 filter+count actions (``eval.py:74-82``);
+  * each split is scored once into a cached projection
+    (``ml.pipeline.evaluated``) that both AUCs, one window query
+    (``operators.threshold.auc_metrics``), and the sweep or the confusion
+    cells read.
 
 Every frame a step caches is released before the step returns, and no other.
 """
@@ -78,7 +82,7 @@ def _sweep_best_threshold(
     ascending thresholds keeps the LOWEST t at the max metric value."""
     if thr_metric not in ("f1", "recall", "precision"):
         raise ValueError(f"unknown thr_metric {thr_metric!r}")
-    sweep = sweep_scores(scored.select("label", F.col("p_churn").alias("score")))
+    sweep = sweep_scores(scored.selectExpr("label", "p_churn AS score"))
     best = pick_best(with_metrics(sweep), thr_metric).collect()[0]
     return {
         "best_threshold": best["t"],
@@ -177,8 +181,7 @@ def run_eval(spark: SparkSession, out_dir: str) -> dict[str, float]:
 
     test = spark.read.parquet(os.path.join(out_dir, "test"))
     with evaluated(model, test, threshold) as (scored, metrics):
-        hit = F.col("prediction") == 1.0
-        cm = scored.agg(*confusion_cells(hit, F.col("label") == 1)).collect()[0]
+        cm = scored.agg(*confusion_cells("prediction = 1.0", "label = 1")).collect()[0]
     metrics.update({k: int(cm[k]) for k in ("tp", "fp", "fn", "tn")})
     metrics["threshold"] = threshold
     return metrics

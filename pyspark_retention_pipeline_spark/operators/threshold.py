@@ -8,6 +8,9 @@ array against each scored row (a map-side expansion, no join), then a single
 conditional aggregation groups by threshold. At 100 TB this is one scan + one
 101-group shuffle instead of 303 scans.
 
+Both AUCs are one query too (:func:`auc_metrics`): a window over the distinct
+scores, where MLlib's evaluator runs about five jobs per metric.
+
 Scores are deterministic key-derived pseudo-probabilities so the DuckDB oracle
 reproduces them exactly; the ML tier plugs real model scores into the same
 operators (see operators/mlops.py).
@@ -19,6 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..constants import CUTOFF, LOOKAHEAD_END
+from ..exprs import sql_double
 from ..registry import query
 
 # Shared CTE: churn labels + key-derived score, identical to joins.label_antijoin.
@@ -68,6 +72,48 @@ _METRICS_SELECT = """
 """
 
 
+# Both AUCs of a (label, score) relation ``{scored}`` in one query, as
+# MLlib's BinaryClassificationMetrics computes them without binning: one
+# curve point per distinct score, descending, from cumulative counts (a
+# window over the distinct scores), each point's predecessor from the counts
+# before its group; the trapezoids (x2 − x1)(y2 + y1)/2 summed. ROC runs
+# from (0, 0) to (1, 1); PR starts at (0, precision at the first score).
+# The evaluator's guards: FPR and recall are 0 when their class is empty,
+# precision is 1 when nothing is predicted positive.
+_AUC_SELECT = """
+    SELECT SUM((fpr - fpr0) * (tpr + tpr0) / 2) + (1 - MAX(fpr)) * (1 + MAX(tpr)) / 2
+             AS areaUnderROC,
+           SUM((tpr - tpr0) * (prec + CASE WHEN tp0 + fp0 = 0 THEN prec
+                                           ELSE tp0 / (tp0 + fp0) END) / 2)
+             AS areaUnderPR
+    FROM (
+      SELECT tp0, fp0,
+             CASE WHEN n = 0 THEN 0 ELSE fp / n END AS fpr,
+             CASE WHEN n = 0 THEN 0 ELSE fp0 / n END AS fpr0,
+             CASE WHEN p = 0 THEN 0 ELSE tp / p END AS tpr,
+             CASE WHEN p = 0 THEN 0 ELSE tp0 / p END AS tpr0,
+             CASE WHEN tp + fp = 0 THEN 1 ELSE tp / (tp + fp) END AS prec
+      FROM (
+        SELECT tp, fp, tp - pos AS tp0, fp - neg AS fp0, p, n
+        FROM (
+          SELECT pos, neg,
+                 CAST(SUM(pos) OVER w AS DOUBLE) AS tp,
+                 CAST(SUM(neg) OVER w AS DOUBLE) AS fp,
+                 CAST(SUM(pos) OVER () AS DOUBLE) AS p,
+                 CAST(SUM(neg) OVER () AS DOUBLE) AS n
+          FROM (
+            SELECT score,
+                   SUM(CASE WHEN label = 1 THEN 1 ELSE 0 END) AS pos,
+                   SUM(CASE WHEN label = 1 THEN 0 ELSE 1 END) AS neg
+            FROM {scored} GROUP BY score
+          ) AS g
+          WINDOW w AS (ORDER BY score DESC ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        ) AS c
+      ) AS d
+    ) AS pts
+"""
+
+
 def _scored_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .joins import label_antijoin
 
@@ -77,29 +123,26 @@ def _scored_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def confusion_cells(hit: Column, pos: Column) -> list[Column]:
+def confusion_cells(hit: str, pos: str) -> list[Column]:
     """The four confusion cells tp/fp/fn/tn as conditional-sum aggregates of
-    a predicted-positive predicate ``hit`` and a true-positive one ``pos``."""
-    return [
-        F.sum(F.when(hit & pos, 1).otherwise(0)).alias("tp"),
-        F.sum(F.when(hit & ~pos, 1).otherwise(0)).alias("fp"),
-        F.sum(F.when(~hit & pos, 1).otherwise(0)).alias("fn"),
-        F.sum(F.when(~hit & ~pos, 1).otherwise(0)).alias("tn"),
-    ]
+    a predicted-positive predicate ``hit`` and a true-positive one ``pos``,
+    both SQL text."""
+    miss, neg = f"NOT ({hit})", f"NOT ({pos})"
+    cells = (("tp", hit, pos), ("fp", hit, neg), ("fn", miss, pos), ("tn", miss, neg))
+    return [F.expr(f"SUM(IF(({h}) AND ({p}), 1, 0)) AS {name}") for name, h, p in cells]
 
 
 def sweep_scores(scored: DataFrame, n_steps: int = 100) -> DataFrame:
     """(label, score) frame → confusion cells per threshold t in {0..n}/n in
     ONE aggregation pass (the reference's 303-job loop collapsed; shared by
     the synthetic-score query below and the real-model sweeps in
-    operators/mlops.py and ml/workflow.py)."""
-    expanded = scored.select(
-        "label",
-        "score",
-        F.explode(F.sequence(F.lit(0), F.lit(n_steps))).alias("i"),
-    ).withColumn("t", F.col("i").cast("double") / F.lit(float(n_steps)))
-    hit = F.col("score") >= F.col("t")
-    return expanded.groupBy("t").agg(*confusion_cells(hit, F.col("label") == 1))
+    operators/mlops.py and ml/workflow.py): one projection explodes the
+    threshold indices, one aggregation groups by t."""
+    t = f"CAST(i AS DOUBLE) / {sql_double(n_steps)}"
+    expanded = scored.selectExpr("label", "score", f"explode(sequence(0, {int(n_steps)})) AS i")
+    return expanded.groupBy(F.expr(t).alias("t")).agg(
+        *confusion_cells(f"score >= {t}", "label = 1")
+    )
 
 
 @query("threshold_sweep", oracle=_SCORED_CTE + _SWEEP_SELECT, tags=("M9", "A7"))
@@ -109,17 +152,13 @@ def threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def with_metrics(sweep: DataFrame) -> DataFrame:
-    """Add precision/recall/F1 columns to a confusion-cell sweep."""
-    precision = F.col("tp") / F.greatest(F.col("tp") + F.col("fp"), F.lit(1))
-    recall = F.col("tp") / F.greatest(F.col("tp") + F.col("fn"), F.lit(1))
-    return (
-        sweep.withColumn("precision", precision)
-        .withColumn("recall", recall)
-        .withColumn(
-            "f1",
-            (2 * F.col("precision") * F.col("recall"))
-            / (F.col("precision") + F.col("recall") + F.lit(1e-9)),
-        )
+    """Add precision/recall/F1 columns to a confusion-cell sweep, in one
+    projection."""
+    return sweep.selectExpr(
+        "*",
+        "tp / GREATEST(tp + fp, 1) AS precision",
+        "tp / GREATEST(tp + fn, 1) AS recall",
+        f"2 * precision * recall / (precision + recall + {sql_double(1e-9)}) AS f1",
     )
 
 
@@ -161,6 +200,40 @@ def best_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pick_best(curve.select("t", "precision", "recall", "f1"), "f1")
 
 
+def auc_metrics(scored: DataFrame) -> DataFrame:
+    """(label, score) frame → one row of ``areaUnderROC`` and ``areaUnderPR``,
+    the values of MLlib's ``BinaryClassificationEvaluator`` on the same
+    scores (within float summation order), in one query: one aggregation by
+    score and one window over the distinct scores, in a single partition.
+
+    The evaluator is exact only below 2000 distinct scores: from there its
+    default ``numBins=1000`` merges runs of scores within each partition, so
+    its curve depends on the partitioning. This operator stays exact at
+    any size. SQL groups -0.0 with 0.0, where the evaluator, keyed by boxed
+    doubles, draws two points."""
+    return scored.sparkSession.sql(_AUC_SELECT, scored=scored)
+
+
+# Order-dependent double sums on both sides, rounded at a fixed scale
+# (registry convention).
+@query(
+    "auc_metrics",
+    oracle=_SCORED_CTE
+    + "SELECT ROUND(areaUnderROC, 12) AS areaUnderROC, ROUND(areaUnderPR, 12) AS areaUnderPR"
+    + " FROM ("
+    + _AUC_SELECT.format(scored="scored")
+    + ") AS aucs",
+    tags=("M8",),
+)
+def auc_metrics_query(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Both AUCs of the key-derived scores in one window query (100 distinct
+    scores, heavily tied; :func:`auc_metrics`)."""
+    return auc_metrics(_scored_labels(spark, sf_dir)).select(
+        F.round("areaUnderROC", 12).alias("areaUnderROC"),
+        F.round("areaUnderPR", 12).alias("areaUnderPR"),
+    )
+
+
 @query(
     "confusion_matrix",
     oracle=_SCORED_CTE
@@ -184,11 +257,7 @@ def confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation — the reference runs 4 filter+count jobs plus a recount
     (``pipeline/eval.py:74-82``); this is the §4-mandated single-pass rewrite."""
     scored = _scored_labels(spark, sf_dir)
-    hit = F.col("score") >= F.lit(0.46)
-    pos = F.col("label") == 1
     return scored.agg(
-        *confusion_cells(hit, pos),
-        (F.sum(F.when(pos, 1).otherwise(0)) / F.greatest(F.count("*"), F.lit(1))).alias(
-            "pos_rate"
-        ),
+        *confusion_cells(f"score >= {sql_double(0.46)}", "label = 1"),
+        F.expr("SUM(IF(label = 1, 1, 0)) / GREATEST(COUNT(*), 1) AS pos_rate"),
     )

@@ -65,6 +65,8 @@ _REGISTRY: dict[str, Query] = {}
 # and union_by_name) and 21 of the r10 tier in (round, name) order from
 # ann_recall_report through intradoc_dedup_rewrite, moving the
 # staleness floor to r10.
+# Later, auc_metrics (both AUCs in one window query) joined the
+# never-verified tier and pushed intradoc_dedup_rewrite out of the window.
 # Further new or plan-changed queries re-derive this window (update
 # CHANGED in the script config, re-run, re-paste).
 _FRONT: tuple[str, ...] = (
@@ -73,6 +75,7 @@ _FRONT: tuple[str, ...] = (
     "theilsen_revenue_trend",
     "quality_classifier_scores",
     "retrieval_graded_metrics",
+    "auc_metrics",
     "unigram_lm_em_rounds",
     "rrf_fusion",
     "weighted_score_fusion",
@@ -117,7 +120,6 @@ _FRONT: tuple[str, ...] = (
     "group_aware_split",
     "hash_sample",
     "incremental_dedup",
-    "intradoc_dedup_rewrite",
 )
 
 

@@ -321,7 +321,8 @@ def test_compiled_scores_match_mllib(request, model, features, which):
     """The compiled projection against MLlib's ``transform``, which stays the
     reference, for the IRLS churn fit (a GLR stage) and two LR stages:
     ``margin`` is MLlib's margin exactly, the AUCs are the evaluator's on it
-    exactly, ``p_churn`` is within 4.5e-16 of MLlib's P(churn) (SQL's ``exp``
+    within 1e-12 (their trapezoids summed in another order), ``p_churn`` is
+    within 4.5e-16 of MLlib's P(churn) (SQL's ``exp``
     against ``Math.exp``; GLR's unlink 1/(1 + e^−m) against 1 − 1/(1 + e^m)),
     and no prediction flips at any of the sweep's 101 thresholds."""
     from pyspark.ml.evaluation import BinaryClassificationEvaluator
@@ -337,7 +338,9 @@ def test_compiled_scores_match_mllib(request, model, features, which):
     reference = _mllib_scores(fitted, cast_features(frame, FEATURE_COLS))
     ev = BinaryClassificationEvaluator(rawPredictionCol="mllib_margin")
     want = {m: ev.setMetricName(m).evaluate(reference) for m in ("areaUnderROC", "areaUnderPR")}
-    assert evaluate_model(fitted, frame) == want
+    got = evaluate_model(fitted, frame)
+    assert got.keys() == want.keys()
+    assert all(abs(got[m] - want[m]) <= 1e-12 for m in want), (got, want)
     mllib = reference.select("custkey", "mllib_margin", "mllib_p")
     ref = {r.custkey: (r.mllib_margin, r.mllib_p) for r in mllib.collect()}
     scored = _scores(compile_churn_model(fitted), frame)
@@ -353,9 +356,9 @@ def test_compiled_scores_match_mllib(request, model, features, which):
 
 def test_evaluate_model_scores_the_cast_frame(spark, model, features):
     """``evaluate_model`` scores the cast split without ``class_weight``,
-    which neither evaluator reads: the AUCs equal the class-weighted
-    frame's to the bit, and a call runs 10 jobs (scoring the weighted
-    frame ran 12: its label-count aggregate and broadcast)."""
+    which neither AUC reads: its AUCs equal the evaluator's on the
+    class-weighted frame within 1e-12, from one ``auc_metrics`` query of at
+    most 3 jobs (both evaluators ran 10; scoring the weighted frame 12)."""
     from pyspark.ml.evaluation import BinaryClassificationEvaluator
 
     weighted = _mllib_scores(model, _prepared(features))
@@ -363,8 +366,22 @@ def test_evaluate_model_scores_the_cast_frame(spark, model, features):
     want = {m: ev.setMetricName(m).evaluate(weighted) for m in ("areaUnderROC", "areaUnderPR")}
     got = {}
     jobs = _stages_run(spark, lambda: got.update(evaluate_model(model, features)))
-    assert got == want
-    assert len(jobs) == 10
+    assert got.keys() == want.keys()
+    assert all(abs(got[m] - want[m]) <= 1e-12 for m in want), (got, want)
+    assert len(jobs) <= 3
+
+
+def test_sweep_best_threshold_runs_two_jobs(spark, model, features):
+    """The 101-threshold sweep and its pick run at most 2 jobs: the
+    aggregation's shuffle stage and the result."""
+    from pyspark_retention_pipeline_spark.ml.workflow import _sweep_best_threshold
+
+    best = {}
+    jobs = _stages_run(
+        spark, lambda: best.update(_sweep_best_threshold(score_frame(model, features)))
+    )
+    assert 0.0 <= best["best_threshold"] <= 1.0
+    assert len(jobs) <= 2
 
 
 def test_session_cache_builds_once_and_evicts_other_apps():

@@ -55,6 +55,76 @@ def test_threshold_metrics_guard_division(spark):
     assert row["precision"] == 0.0 and row["recall"] == 0.0 and row["f1"] == 0.0
 
 
+def _evaluator_aucs(frame):
+    from pyspark.ml.evaluation import BinaryClassificationEvaluator
+
+    ev = BinaryClassificationEvaluator(rawPredictionCol="score")
+    return {m: ev.setMetricName(m).evaluate(frame) for m in ("areaUnderROC", "areaUnderPR")}
+
+
+def test_auc_metrics_match_the_evaluator(spark):
+    """Both AUCs equal ``BinaryClassificationEvaluator``'s within 1e-12 on
+    heavily tied scores and on one-class splits, where the evaluator's
+    guards hold (FPR or recall 0 for an empty class): no division by zero
+    under ANSI mode."""
+    import numpy as np
+
+    from pyspark_retention_pipeline_spark.operators.threshold import auc_metrics
+
+    rng = np.random.default_rng(3)
+    # ~50 distinct values; + 0.0 turns -0.0 into 0.0, one score in SQL but two
+    # curve points for the evaluator, whose RDD keys are boxed doubles.
+    scores = np.round(rng.normal(size=400), 1) + 0.0
+    labels = (rng.random(400) < 1 / (1 + np.exp(-2 * scores))).astype(float)
+    tied = spark.createDataFrame(
+        [(float(y), float(x)) for y, x in zip(labels, scores)], "label double, score double"
+    ).repartition(3)
+    frames = {
+        "tied": tied,
+        "negatives": tied.selectExpr("0.0D AS label", "score"),
+        "positives": tied.selectExpr("1.0D AS label", "score"),
+    }
+    for name, frame in frames.items():
+        got = auc_metrics(frame).collect()[0].asDict()
+        want = _evaluator_aucs(frame)
+        assert got.keys() == want.keys()
+        for metric, value in want.items():
+            assert abs(got[metric] - value) <= 1e-12, (name, metric, got, want)
+    assert auc_metrics(frames["negatives"]).collect()[0].asDict() == {
+        "areaUnderROC": 0.0,
+        "areaUnderPR": 0.0,
+    }
+
+
+def test_auc_metrics_stays_exact_beyond_the_evaluators_bins(spark):
+    """At 5000 distinct scores, where the evaluator bins its curve, the
+    operator is the exact AUC: ROC the tie-free Mann–Whitney statistic, PR
+    the trapezoid over every score, both within 1e-12 of numpy."""
+    import numpy as np
+
+    from pyspark_retention_pipeline_spark.operators.threshold import auc_metrics
+
+    rng = np.random.default_rng(11)
+    scores = rng.normal(size=5000)
+    labels = (rng.random(5000) < 1 / (1 + np.exp(-scores))).astype(float)
+    frame = spark.createDataFrame(
+        [(float(y), float(x)) for y, x in zip(labels, scores)], "label double, score double"
+    )
+    got = auc_metrics(frame).collect()[0]
+
+    order = np.argsort(-scores)
+    y = labels[order]
+    tp, fp = np.cumsum(y), np.cumsum(1 - y)
+    n_pos, n_neg = tp[-1], fp[-1]
+    ranks = np.empty(len(scores))
+    ranks[np.argsort(scores)] = np.arange(1, len(scores) + 1)
+    roc = (ranks[labels == 1].sum() - n_pos * (n_pos + 1) / 2) / (n_pos * n_neg)
+    recall, precision = tp / n_pos, tp / (tp + fp)
+    pr = np.sum(np.diff(np.r_[0.0, recall]) * (precision + np.r_[precision[0], precision[:-1]]) / 2)
+    assert abs(got["areaUnderROC"] - roc) <= 1e-12
+    assert abs(got["areaUnderPR"] - pr) <= 1e-12
+
+
 @pytest.mark.slow
 def test_media_decode_stub_deterministic(spark):
     from pyspark_retention_pipeline_spark.operators.multimodal import decode_media
