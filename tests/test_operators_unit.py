@@ -55,19 +55,13 @@ def test_threshold_metrics_guard_division(spark):
     assert row["precision"] == 0.0 and row["recall"] == 0.0 and row["f1"] == 0.0
 
 
-def _evaluator_aucs(frame):
-    from pyspark.ml.evaluation import BinaryClassificationEvaluator
-
-    ev = BinaryClassificationEvaluator(rawPredictionCol="score")
-    return {m: ev.setMetricName(m).evaluate(frame) for m in ("areaUnderROC", "areaUnderPR")}
-
-
 def test_auc_metrics_match_the_evaluator(spark):
     """Both AUCs equal ``BinaryClassificationEvaluator``'s within 1e-12 on
     heavily tied scores and on one-class splits, where the evaluator's
     guards hold (FPR or recall 0 for an empty class): no division by zero
     under ANSI mode."""
     import numpy as np
+    from pyspark.ml.evaluation import BinaryClassificationEvaluator
 
     from pyspark_retention_pipeline_spark.operators.threshold import auc_metrics
 
@@ -84,9 +78,10 @@ def test_auc_metrics_match_the_evaluator(spark):
         "negatives": tied.selectExpr("0.0D AS label", "score"),
         "positives": tied.selectExpr("1.0D AS label", "score"),
     }
+    ev = BinaryClassificationEvaluator(rawPredictionCol="score")
     for name, frame in frames.items():
         got = auc_metrics(frame).collect()[0].asDict()
-        want = _evaluator_aucs(frame)
+        want = {m: ev.setMetricName(m).evaluate(frame) for m in ("areaUnderROC", "areaUnderPR")}
         assert got.keys() == want.keys()
         for metric, value in want.items():
             assert abs(got[metric] - value) <= 1e-12, (name, metric, got, want)
