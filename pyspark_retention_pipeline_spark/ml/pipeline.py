@@ -48,6 +48,7 @@ from pyspark.storagelevel import StorageLevel
 from ..constants import DEFAULT_THRESHOLD
 from ..exprs import sql_double, sql_name
 from ..operators.threshold import auc_metrics
+from ..pins import pin, pins
 
 # The 8 engineered features of the reference model (FIXTURES.md §1.2; feature
 # selection rule = all columns except the key and the label, train.py:35-37).
@@ -187,24 +188,6 @@ def _sized(frame: DataFrame, n_features: int) -> Iterator[DataFrame]:
 
 
 @contextmanager
-def _checkpointed(frame: DataFrame) -> Iterator[DataFrame]:
-    """``frame`` materialized by an eager ``localCheckpoint``, whose RDD is
-    unpersisted on exit.
-
-    An iterative fit reads its input once per iteration, and a checkpoint's
-    rows read faster than a cached frame's columnar batches: on a 4-core host
-    the LBFGS quality classifier fitted in 5.5 s against 8.5 s cached
-    (256-wide vectors), the LBFGS churn model in 1.7 s against 2.1 s. Spark
-    drops a local checkpoint only when its RDD is garbage-collected, so the RDD is taken
-    from the checkpoint's plan, a ``LogicalRDD``, and released here."""
-    checkpointed = frame.localCheckpoint()
-    try:
-        yield checkpointed
-    finally:
-        checkpointed._jdf.queryExecution().analyzed().rdd().unpersist(False)
-
-
-@contextmanager
 def job_description(spark: SparkSession, description: str) -> Iterator[None]:
     """Spark jobs of this thread carry ``description`` for the block; the
     previous description (a job group's, say) comes back on exit. The job
@@ -226,20 +209,23 @@ def fit_pipeline(prepared: DataFrame, cols: list[str], final: Estimator) -> Pipe
     Its jobs carry the description ``ml.fit``.
 
     The frame is materialized and sized (:func:`_sized`), the Imputer and
-    StandardScaler are fitted on it, and ``final`` fits on a checkpointed
-    3-column frame (``features_scaled``, ``label``, ``class_weight``;
-    :func:`_checkpointed`), so the job per iteration reads materialized rows
-    instead of re-running the featurization plan. At the quality
-    classifier's 256 hashed features the per-job codegen of that plan
-    dominated: 315 s at sf0.001 through ``Pipeline.fit`` against ~25 s
-    staged over a materialized LR input. The math is ``Pipeline.fit``'s;
-    only the summation order over partitions can differ (|Δcoef| ≤ 1e-8).
-    Nothing persisted here outlives the call."""
+    StandardScaler are fitted on it, and ``final`` fits on the 3-column frame
+    (``features_scaled``, ``label``, ``class_weight``) pinned eagerly
+    (``pins.pin``) in a scope of its own, so the job per iteration reads
+    materialized rows instead of re-running the featurization plan. At the
+    quality classifier's 256 hashed features the per-job codegen of that
+    plan dominated: 315 s at sf0.001 through ``Pipeline.fit`` against ~25 s
+    staged over a materialized LR input. A checkpoint's rows also read
+    faster than a cached frame's columnar batches: on a 4-core host the
+    LBFGS quality classifier fitted in 5.5 s against 8.5 s cached (256-wide
+    vectors), the LBFGS churn model in 1.7 s against 2.1 s. The math is
+    ``Pipeline.fit``'s; only the summation order over partitions can differ
+    (|Δcoef| ≤ 1e-8). Nothing persisted here outlives the call."""
     with job_description(prepared.sparkSession, "ml.fit"), _sized(prepared, len(cols)) as sized:
         prefix = Pipeline(stages=_feature_stages(cols)).fit(sized)
         last_input = prefix.transform(sized).select("features_scaled", "label", "class_weight")
-        with _checkpointed(last_input) as rows:
-            last = final.fit(rows)
+        with pins():
+            last = final.fit(pin(last_input, eager=True))
     return PipelineModel(prefix.stages + [last])
 
 

@@ -129,8 +129,8 @@ def run_plots(
     and a split, sweep the REAL model scores with the single-pass operator
     (the reference loops 101 pandas passes driver-side,
     ``plot_threshold.py:16-30``), and write ``threshold_curve.csv`` +
-    ``threshold_curve.png`` + ``feature_importance.png``. PNGs render via
-    matplotlib when present, else the built-in raster encoder. Only the
+    ``threshold_curve.png`` + ``feature_importance.png``. PNGs render
+    through the built-in raster encoder (:mod:`..raster`). Only the
     101-row curve and per-feature coefficients are collected — bounded
     artifact sinks."""
     from ..viz import render_feature_importance, render_threshold_curve

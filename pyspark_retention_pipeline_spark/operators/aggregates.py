@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..constants import CUTOFF, CUTOFF_DATE, RECENT_START, LOOKAHEAD_END
 from ..exprs import money_sum, scaled_sum, ts_lit
+from ..pins import pin
 from ..registry import query
 from ..tables import load_table
 
@@ -546,10 +547,9 @@ def winsorized_spend_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .quantiles import exact_quantile_frame
 
     o = load_table(spark, sf_dir, "orders")
-    spend = (
+    spend = pin(
         o.groupBy("o_custkey")
         .agg(money_sum("o_totalprice").alias("total_spend"))
-        .localCheckpoint(eager=False)
     )
     raw_cuts = exact_quantile_frame(
         spend, "total_spend", [0.01, 0.99], ["lo", "hi"]

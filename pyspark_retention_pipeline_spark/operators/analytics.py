@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ..constants import CUTOFF, LOOKAHEAD_END
 from ..exprs import money_sum, ts_lit
+from ..pins import pin
 from ..registry import query
 from ..tables import load_table
 
@@ -88,9 +89,7 @@ def with_global_row_number(df: DataFrame, order_by: list) -> DataFrame:
         "_pid", F.spark_partition_id()
     )
     w_local = Window.partitionBy("_pid").orderBy(*order_by)
-    local = ranged.withColumn(
-        "_lrn", F.row_number().over(w_local).cast("long")
-    ).localCheckpoint(eager=False)
+    local = pin(ranged.withColumn("_lrn", F.row_number().over(w_local).cast("long")))
     # Tiny frame: one row per range partition. The unpartitioned windows
     # here run over an Aggregate-bounded input (<= nparts rows).
     counts = local.groupBy("_pid").agg(F.count("*").alias("_cnt"))
@@ -566,7 +565,7 @@ def with_global_cumsum(df: DataFrame, order_by: list, value_col, out_col="_cum")
     local = ranged.withColumn("_lrn", F.row_number().over(w_order).cast("long"))
     for i, v in enumerate(vcols):
         local = local.withColumn(f"_lcs{i}", F.sum(v).over(w_run).cast("long"))
-    local = local.localCheckpoint(eager=False)
+    local = pin(local)
     per_pid = local.groupBy("_pid").agg(
         F.count("*").cast("long").alias("_cnt"),
         *[F.sum(v).cast("long").alias(f"_psum{i}") for i, v in enumerate(vcols)],

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..exprs import as_double_array, dot, money_sum
+from ..pins import pin
 from ..registry import query
 from ..tables import load_events, load_table
 
@@ -637,7 +638,7 @@ def basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explode, item supports, order total); unpinned, each branch re-ran
     # the lineitem scan + basket aggregation (4 scans in the plan).
     per_order = (
-        li.groupBy("l_orderkey").agg(arr.alias("parts")).localCheckpoint(eager=False)
+        pin(li.groupBy("l_orderkey").agg(arr.alias("parts")))
     )
     pairs_col = F.flatten(
         F.transform(

@@ -27,6 +27,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..pins import pin
+
 # Default worst-case bucket width. 64 members = 2,016 pairs per bucket max;
 # real near-dup buckets are far smaller, degenerate ones switch to star form.
 MAX_BUCKET_MEMBERS = 64
@@ -65,24 +67,14 @@ def bounded_bucket_pairs(
     and chain pairs are the caller's ``distinct()`` to fold, like repeated
     band collisions.
 
-    The sized frame is pinned with a lazy ``localCheckpoint``: it feeds
-    THREE plan branches (both sides of the small-bucket self-join and the
-    star branch), and without the pin each branch re-runs the upstream
+    The sized frame is pinned (``pins.pin``): it feeds THREE plan branches
+    (both sides of the small-bucket self-join and the star branch), and
+    without the pin each branch re-runs the upstream
     bucket derivation AND the size window — measured at sf0.1 as the
     dominant cost of every LSH candidate query (simhash 1.87 → 0.72 s,
     minhash 0.58 → 0.11 s, embedding-LSH 0.49 → 0.08 s). Storage is one
     materialization of the (bucket, id, payload) rows — the same order of
     magnitude the branch shuffles were already paying three times.
-
-    Fault-tolerance tradeoff (applies to EVERY lazy-localCheckpoint pin in
-    this repo): localCheckpoint blocks live only on their executor,
-    unreplicated — losing an executor (or a dynamic-allocation downscale)
-    fails the job instead of recomputing, since the truncated lineage
-    cannot be replayed. Fine on local[*] and static on-demand clusters;
-    on a cluster with preemptible executors or dynamic allocation, swap
-    the pin for ``persist(StorageLevel.DISK_ONLY_2)`` (replicated, lineage
-    kept) or a reliable ``checkpoint()`` to HDFS/object storage. See
-    docs/SCALE.md "Pinned shared frames".
     """
     payload_cols = payload_cols or []
     w = Window.partitionBy(*bucket_cols)
@@ -98,7 +90,7 @@ def bounded_bucket_pairs(
         enriched = enriched.withColumn("_prev_id", F.lag(id_col).over(cw))
         for c in payload_cols:
             enriched = enriched.withColumn(f"_prev_{c}", F.lag(c).over(cw))
-    sized = enriched.localCheckpoint(eager=False)
+    sized = pin(enriched)
 
     small = sized.filter(F.col("_bsize") <= cap).select(
         *bucket_cols, id_col, *payload_cols

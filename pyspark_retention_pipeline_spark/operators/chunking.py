@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..pins import pin
 from ..registry import query
 from ..tables import load_table
 
@@ -317,11 +318,13 @@ def packing_efficiency_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket = F.conv(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
     ).cast("long") % n_shards
-    sized = docs.select(
-        "doc_id",
-        bucket.alias("shard_id"),
-        F.size(F.split(F.col("text"), " ")).cast("long").alias("n_tokens"),
-    ).localCheckpoint(eager=False)  # one scan feeds both strategy windows
+    sized = pin(
+        docs.select(
+            "doc_id",
+            bucket.alias("shard_id"),
+            F.size(F.split(F.col("text"), " ")).cast("long").alias("n_tokens"),
+        )
+    )  # one scan feeds both strategy windows
 
     def stats(label: str) -> DataFrame:
         order = (

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..pins import pin
 from ..registry import query
 from ..tables import load_table
 
@@ -46,17 +47,16 @@ def connected_components(edges: DataFrame, max_iter: int = 15) -> DataFrame:
     # derivation (LSH candidate join, verify filter, distinct, this union)
     # re-executed per round (round-8 review finding; the multi-branch
     # recompute trap, iterated). One lazy pin materializes it at round 1.
-    sym = (
+    sym = pin(
         edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .unionByName(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
         .distinct()
-        .localCheckpoint(eager=False)
     )
-    labels = (
+    labels = pin(
         sym.select(F.col("a").alias("vertex"))
         .distinct()
-        .withColumn("component", F.col("vertex"))
-        .localCheckpoint()
+        .withColumn("component", F.col("vertex")),
+        eager=True,
     )
     for _ in range(max_iter):
         neighbor_min = (
@@ -80,7 +80,7 @@ def connected_components(edges: DataFrame, max_iter: int = 15) -> DataFrame:
         lbl = hopped.select(
             F.col("vertex").alias("c_vertex"), F.col("component").alias("c_component")
         )
-        updated = (
+        updated = pin(
             hopped.join(lbl, hopped.component == lbl.c_vertex, "left")
             .select(
                 "vertex",
@@ -91,8 +91,8 @@ def connected_components(edges: DataFrame, max_iter: int = 15) -> DataFrame:
             )
             .select(
                 "vertex", "component", (F.col("component") < F.col("old")).alias("_changed")
-            )
-            .localCheckpoint()
+            ),
+            eager=True,
         )
         n_changed = updated.filter(F.col("_changed")).count()
         labels = updated.drop("_changed")
@@ -325,14 +325,10 @@ def part_pagerank_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.select(F.col("p2").alias("src"), F.col("p1").alias("dst"), "w")
     )
     outw = edges.groupBy("src").agg(F.sum("w").alias("ow"))
-    en = edges.join(outw, "src").localCheckpoint(eager=False)
-    nodes = outw.select(F.col("src").alias("part")).localCheckpoint(
-        eager=False
-    )
+    en = pin(edges.join(outw, "src"))
+    nodes = pin(outw.select(F.col("src").alias("part")))
     teleport = 100 - PR_DAMP_NUM
-    ranks = nodes.select(
-        "part", F.lit(PR_SCALE).cast("long").alias("pr")
-    ).localCheckpoint(eager=False)
+    ranks = pin(nodes.select("part", F.lit(PR_SCALE).cast("long").alias("pr")))
     out = None
     for t in range(1, PR_ITERS + 1):
         contrib = en.join(
@@ -341,7 +337,7 @@ def part_pagerank_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         inc = contrib.groupBy(F.col("dst").alias("part")).agg(
             F.sum("c").alias("inc")
         )
-        ranks = (
+        ranks = pin(
             nodes.join(inc, "part", "left")
             .select(
                 "part",
@@ -351,7 +347,6 @@ def part_pagerank_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
                     " div 100"
                 ).alias("pr"),
             )
-            .localCheckpoint(eager=False)
         )
         stats = ranks.agg(
             F.count("*").cast("long").alias("n_nodes"),
@@ -467,19 +462,17 @@ def part_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .analytics_extra import part_pair_counts_frame
 
     li = load_table(spark, sf_dir, "lineitem")
-    pairs = (
+    pairs = pin(
         part_pair_counts_frame(li)
         .filter(F.col("n_orders") >= TRI_MIN_SUPPORT)
         .select("p1", "p2")
-        .localCheckpoint(eager=False)  # degree rollup + orientation reads
-    )
-    deg = (
+    )  # degree rollup + orientation reads
+    deg = pin(
         pairs.select(F.col("p1").alias("part"))
         .unionByName(pairs.select(F.col("p2").alias("part")))
         .groupBy("part")
         .agg(F.count("*").cast("long").alias("degree"))
-        .localCheckpoint(eager=False)  # orientation (×2) + output reads
-    )
+    )  # orientation (×2) + output reads
     with_deg = (
         pairs.join(deg.select(F.col("part").alias("p1"), F.col("degree").alias("d1")), "p1")
         .join(deg.select(F.col("part").alias("p2"), F.col("degree").alias("d2")), "p2")
@@ -487,11 +480,13 @@ def part_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     fwd = (F.col("d1") < F.col("d2")) | (
         (F.col("d1") == F.col("d2")) & (F.col("p1") < F.col("p2"))
     )
-    orient = with_deg.select(
-        F.when(fwd, F.col("p1")).otherwise(F.col("p2")).alias("u"),
-        F.when(fwd, F.col("p2")).otherwise(F.col("p1")).alias("v"),
-        F.when(fwd, F.col("d2")).otherwise(F.col("d1")).alias("dv"),
-    ).localCheckpoint(eager=False)  # wedge ×2 + closing reads
+    orient = pin(
+        with_deg.select(
+            F.when(fwd, F.col("p1")).otherwise(F.col("p2")).alias("u"),
+            F.when(fwd, F.col("p2")).otherwise(F.col("p1")).alias("v"),
+            F.when(fwd, F.col("d2")).otherwise(F.col("d1")).alias("dv"),
+        )
+    )  # wedge ×2 + closing reads
     o1 = orient.select("u", F.col("v").alias("b"), F.col("dv").alias("db"))
     o2 = orient.select("u", F.col("v").alias("c"), F.col("dv").alias("dc"))
     wedges = o1.join(o2, "u").filter(
@@ -607,29 +602,26 @@ def kcore_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .analytics_extra import part_pair_counts_frame
 
     li = load_table(spark, sf_dir, "lineitem")
-    edges = (
+    edges = pin(
         part_pair_counts_frame(li)
         .filter(F.col("n_orders") >= TRI_MIN_SUPPORT)
         .select("p1", "p2")
-        .localCheckpoint(eager=False)
     )
     out = None
     for t in range(1, KCORE_ITERS + 1):
-        keep = (
+        keep = pin(
             edges.select(F.col("p1").alias("part"))
             .unionByName(edges.select(F.col("p2").alias("part")))
             .groupBy("part")
             .agg(F.count("*").alias("d"))
             .filter(F.col("d") >= KCORE_K)
             .select("part")
-            .localCheckpoint(eager=False)  # two semi-joins + the count read it
-        )
-        edges = (
+        )  # two semi-joins + the count read it
+        edges = pin(
             edges.join(
                 keep.select(F.col("part").alias("p1")), "p1", "left_semi"
             )
             .join(keep.select(F.col("part").alias("p2")), "p2", "left_semi")
-            .localCheckpoint(eager=False)
         )
         stats = (
             keep.agg(F.count("*").cast("long").alias("n_nodes"))

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..pins import pin
 from ..registry import query
 from ..tables import load_table
 from .sampling import _MIX_CASE_SQL, split_assignment_frame
@@ -390,11 +391,10 @@ def curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the final metadata join), so it is pinned — unpinned, the corpus scan
     # AND the fingerprint window re-ran per branch (3 documents scans in the
     # round-8 registry audit; budget is ≤ 2).
-    kept = (
+    kept = pin(
         d.withColumn("rn", F.row_number().over(w))
         .filter((F.col("rn") == 1) & (F.col("doc_id") % EVAL_MOD != 0))
         .select("doc_id", "lang", "text")
-        .localCheckpoint(eager=False)
     )
     eval_grams = (
         _gram_hash_frame(d.filter(F.col("doc_id") % EVAL_MOD == 0))
@@ -948,16 +948,19 @@ def group_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .components import group_assignment_frame
 
     d = load_table(spark, sf_dir, "documents")
-    pairs = (
+    pairs = pin(
         simhash_candidate_frame(d)
         .select("doc_id_a", "doc_id_b")
-        .localCheckpoint(eager=False)
     )
-    assign = group_assignment_frame(
-        d,
-        pairs.select(F.col("doc_id_a").alias("src"), F.col("doc_id_b").alias("dst")),
-    ).localCheckpoint(eager=False)
-    paired = (
+    assign = pin(
+        group_assignment_frame(
+            d,
+            pairs.select(
+                F.col("doc_id_a").alias("src"), F.col("doc_id_b").alias("dst")
+            ),
+        )
+    )
+    paired = pin(
         pairs
         .join(
             assign.select(
@@ -972,7 +975,6 @@ def group_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id_b",
         )
         .select("split_a", "split_b")
-        .localCheckpoint(eager=False)
     )
     # paired stays pinned too: it feeds the within-split and cross-split
     # aggregation branches below.
@@ -1205,7 +1207,7 @@ def dsir_importance_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             % DSIR_BUCKETS
         ).alias("b"),
     )
-    stats = (
+    stats = pin(
         tok.groupBy("b")
         .agg(
             F.count("*").cast("long").alias("cr"),
@@ -1215,8 +1217,7 @@ def dsir_importance_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("ct"),
         )
-        .localCheckpoint(eager=False)  # one 1024-row pin: totals + ratios
-    )
+    )  # one 1024-row pin: totals + ratios
     tot = stats.agg(
         F.sum("cr").cast("long").alias("tr"), F.sum("ct").cast("long").alias("tt")
     )
@@ -1306,8 +1307,8 @@ def crossdoc_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ngram_contamination precedent — a cross-engine count mismatch would
     surface any collision)."""
     d = load_table(spark, sf_dir, "documents")
-    spans = _gram_hash_frame(d, distinct=True, k=SPAN).localCheckpoint(
-        eager=False
+    spans = pin(
+        _gram_hash_frame(d, distinct=True, k=SPAN)
     )  # one pin: frequency side + per-doc side
     freq = spans.groupBy("gram").agg(F.count("*").alias("n_docs"))
     joined = spans.join(freq, "gram")
@@ -1416,8 +1417,8 @@ def crossdoc_span_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # _maximal cascade is NOT fanned out — its wall is Catalyst planning
     # over the multi-k expression tree and fan-out regressed it +1.2 s).
     d = load_table(spark, sf_dir, "documents", fan_out=True)
-    spans = _gram_hash_frame(d, k=SPAN, with_pos=True).localCheckpoint(
-        eager=False
+    spans = pin(
+        _gram_hash_frame(d, k=SPAN, with_pos=True)
     )  # one pin: frequency side + victim side
     # Round-15: the duplication test needs no COUNT(DISTINCT) — a span is
     # cross-doc iff max(doc_id) > min(doc_id), plain map-side-combinable
@@ -1541,14 +1542,14 @@ def crossdoc_span_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_ids among duplicated-span rows (conditional count_distinct —
     NULL-skipping on both engines)."""
     d = load_table(spark, sf_dir, "documents")
-    staged = _token_hash_frame(d).localCheckpoint(
-        eager=False
-    )  # one token pass feeds every k
+    staged = pin(_token_hash_frame(d))  # one token pass feeds every k
     rows = []
     for k in SPAN_PROFILE_KS:
-        spans = staged.select(
-            "doc_id", F.explode(F.array_distinct(_gram_array(k))).alias("gram")
-        ).localCheckpoint(eager=False)  # frequency side + rollup side
+        spans = pin(
+            staged.select(
+                "doc_id", F.explode(F.array_distinct(_gram_array(k))).alias("gram")
+            )
+        )  # frequency side + rollup side
         freq = spans.groupBy("gram").agg(F.count("*").alias("n_docs"))
         joined = spans.join(freq, "gram")
         dup = F.when(F.col("n_docs") >= 2, 1).otherwise(0)
@@ -1696,9 +1697,7 @@ def crossdoc_span_rewrite_maximal(spark: SparkSession, sf_dir: str) -> DataFrame
     so the hash gate also validates the per-level 64-bit span-hash
     identity."""
     d = load_table(spark, sf_dir, "documents")
-    staged = _token_hash_frame(d).localCheckpoint(
-        eager=False
-    )  # one token pass feeds every cascade level
+    staged = pin(_token_hash_frame(d))  # one token pass feeds every cascade level
     per_level = [
         staged.select(
             "doc_id",
@@ -1711,7 +1710,7 @@ def crossdoc_span_rewrite_maximal(spark: SparkSession, sf_dir: str) -> DataFrame
     for lvl in per_level[1:]:
         spans = spans.unionByName(lvl)
     # One pin feeds the frequency side AND the victim side for every level.
-    spans = spans.localCheckpoint(eager=False)
+    spans = pin(spans)
     freq = spans.groupBy("k", "gram").agg(
         F.min("doc_id").alias("min_doc"),
         F.max("doc_id").alias("max_doc"),
@@ -1888,9 +1887,11 @@ def heaps_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-branch recompute trap `test_registry_scan_budget` exists to
     catch (and did, in this operator's first cut)."""
     d = load_table(spark, sf_dir, "documents")
-    staged = d.select(
-        "doc_id", F.split(F.col("text"), " ").alias("t")
-    ).localCheckpoint(eager=False)  # counts + ownership + max-id reads
+    staged = pin(
+        d.select(
+            "doc_id", F.split(F.col("text"), " ").alias("t")
+        )
+    )  # counts + ownership + max-id reads
     # nm stays UNpinned: both bin expressions re-run this 1-row MAX over
     # the pinned staged RDD (trivial), and the visible Aggregate is what
     # lets the cross-join invariant prove the broadcast side bounded — a

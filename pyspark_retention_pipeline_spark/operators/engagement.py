@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..pins import pin
 from ..registry import query
 from ..tables import load_events
 
@@ -396,7 +397,7 @@ def audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Pinned: the distinct (user, type) frame feeds the pair branch and the
     # two per-type total branches; unpinned, each re-ran the events scan +
     # the distinct shuffle (3 scans in the plan).
-    ut = e.select("user_id", "event_type").distinct().localCheckpoint(eager=False)
+    ut = pin(e.select("user_id", "event_type").distinct())
     per_user = ut.groupBy("user_id").agg(
         F.array_sort(F.collect_set("event_type")).alias("types")
     )
@@ -584,10 +585,12 @@ def km_session_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     # s feeds both the horizon aggregate and the marked projection — pin
     # ONE materialization or the sessionize pipeline (the expensive stage)
     # executes twice.
-    s = sess.groupBy("user_id", "session_id").agg(
-        F.expr(f"(MAX(ts_us) - MIN(ts_us)) DIV {MIN_US}").alias("t"),
-        F.max("ts_us").alias("end_us"),
-    ).localCheckpoint(eager=False)
+    s = pin(
+        sess.groupBy("user_id", "session_id").agg(
+            F.expr(f"(MAX(ts_us) - MIN(ts_us)) DIV {MIN_US}").alias("t"),
+            F.max("ts_us").alias("end_us"),
+        )
+    )
     horizon = s.agg(F.max("end_us").alias("gmax"))
     marked = s.crossJoin(F.broadcast(horizon)).select(
         "t",

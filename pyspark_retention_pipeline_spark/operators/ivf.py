@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..exprs import as_double_array, dot
+from ..pins import pin
 from ..registry import query
 from ..tables import load_table
 from .similarity import N_QUERIES, TOP_K
@@ -232,11 +233,10 @@ def ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the checkpointed cell-score ladder ran single-task off the
     # single-row-group scan.
     e = load_table(spark, sf_dir, "embeddings", fan_out=True)
-    staged = (
+    staged = pin(
         e.select("vec_id", as_double_array(F.col("embedding")).alias("v"))
         .withColumn("nrm", F.sqrt(dot(F.col("v"), F.col("v"))))
-        .localCheckpoint(eager=False)  # feeds codebook + corpus + query slice
-    )
+    )  # feeds codebook + corpus + query slice
     cb = deterministic_codebook_frame(staged)
     withcb = staged.crossJoin(F.broadcast(cb))
     # Rounded cosine to every centroid, staged as ONE array column; the
@@ -440,9 +440,11 @@ def kmeans_lloyd_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored = emb.crossJoin(F.broadcast(cent)).select(
             "vec_id", "v", F.struct(qd2.alias("qd2"), F.col("cell")).alias("dc")
         )
-        assigned = scored.groupBy("vec_id").agg(
-            F.min("dc").alias("best"), F.first("v").alias("v")
-        ).localCheckpoint(eager=False)  # one materialization for stats + update
+        assigned = pin(
+            scored.groupBy("vec_id").agg(
+                F.min("dc").alias("best"), F.first("v").alias("v")
+            )
+        )  # one materialization for stats + update
         stats = assigned.agg(
             F.sum("best.qd2").alias("s"),
             F.count("*").alias("n"),
@@ -453,7 +455,7 @@ def kmeans_lloyd_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         curve.append(
             (it, stats.s / (stats.n * float(_LLOYD_SCALE)), int(stats.n_cells))
         )
-        cent = (
+        cent = pin(
             assigned.select(
                 F.col("best.cell").alias("cell"), F.posexplode("v").alias("pos", "val")
             )
@@ -476,7 +478,6 @@ def kmeans_lloyd_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(
                 "cell", F.transform(F.col("pm"), lambda s: s["m"]).alias("c")
             )
-            .localCheckpoint(eager=False)
         )
     return spark.createDataFrame(
         curve, "iteration int, inertia double, n_cells long"
@@ -613,10 +614,9 @@ def semdedup_assigned_frame(e: DataFrame) -> DataFrame:
     import math
 
     k = max(2, min(SEMDEDUP_MAX_CELLS, math.isqrt(e.count())))
-    staged = (
+    staged = pin(
         e.select("vec_id", as_double_array(F.col("embedding")).alias("v"))
         .withColumn("nrm", F.sqrt(dot(F.col("v"), F.col("v"))))
-        .localCheckpoint(eager=False)
     )
     cb = deterministic_codebook_frame(staged, k)
     scored_col = F.transform(
@@ -628,7 +628,7 @@ def semdedup_assigned_frame(e: DataFrame) -> DataFrame:
             (-x["cell"]).alias("negcell"),
         ),
     )
-    return (
+    return pin(
         staged.crossJoin(F.broadcast(cb))
         .select(
             "vec_id",
@@ -636,8 +636,7 @@ def semdedup_assigned_frame(e: DataFrame) -> DataFrame:
             "nrm",
             (-F.array_max(scored_col)["negcell"]).cast("int").alias("cell"),
         )
-        .localCheckpoint(eager=False)  # one frame for both join sides
-    )
+    )  # one frame for both join sides
 
 
 def semdedup_prune_frame(a_src: DataFrame, b_src: DataFrame) -> DataFrame:
@@ -891,10 +890,9 @@ def kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
         return F.round(d2 * _LLOYD_SCALE).cast("long")
 
     seed = emb.filter(F.col("vec_id") == 0).select(F.col("v").alias("cv"))
-    state = (
+    state = pin(
         emb.crossJoin(F.broadcast(seed))
         .select("vec_id", "v", qdist().alias("qd"))
-        .localCheckpoint(eager=False)
     )
     chosen = [0]
     rows = []
@@ -923,14 +921,13 @@ def kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
             cv = state.filter(F.col("vec_id") == cid).select(
                 F.col("v").alias("cv")
             )
-            state = (
+            state = pin(
                 state.crossJoin(F.broadcast(cv))
                 .select(
                     "vec_id",
                     "v",
                     F.least(F.col("qd"), qdist()).alias("qd"),
                 )
-                .localCheckpoint(eager=False)
             )
     return spark.createDataFrame(
         rows, "k int, center_vec_id long, radius double"
@@ -1028,11 +1025,10 @@ def ivf_probe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     monotone in ``n_probe`` by construction (candidate sets nest), which
     the unit test pins."""
     e = load_table(spark, sf_dir, "embeddings")
-    staged = (
+    staged = pin(
         e.select("vec_id", as_double_array(F.col("embedding")).alias("v"))
         .withColumn("nrm", F.sqrt(dot(F.col("v"), F.col("v"))))
-        .localCheckpoint(eager=False)  # codebook + corpus + query slice
-    )
+    )  # codebook + corpus + query slice
     cb = deterministic_codebook_frame(staged)
     scored_col = F.transform(
         F.col("cb"),
@@ -1071,7 +1067,7 @@ def ivf_probe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             (-F.col("p")["negcell"]).cast("int").alias("cell"),
         )
     )
-    pairs = (
+    pairs = pin(
         assigned.join(F.broadcast(probed), "cell")
         .filter(F.col("query_id") != F.col("vec_id"))
         .select(
@@ -1082,8 +1078,7 @@ def ivf_probe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cosine"),
             "pr",
         )
-        .localCheckpoint(eager=False)  # one pair pass for every grid point
-    )
+    )  # one pair pass for every grid point
     q = staged.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
@@ -1103,12 +1098,11 @@ def ivf_probe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     wq = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc("neighbor_id")
     )
-    exact = (
+    exact = pin(
         ex_pairs.withColumn("rn", F.row_number().over(wq))
         .filter(F.col("rn") <= TOP_K)
         .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=False)  # intersected by every grid point
-    )
+    )  # intersected by every grid point
     exn = exact.agg(F.count("*").cast("long").alias("n_exact"))
     out = None
     for p in PROBE_GRID:
@@ -1341,11 +1335,10 @@ def ivf_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ran as a chain of single-task stages — UI-REST attribution measured
     # ~2.8–3.5 s walls dominated by two 2.4 s one-task encode stages.
     e = load_table(spark, sf_dir, "embeddings", fan_out=True)
-    staged = (
+    staged = pin(
         e.select("vec_id", as_double_array(F.col("embedding")).alias("v"))
         .withColumn("nrm", F.sqrt(dot(F.col("v"), F.col("v"))))
-        .localCheckpoint(eager=False)  # codebooks + corpus + query slice
-    )
+    )  # codebooks + corpus + query slice
     cb = deterministic_codebook_frame(staged)
     md5k = F.md5(F.col("vec_id").cast("string"))
     pqcb = (
@@ -1385,13 +1378,15 @@ def ivf_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # storage at the 100× probe's 200k vectors (measured as a 25× wall
     # regression before this slimming); the one-row codebooks crossJoin in
     # AFTER the pins, on the streaming side.
-    based = withcb.select(
-        "vec_id",
-        "v",
-        "nrm",
-        scored_col.alias("scored"),
-        (-F.array_max("scored")["negcell"]).cast("int").alias("cell"),
-    ).localCheckpoint(eager=False)  # mean aggregate + residual join
+    based = pin(
+        withcb.select(
+            "vec_id",
+            "v",
+            "nrm",
+            scored_col.alias("scored"),
+            (-F.array_max("scored")["negcell"]).cast("int").alias("cell"),
+        )
+    )  # mean aggregate + residual join
     # Recentred cell centroid = member mean (the one-Lloyd-step coarse
     # quantizer FAISS IVFADC trains — the md5 codebook only seeds the
     # assignment; a SAMPLED vector as "centroid" makes residuals BIGGER
@@ -1418,12 +1413,11 @@ def ivf_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # residual vs the recentred centroid — the true-IVFADC encode input;
     # pinned because it feeds BOTH the residual codebook and the encode.
-    staged2 = (
+    staged2 = pin(
         based.join(means, "cell")
         .select(
             "*", F.zip_with("v", "mv", lambda a, b: a - b).alias("res")
         )
-        .localCheckpoint(eager=False)
     )
 
     # Residual PQ codebook: the SAME md5-deterministic selection as pqcb,
@@ -1493,16 +1487,18 @@ def ivf_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda m: _best_slice("res", "rqcb", m),
         )
     )
-    scored = enc.select(
-        "vec_id",
-        "v",
-        "nrm",
-        "scored",
-        "cell",
-        recon_raw.alias("r"),
-        # residual variant reconstructs recentred centroid + decoded residual
-        F.zip_with("mv", recon_res, lambda a, b: a + b).alias("rv"),
-    ).localCheckpoint(eager=False)
+    scored = pin(
+        enc.select(
+            "vec_id",
+            "v",
+            "nrm",
+            "scored",
+            "cell",
+            recon_raw.alias("r"),
+            # residual variant reconstructs recentred centroid + decoded residual
+            F.zip_with("mv", recon_res, lambda a, b: a + b).alias("rv"),
+        )
+    )
     # ^ pin (round 16): `scored` feeds BOTH the candidate join's stream side
     # (`assigned`) and the broadcast probe side (`probed`); without the pin
     # the PQ encode folds (2 variants × PQ_M subspaces × PQ_K codewords per
@@ -1523,7 +1519,7 @@ def ivf_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id", "qv", (-F.col("p")["negcell"]).cast("int").alias("cell")
         )
     )
-    cand = (
+    cand = pin(
         assigned.join(F.broadcast(probed), "cell")
         .filter(F.col("query_id") != F.col("vec_id"))
         .select(
@@ -1532,8 +1528,7 @@ def ivf_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(dot(F.col("qv"), F.col("r")), 6).alias("adc_raw"),
             F.round(dot(F.col("qv"), F.col("rv")), 6).alias("adc_res"),
         )
-        .localCheckpoint(eager=False)  # ranked side + candidate count
-    )
+    )  # ranked side + candidate count
     w_raw = Window.partitionBy("query_id").orderBy(
         F.desc("adc_raw"), F.asc("neighbor_id")
     )

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..pins import pin, pins
 from ..registry import query
 from ..tables import load_table
 from .retention import churn_feature_frame
@@ -26,6 +27,11 @@ _MODEL_CACHE: dict[tuple[str, str], tuple] = {}
 def _session_cached(cache: dict, spark: SparkSession, sf_dir: str, build):
     """``cache[(applicationId, sf_dir)]``, filled by ``build()`` on a miss.
 
+    ``build()`` runs in a ``pins.pins`` scope of its own, so the pins of the
+    frames it builds are released when it returns. What it returns must not
+    read them again: both builds return a cached feature frame that
+    ``fit_pipeline``'s count has read in full.
+
     The applicationId is stable for a session's lifetime and never reused
     by a successor session, unlike id(spark), which a new SparkSession
     object can land on after the old one is garbage-collected and would
@@ -39,7 +45,8 @@ def _session_cached(cache: dict, spark: SparkSession, sf_dir: str, build):
         del cache[k]
     key = (app_id, sf_dir)
     if key not in cache:
-        cache[key] = build()
+        with pins():
+            cache[key] = build()
     return cache[key]
 
 
@@ -142,9 +149,11 @@ def quality_feature_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.col("th"), _gram_array(QC_GRAM_K))
         ).alias("g"),
     )
-    bucketed = grams.select(
-        "doc_id", F.pmod(F.col("g"), F.lit(QC_BUCKETS)).alias("b")
-    ).localCheckpoint(eager=False)  # one gram pass: histogram + doc totals
+    bucketed = pin(
+        grams.select(
+            "doc_id", F.pmod(F.col("g"), F.lit(QC_BUCKETS)).alias("b")
+        )
+    )  # one gram pass: histogram + doc totals
     hist = (
         bucketed.groupBy("doc_id", "b")
         .agg(F.count("*").alias("c"))
@@ -173,10 +182,9 @@ def quality_feature_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialization instead of re-deriving the LM scoring per branch.
     from .quantiles import exact_quantile_frame
 
-    lm = (
+    lm = pin(
         unigram_logprob_score(spark, sf_dir)
         .select("doc_id", "avg_logprob")
-        .localCheckpoint(eager=False)
     )
     med = exact_quantile_frame(lm, "avg_logprob", [0.5], ["qc_med"])
     labeled = (
@@ -197,7 +205,8 @@ def _train_quality(spark: SparkSession, sf_dir: str):
     frame it caches. The last stage stays the LBFGS ``ml.weighted_lr``:
     separable data (the planted corpus of the tests) has no unregularized
     MLE, so IRLS would not converge on it. The one frame left cached is the
-    session cache's feature frame, which scoring reads."""
+    session cache's feature frame, which scoring reads; the pins it was
+    built from go with the build's scope."""
     from ..ml import add_class_weight, cast_features, fit_pipeline, weighted_lr
 
     def build():

@@ -22,6 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..pins import pin
 from ..registry import query
 from ..tables import load_table
 
@@ -437,9 +438,11 @@ def crossmodal_metrics_frame(docs: DataFrame, embs: DataFrame) -> DataFrame:
         .cast("long")
         .alias("su")
     )
-    pairs = tn.crossJoin(F.broadcast(mqn)).select(
-        "query_id", "vec_id", su
-    ).localCheckpoint(eager=False)  # identity slice + the rank aggregate
+    pairs = pin(
+        tn.crossJoin(F.broadcast(mqn)).select(
+            "query_id", "vec_id", su
+        )
+    )  # identity slice + the rank aggregate
     idn = pairs.filter(F.col("vec_id") == F.col("query_id")).select(
         "query_id", F.col("su").alias("su_id")
     )
@@ -451,15 +454,14 @@ def crossmodal_metrics_frame(docs: DataFrame, embs: DataFrame) -> DataFrame:
         | ((F.col("su") == F.col("su_id")) & (F.col("vec_id") < F.col("query_id"))),
         1,
     ).otherwise(0)
-    rnk = (
+    rnk = pin(
         pairs.join(idn, "query_id")
         .groupBy("query_id")
         .agg(
             (1 + F.sum(before)).cast("long").alias("identity_rank"),
             (F.max("su_id") / 1_000_000.0).alias("identity_cos"),
         )
-        .localCheckpoint(eager=False)  # one row per query; k-branches
-    )
+    )  # one row per query; k-branches
     out = None
     for k in CM_KS:
         hit = F.col("identity_rank") <= k

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ..constants import CUTOFF, CUTOFF_DATE, LOOKAHEAD_END, RECENT_START
 from ..exprs import money_sum, ts_lit
+from ..pins import pin
 from ..registry import query
 from ..tables import load_table
 
@@ -219,7 +220,7 @@ def class_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     ungrouped aggregate DOWNSTREAM of the pin, so the keyless-join
     boundedness reducer still sees its 1-row proof."""
     o = load_table(spark, sf_dir, "orders")
-    labeled = (
+    labeled = pin(
         o.filter(F.col("o_orderdate") <= ts_lit(LOOKAHEAD_END))
         .groupBy(F.col("o_custkey").alias("custkey"))
         .agg(
@@ -235,7 +236,6 @@ def class_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             "custkey",
             F.when(F.col("in_fut") == 0, 1.0).otherwise(0.0).alias("label"),
         )
-        .localCheckpoint(eager=False)
     )
     counts = labeled.agg(
         F.sum(F.when(F.col("label") == 1, 1).otherwise(0)).alias("n_pos"),

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..exprs import as_double_array, dot
+from ..pins import pin
 from ..registry import query
 from ..tables import load_table
 
@@ -1096,13 +1097,12 @@ def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dist feeds both the moment aggregate and the z projection — pin ONE
     # materialization or each consumer re-runs the centroid aggregation and
     # the 64-dim fold over the corpus (the simhash_candidate_frame lesson).
-    dist = (
+    dist = pin(
         q.crossJoin(F.broadcast(cent))
         .select(
             "vec_id",
             F.round(dot(diff, diff) * _OUT_DIST_SCALE).cast("long").alias("qd"),
         )
-        .localCheckpoint(eager=False)
     )
     m = dist.agg(
         F.count("*").cast("long").alias("n"),
@@ -1218,7 +1218,7 @@ def quantized_knn_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.max(F.array_max(F.transform(F.col("v"), lambda x: F.abs(x))))
         ).alias("s")
     )
-    coded = (
+    coded = pin(
         vecs.crossJoin(F.broadcast(scale))
         .select(
             "vec_id",
@@ -1227,8 +1227,7 @@ def quantized_knn_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "q"
             ),
         )
-        .localCheckpoint(eager=False)  # corpus side + query slice
-    )
+    )  # corpus side + query slice
     qf = coded.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
@@ -1397,9 +1396,11 @@ def pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partitioning, so un-fanned the PQ encode fold ran as ONE task
     # (attribution: 0.87 s of the 1.29 s warm wall in one single-task stage).
     e = load_table(spark, sf_dir, "embeddings", fan_out=True)
-    staged = e.select(
-        "vec_id", as_double_array(F.col("embedding")).alias("v")
-    ).localCheckpoint(eager=False)  # codebook pick + corpus + query slice
+    staged = pin(
+        e.select(
+            "vec_id", as_double_array(F.col("embedding")).alias("v")
+        )
+    )  # codebook pick + corpus + query slice
     md5k = F.md5(F.col("vec_id").cast("string"))
     cb = (
         staged.select(md5k.alias("k"), "vec_id", "v")
@@ -1722,11 +1723,10 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     (÷10⁷) without ever decimal-rounding a derived double (the
     kneser_ney round-13 lesson); ties break on neighbor_id."""
     e = load_table(spark, sf_dir, "embeddings")
-    xn = (
+    xn = pin(
         e.select("vec_id", as_double_array(F.col("embedding")).alias("v"))
         .withColumn("nrm", F.sqrt(dot(F.col("v"), F.col("v"))))
-        .localCheckpoint(eager=False)  # query slice + corpus + sim lookups
-    )
+    )  # query slice + corpus + sim lookups
     q = xn.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
@@ -1742,22 +1742,21 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     wc = Window.partitionBy("query_id").orderBy(
         F.desc("rel_u"), F.asc("neighbor_id")
     )
-    cand = (
+    cand = pin(
         xn.crossJoin(F.broadcast(q))
         .filter(F.col("query_id") != F.col("vec_id"))
         .select("query_id", F.col("vec_id").alias("neighbor_id"), rel_u)
         .withColumn("rn", F.row_number().over(wc))
         .filter(F.col("rn") <= MMR_CAND)
         .drop("rn")
-        .localCheckpoint(eager=False)  # pool: sims + every greedy round
-    )
+    )  # pool: sims + every greedy round
     x1 = xn.select(
         F.col("vec_id").alias("na"), F.col("v").alias("va"), F.col("nrm").alias("nrma")
     )
     x2 = xn.select(
         F.col("vec_id").alias("nb"), F.col("v").alias("vb"), F.col("nrm").alias("nrmb")
     )
-    sims = (
+    sims = pin(
         cand.select("query_id", F.col("neighbor_id").alias("na"))
         .join(
             cand.select(
@@ -1780,8 +1779,7 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("sim_u"),
         )
-        .localCheckpoint(eager=False)  # reused every greedy round
-    )
+    )  # reused every greedy round
     w1 = Window.partitionBy("query_id").orderBy(
         F.desc("rel_u"), F.asc("neighbor_id")
     )
@@ -1843,7 +1841,7 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 361-shuffle census outlier vs single digits for every sibling
         # (round-13 ADVICE item 3). Pinned, round r reads round r-1's rows
         # once and the unroll is linear in plan size.
-        out = out.unionByName(pick_r).localCheckpoint(eager=False)
+        out = pin(out.unionByName(pick_r))
     return out.select(
         "query_id",
         F.col("pick_rank").cast("int").alias("pick_rank"),
@@ -1929,15 +1927,14 @@ def _dense_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     systems agree on the trivial hit."""
     from .text import BM25_QUERIES, BM25_TOP_K
 
-    xn = (
+    xn = pin(
         # fan_out: the broadcast-query cosine scan does queries×64 mults
         # per corpus row on a single-row-group file (rrf_fusion measured
         # 1.40 → 1.19 s, weighted_score_fusion 1.63 → 1.49 s, tables.py).
         load_table(spark, sf_dir, "embeddings", fan_out=True)
         .select("vec_id", as_double_array(F.col("embedding")).alias("v"))
         .withColumn("nrm", F.sqrt(dot(F.col("v"), F.col("v"))))
-        .localCheckpoint(eager=False)  # query slice + corpus side
-    )
+    )  # query slice + corpus side
     qe = xn.filter(F.col("vec_id") < BM25_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
@@ -2439,16 +2436,18 @@ def retrieval_graded_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Pinned: the ≤ queries×k list feeds branked (bm25 + rrf grading) AND
     # the wsf score recovery — unpinned, the scoring joins + window re-ran
     # per consumer (measured +~4 s at sf0.1 when the wsf rows landed).
-    bm = bm25_topk(spark, sf_dir).localCheckpoint(eager=False)
+    bm = pin(bm25_topk(spark, sf_dir))
     wb = Window.partitionBy("query_id").orderBy(F.desc("bm25"), F.asc("doc_id"))
     branked = bm.select(
         "query_id", "doc_id", F.row_number().over(wb).alias("rank")
     )
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id",
-        F.explode(F.array_distinct(F.split(F.col("text"), " "))).alias("token"),
-    ).localCheckpoint(eager=False)  # sizes + query slice + intersection
+    toks = pin(
+        d.select(
+            "doc_id",
+            F.explode(F.array_distinct(F.split(F.col("text"), " "))).alias("token"),
+        )
+    )  # sizes + query slice + intersection
     qt = toks.filter(F.col("doc_id") < BM25_QUERIES).select(
         F.col("doc_id").alias("query_id"), "token"
     )
@@ -2458,7 +2457,7 @@ def retrieval_graded_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", "doc_id")
         .agg(F.count("*").cast("long").alias("inter"))
     )
-    brel = (
+    brel = pin(
         inter.join(
             sizes.select(F.col("doc_id").alias("query_id"), F.col("sz").alias("sq")),
             "query_id",
@@ -2469,8 +2468,7 @@ def retrieval_graded_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             >= GR_TAU_NUM * (F.col("sq") + F.col("sd") - F.col("inter"))
         )
         .select("query_id", "doc_id")
-        .localCheckpoint(eager=False)  # n_rel + the rank join
-    )
+    )  # n_rel + the rank join
     bnrel = brel.groupBy("query_id").agg(F.count("*").cast("long").alias("n_rel"))
     bjoin = branked.join(
         brel.withColumn("hit", F.lit(1)), ["query_id", "doc_id"], "left"
@@ -2484,12 +2482,11 @@ def retrieval_graded_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     mpicks = mm.select(
         "query_id", F.col("pick_rank").alias("rank"), "neighbor_id"
     )
-    xn = (
+    xn = pin(
         load_table(spark, sf_dir, "embeddings")
         .select("vec_id", as_double_array(F.col("embedding")).alias("v"))
         .withColumn("nrm", F.sqrt(dot(F.col("v"), F.col("v"))))
-        .localCheckpoint(eager=False)  # query slice + corpus side
-    )
+    )  # query slice + corpus side
     qe = xn.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
@@ -2505,15 +2502,14 @@ def retrieval_graded_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     wm = Window.partitionBy("query_id").orderBy(
         F.desc("rel_u"), F.asc("neighbor_id")
     )
-    mrel = (
+    mrel = pin(
         xn.crossJoin(F.broadcast(qe))
         .filter(F.col("query_id") != F.col("vec_id"))
         .select("query_id", F.col("vec_id").alias("neighbor_id"), rel_u)
         .withColumn("rn", F.row_number().over(wm))
         .filter(F.col("rn") <= GR_MMR_REL)
         .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=False)  # n_rel + the rank join
-    )
+    )  # n_rel + the rank join
     mnrel = mrel.groupBy("query_id").agg(F.count("*").cast("long").alias("n_rel"))
     mjoin = mpicks.join(
         mrel.withColumn("hit", F.lit(1)), ["query_id", "neighbor_id"], "left"
@@ -2529,7 +2525,7 @@ def retrieval_graded_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Pinned: the dense ≤ queries×k list feeds the rrf union and BOTH wsf
     # traversals (list + normalization stats) — unpinned, the corpus-scan
     # crossJoin + rank window re-ran per consumer.
-    dense = _dense_scored(spark, sf_dir).localCheckpoint(eager=False)
+    dense = pin(_dense_scored(spark, sf_dir))
     rfused = rrf_fuse(
         [branked, dense.select("query_id", "doc_id", "rank")], BM25_TOP_K
     )
@@ -2584,12 +2580,11 @@ def retrieval_graded_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.when(hit, F.element_at(dcg_arr, F.col("rank"))).otherwise(0)
                 ).alias(f"dcg_u_{k}")
             )
-        perq = (
+        perq = pin(
             joined.groupBy("query_id")
             .agg(*aggs)
             .join(nrel, "query_id")
-            .localCheckpoint(eager=False)  # one row per query; k-branches
-        )
+        )  # one row per query; k-branches
         out = None
         for k in GR_KS:
             sel = perq.select(

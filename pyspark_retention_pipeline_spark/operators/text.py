@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..pins import pin
 from ..registry import query
 from ..tables import load_table
 
@@ -268,9 +269,12 @@ def word_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan (round-8 registry scan audit; the registry-wide budget test keeps
     every plan ≤ 2 scans per table)."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < _PAIR_LIMIT)
-    toks = d.select(
-        "doc_id", F.explode(F.array_distinct(F.split(F.col("text"), " "))).alias("token")
-    ).localCheckpoint(eager=False)
+    toks = pin(
+        d.select(
+            "doc_id",
+            F.explode(F.array_distinct(F.split(F.col("text"), " "))).alias("token"),
+        )
+    )
     sizes = toks.groupBy("doc_id").agg(F.count("*").alias("n"))
     a = toks.alias("a")
     b = toks.alias("b")
@@ -713,10 +717,12 @@ def minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") < MH_EVAL_DOCS
     )
     staged = _portable_token_hash_frame(d)
-    sh = staged.select(
-        "doc_id",
-        F.explode(F.array_distinct(_portable_kgram_array(SHINGLE))).alias("s"),
-    ).localCheckpoint(eager=False)  # one pin: sizes + self-join + mins
+    sh = pin(
+        staged.select(
+            "doc_id",
+            F.explode(F.array_distinct(_portable_kgram_array(SHINGLE))).alias("s"),
+        )
+    )  # one pin: sizes + self-join + mins
     sizes = sh.groupBy("doc_id").agg(F.count("*").cast("long").alias("n"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -1174,10 +1180,9 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plans.py)."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
     tf = d.select("doc_id", F.explode(F.split(F.col("text"), " ")).alias("token"))
-    tf_counts = (
+    tf_counts = pin(
         tf.groupBy("doc_id", "token")
         .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=False)
     )
     # tf_counts has exactly one row per (doc_id, token), so DF is a plain
     # per-token row count and N a distinct-doc count — no second pass over
@@ -1227,7 +1232,7 @@ def quality_zscore_frame(docs: DataFrame) -> DataFrame:
     corpus parquet is read exactly once and the two inherently sequential
     median passes re-read the pinned rows instead of the corpus
     (tests/test_plans.py asserts the downstream plan is parquet-free)."""
-    base = docs.select("doc_id", "lang", "n_chars").localCheckpoint(eager=False)
+    base = pin(docs.select("doc_id", "lang", "n_chars"))
     med = base.groupBy("lang").agg(F.median("n_chars").alias("med"))
     mad = (
         base.join(F.broadcast(med), "lang")
@@ -1545,7 +1550,7 @@ def heavy_hitters_frame(tok: DataFrame, k: int, div: int) -> DataFrame:
 
     sketch = tok.mapInPandas(mg_sketch, schema="token string, part_rows long")
     # Bounded by #partitions x (k + 1) rows; both consumers are tiny.
-    sketch = sketch.localCheckpoint(eager=False)
+    sketch = pin(sketch)
     total = sketch.agg(F.sum("part_rows").cast("long").alias("t"))
     cands = sketch.filter(F.col("token").isNotNull()).select("token").distinct()
     exact = (
@@ -1961,11 +1966,10 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     LP_SCALE-family trade."""
     d = load_table(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(F.split(F.col("text"), " ")).alias("token"))
-    tfc = (
+    tfc = pin(
         tok.groupBy("doc_id", "token")
         .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=False)  # df + dl + stats + queries + scoring
-    )
+    )  # df + dl + stats + queries + scoring
     dl = tfc.groupBy("doc_id").agg(F.sum("tf").cast("long").alias("dl"))
     dfc = tfc.groupBy("token").agg(F.count("*").alias("df"))
     stats = dl.agg(

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..pins import pin
 from ..registry import query
 from ..tables import load_table
 
@@ -259,10 +260,9 @@ def unigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # token mass; the lazy localCheckpoint pins one materialization (the
     # with_global_row_number pattern) so the corpus is scanned exactly twice
     # — LM side + probe side — instead of once per consumer.
-    cnt = (
+    cnt = pin(
         tok.groupBy("token")
         .agg(F.count("*").alias("c"))
-        .localCheckpoint(eager=False)
     )
     tot = cnt.agg(F.sum("c").cast("long").alias("t"))
     tl = cnt.crossJoin(F.broadcast(tot)).select(
@@ -415,10 +415,9 @@ def bigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # c2 feeds both the context totals and the lp join — pin ONE
     # materialization (the unigram vocab-count precedent) so the bigram
     # explode+aggregate doesn't re-run per consumer.
-    c2 = (
+    c2 = pin(
         bg.groupBy("w1", "w2")
         .agg(F.count("*").cast("long").alias("c2"))
-        .localCheckpoint(eager=False)
     )
     c1 = c2.groupBy("w1").agg(F.sum("c2").cast("long").alias("c1"))
     lp = c2.join(c1, "w1").select(
@@ -504,18 +503,16 @@ def token_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # uni feeds the token total + two join branches, c2 the bigram total +
     # the scoring join — pin one materialization of each aggregate so the
     # corpus really is scanned only twice (the unigram LM precedent).
-    uni = (
+    uni = pin(
         d.select(F.explode(F.split(F.col("text"), " ")).alias("token"))
         .groupBy("token")
         .agg(F.count("*").cast("long").alias("c1"))
-        .localCheckpoint(eager=False)
     )
     un = uni.agg(F.sum("c1").cast("long").alias("n_tok"))
-    c2 = (
+    c2 = pin(
         _bigram_frame(d)
         .groupBy("w1", "w2")
         .agg(F.count("*").cast("long").alias("c2"))
-        .localCheckpoint(eager=False)
     )
     bn = c2.agg(F.sum("c2").cast("long").alias("n_big"))
     scored = (
@@ -613,11 +610,10 @@ def kneser_ney_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     clamped and no unseen-bigram branch is needed."""
     d = load_table(spark, sf_dir, "documents")
     bg = _bigram_frame(d)
-    c2 = (
+    c2 = pin(
         bg.groupBy("w1", "w2")
         .agg(F.count("*").cast("long").alias("c2"))
-        .localCheckpoint(eager=False)  # ctx + cont + tot + lp join
-    )
+    )  # ctx + cont + tot + lp join
     ctx = c2.groupBy("w1").agg(
         F.sum("c2").cast("long").alias("c1"),
         F.count("*").cast("long").alias("nf"),

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..pins import pin
 from ..registry import query
 from ..tables import load_events, load_table
 
@@ -685,7 +686,7 @@ def theilsen_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     dollars = F.expr(
         "CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) DIV 100 AS BIGINT)"
     ).alias("dollars")
-    daily = o.groupBy(x.alias("x")).agg(dollars).localCheckpoint(eager=False)
+    daily = pin(o.groupBy(x.alias("x")).agg(dollars))
     # The pair join is a BroadcastNestedLoopJoin whose STREAM side is the
     # day-grain frame — one ~calendar-sized partition, so pair generation,
     # the slope projection, and the checkpoint write of the ~n²/2 slope
@@ -699,14 +700,13 @@ def theilsen_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.sparkContext.defaultParallelism
     )
     b = daily.select(F.col("x").alias("xb"), F.col("dollars").alias("db"))
-    slopes = (
+    slopes = pin(
         a.join(b, F.col("xa") < F.col("xb"))
         .select(
             ((F.col("db") - F.col("da")) / (F.col("xb") - F.col("xa")).cast("double"))
             .alias("slope")
         )
-        .localCheckpoint(eager=False)  # sketch pass + slice pass share one mat.
-    )
+    )  # sketch pass + slice pass share one mat.
     med = exact_quantile_frame(slopes, "slope", [0.5], ["med"], n_name="n_pairs")
     # n_days joins in-plan (1-row × 1-row) — a driver-side daily.count() at
     # construction time would trigger a job during plan-only audits.
@@ -762,14 +762,13 @@ def locf_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily aggregate is pinned (range derivation + probe join)."""
     e = load_events(spark, sf_dir)
     day = F.expr(f"ts_us DIV {DAY_US}")
-    daily = (
+    daily = pin(
         e.groupBy("user_id", day.alias("day"))
         .agg(
             F.sum(F.round(F.col("value") * 100).cast("long"))
             .cast("long")
             .alias("cents")
         )
-        .localCheckpoint(eager=False)
     )
     rng = daily.groupBy("user_id").agg(
         F.min("day").alias("d0"), F.max("day").alias("d1")

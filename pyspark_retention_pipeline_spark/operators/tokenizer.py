@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..pins import pin
 from ..registry import query
 from ..tables import load_table
 
@@ -351,11 +352,10 @@ def _bpe_chain(
     words = d.select(F.explode(F.split("text", " ")).alias("w")).filter(
         F.length("w") >= 2
     )
-    vocab = (
+    vocab = pin(
         words.groupBy("w")
         .agg(F.count("*").cast("long").alias("wn"))
         .select(F.regexp_replace("w", "(.)", r"|$1|").alias("r"), "wn")
-        .localCheckpoint(eager=False)
     )
     states, bests = [vocab], []
     for _t in range(1, rounds + 1):
@@ -378,16 +378,15 @@ def _bpe_chain(
             F.lit("~").alias("b"),
             F.lit(-1).cast("long").alias("pair_count"),
         )
-        best = (
+        best = pin(
             pairs.groupBy("a", "b")
             .agg(F.sum("wn").cast("long").alias("pair_count"))
             .unionByName(sentinel)
             .orderBy(F.desc("pair_count"), F.asc("a"), F.asc("b"))
             .limit(1)
-            .localCheckpoint(eager=False)  # 1 row: output + next vocab
-        )
+        )  # 1 row: output + next vocab
         bests.append(best)
-        vocab = (
+        vocab = pin(
             vocab.crossJoin(F.broadcast(best.select("a", "b")))
             .select(
                 F.replace(
@@ -405,8 +404,7 @@ def _bpe_chain(
                 ).alias("r"),
                 "wn",
             )
-            .localCheckpoint(eager=False)  # feeds count t+1 AND vocab t+2
-        )
+        )  # feeds count t+1 AND vocab t+2
         states.append(vocab)
     return states, bests
 
@@ -657,7 +655,7 @@ def unigram_lm_stats_frame(d: DataFrame) -> DataFrame:
     documents frame with a ``text`` column — factored so the planted-corpus
     test can pin a hand-checked EM round without parquet fixtures."""
     spark = d.sparkSession
-    words = (
+    words = pin(
         d.select(F.explode(F.split("text", " ")).alias("w"))
         .filter(
             (F.length("w") >= 1) & (F.length("w") <= UNI_MAX_WLEN)
@@ -665,8 +663,7 @@ def unigram_lm_stats_frame(d: DataFrame) -> DataFrame:
         .groupBy("w")
         .agg(F.count("*").cast("long").alias("wn"))
         .withColumn("len", F.length("w"))
-        .localCheckpoint(eager=False)  # seeds + every round's lattice
-    )
+    )  # seeds + every round's lattice
     nw = words.agg(F.sum("wn").cast("long").alias("nw"))
 
     comp_rows = _uni_compositions()
@@ -702,19 +699,18 @@ def unigram_lm_stats_frame(d: DataFrame) -> DataFrame:
         f"CAST(ROUND(ln(cnt / CAST(tot AS DOUBLE)) * {UNI_LP_SCALE}) AS BIGINT)"
     ).alias("lp_u")
 
-    subs = (
+    subs = pin(
         words.join(F.broadcast(spans), F.expr("st + pl - 1 <= len"))
         .groupBy(F.expr("substring(w, st, pl)").alias("piece"))
         .agg(F.sum("wn").cast("long").alias("cnt"))
-        .localCheckpoint(eager=False)  # charset + top-k branches
-    )
+    )  # charset + top-k branches
     chars = subs.filter(F.length("piece") == 1)
     topk = (
         subs.filter(F.length("piece") >= 2)
         .orderBy(F.desc("cnt"), F.asc("piece"))
         .limit(UNI_SEED_K)
     )
-    inv0 = chars.unionByName(topk).localCheckpoint(eager=False)
+    inv0 = pin(chars.unionByName(topk))
     tot0 = inv0.agg(F.sum("cnt").cast("long").alias("tot"))
     pieces = inv0.crossJoin(F.broadcast(tot0)).select("piece", lp_u)
 
@@ -733,7 +729,7 @@ def unigram_lm_stats_frame(d: DataFrame) -> DataFrame:
 
     stats_rows = []
     for t in range(UNI_EM_ROUNDS + 1):
-        pieces = pieces.localCheckpoint(eager=False)  # 2 lattice passes + count
+        pieces = pin(pieces)  # 2 lattice passes + count
         lat = lattice_parts(pieces)
         segs = (
             lat.groupBy("w", "wn", "seg_id", "n_parts")
@@ -744,19 +740,17 @@ def unigram_lm_stats_frame(d: DataFrame) -> DataFrame:
             .filter(F.col("nm") == F.col("n_parts"))
         )
         wv = Window.partitionBy("w").orderBy(F.desc("score"), F.asc("seg_id"))
-        best = (
+        best = pin(
             segs.withColumn("rn", F.row_number().over(wv))
             .filter(F.col("rn") == 1)
             .select("w", "wn", "seg_id", "n_parts", "score")
-            .localCheckpoint(eager=False)  # stats + the M-step count join
-        )
-        cnts = (
+        )  # stats + the M-step count join
+        cnts = pin(
             lattice_parts(pieces)
             .join(best.select("w", "seg_id"), ["w", "seg_id"])
             .groupBy("piece")
             .agg(F.sum("wn").cast("long").alias("cnt"))
-            .localCheckpoint(eager=False)  # n_active + next-round probs
-        )
+        )  # n_active + next-round probs
         n_pieces = pieces.agg(F.count("*").cast("long").alias("n_pieces"))
         n_active = cnts.agg(F.count("*").cast("long").alias("n_active"))
         stats_rows.append(

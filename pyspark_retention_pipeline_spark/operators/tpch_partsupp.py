@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..exprs import money_sum
+from ..pins import pin
 from ..registry import query
 from ..tables import load_table
 
@@ -184,11 +185,10 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Pinned: the part-grain value frame feeds the threshold aggregate AND
     # the final filter; unpinned, the threshold branch re-ran the whole
     # partsupp synthesis + nation join (4 supplier scans in the plan).
-    val = (
+    val = pin(
         ps.join(nat, ps.ps_suppkey == nat.s_suppkey)
         .groupBy("ps_partkey")
         .agg((F.sum(cents) / 100.0).alias("value"))
-        .localCheckpoint(eager=False)
     )
     thresh = val.agg((F.avg("value") * 2.0).alias("thresh"))
     return (

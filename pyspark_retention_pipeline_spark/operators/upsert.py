@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..pins import pin
 from ..registry import query
 
 
@@ -119,7 +120,7 @@ def merge_upsert_snapshot(spark, sf_dir: str) -> DataFrame:
     re-derivation of the target — unpinned, each branch re-scanned
     orders."""
     base = _orders_base(spark, sf_dir)
-    updates = _orders_updates(base).localCheckpoint(eager=False)
+    updates = pin(_orders_updates(base))
     merged = upsert(base, updates, ["o_orderkey"])
     return merged.select(
         "o_orderkey",
@@ -169,11 +170,13 @@ def scd2_order_versions(spark, sf_dir: str) -> DataFrame:
         F.col("o_orderdate").alias("valid_from"),
         F.lit(None).cast("timestamp_ntz").alias("valid_to"),
     )
-    changes = current.filter(F.col("o_orderkey") % UPD_MOD == 0).select(
-        "o_orderkey",
-        F.lit("U").alias("o_orderstatus"),
-        ts_lit(SCD2_CHANGE_TS).alias("change_ts"),
-    ).localCheckpoint(eager=False)
+    changes = pin(
+        current.filter(F.col("o_orderkey") % UPD_MOD == 0).select(
+            "o_orderkey",
+            F.lit("U").alias("o_orderstatus"),
+            ts_lit(SCD2_CHANGE_TS).alias("change_ts"),
+        )
+    )
     out = scd2_apply(current, changes, "o_orderkey", "change_ts")
     return out.select("o_orderkey", "o_orderstatus", "valid_from", "valid_to")
 
@@ -222,16 +225,18 @@ def cdc_multi_action_apply(spark, sf_dir: str) -> DataFrame:
     base = _orders_base(spark, sf_dir)
     ck = F.col("o_orderkey")
     is_del = ck % (UPD_MOD * 2) == 0
-    changes = base.filter(ck % UPD_MOD == 0).select(
-        "o_orderkey",
-        F.when(is_del, F.col("o_orderstatus")).otherwise(F.lit("U")).alias(
-            "o_orderstatus"
-        ),
-        F.when(is_del, F.col("o_totalprice"))
-        .otherwise(F.round(F.col("o_totalprice") + 100.0, 2))
-        .alias("o_totalprice"),
-        F.when(is_del, F.lit("D")).otherwise(F.lit("U")).alias("op"),
-    ).localCheckpoint(eager=False)
+    changes = pin(
+        base.filter(ck % UPD_MOD == 0).select(
+            "o_orderkey",
+            F.when(is_del, F.col("o_orderstatus")).otherwise(F.lit("U")).alias(
+                "o_orderstatus"
+            ),
+            F.when(is_del, F.col("o_totalprice"))
+            .otherwise(F.round(F.col("o_totalprice") + 100.0, 2))
+            .alias("o_totalprice"),
+            F.when(is_del, F.lit("D")).otherwise(F.lit("U")).alias("op"),
+        )
+    )
     merged = apply_changes(base, changes, ["o_orderkey"])
     return merged.select(
         "o_orderkey",

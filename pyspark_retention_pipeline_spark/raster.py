@@ -2,8 +2,8 @@
 
 The reference emits PNG artifacts via matplotlib
 (``pipeline/plot_threshold.py:33-83``, ``plot_feature_importance.py:63-71``);
-matplotlib is not in this container, so :mod:`.viz` falls back to this
-module: a small raster canvas (numpy RGB buffer, Bresenham lines, filled
+:mod:`.viz` renders them with this module instead, with no plotting
+dependency: a small raster canvas (numpy RGB buffer, Bresenham lines, filled
 rects, a built-in public-domain-style 5×7 bitmap font) plus a standards-
 compliant PNG encoder built on stdlib ``zlib``/``struct`` only (8-bit RGB,
 filter 0). Artifacts are BOUNDED driver-side renders — the inputs are the

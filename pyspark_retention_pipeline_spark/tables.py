@@ -166,20 +166,16 @@ TABLES = tuple(SCHEMAS)
 #
 # The window is additionally bounded on BOTH sides so the opt-in is
 # scale-adaptive, never a local[32] constant:
-#   * below FANOUT_MIN_BYTES (default 256 KiB) the table processes in
+#   * below _FANOUT_MIN_BYTES (256 KiB) the table processes in
 #     milliseconds on one core and the exchange would cost more than it
 #     frees (dimension tables; everything at sf0.001, which also keeps the
 #     shuffle census and the plan-invariant suite — both defined at
 #     sf0.001 — byte-identical);
-#   * above FANOUT_MAX_BYTES (default 256 MiB), and for directory layouts
+#   * above _FANOUT_MAX_BYTES (256 MiB), and for directory layouts
 #     (the only way 100 TB arrives), the input already yields >= one task
 #     per row group / file and the loader leaves it alone.
-# Both bounds are env-tunable for cluster postures where the defaults are
-# wrong (e.g. a fat single-file extract on a small cluster).
-_FANOUT_MIN_BYTES = int(os.environ.get("SPARK_GRAFT_FANOUT_MIN_BYTES", str(256 * 1024)))
-_FANOUT_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_FANOUT_MAX_BYTES", str(256 * 1024 * 1024))
-)
+_FANOUT_MIN_BYTES = 256 * 1024
+_FANOUT_MAX_BYTES = 256 * 1024 * 1024
 
 # Round-16 refinement (verdict item 7): the fan-out TARGET is sized by
 # input bytes, not pinned to defaultParallelism. PERF_r15's scaling block
@@ -200,9 +196,7 @@ _FANOUT_MAX_BYTES = int(
 # ceil(bytes / split) capped at defaultParallelism. Both knobs stay
 # scale-adaptive: the byte rule grows with the input, the cap follows the
 # session's cores (the driver's lower-core bench scales down with it).
-_FANOUT_SPLIT_BYTES = int(
-    os.environ.get("SPARK_GRAFT_FANOUT_SPLIT_BYTES", str(64 * 1024))
-)
+_FANOUT_SPLIT_BYTES = 64 * 1024
 
 
 def _scan_fan_out(

@@ -2,42 +2,19 @@
 feature-importance bars (reference parity for ``pipeline/plot_threshold.py:63-83``
 and ``pipeline/plot_feature_importance.py:20-60``).
 
-matplotlib is not installed in this container, so rendering is
-import-gated the same way serving gates FastAPI: when matplotlib is
-available its PNG path mirrors the reference; otherwise ``.png`` targets
-render through the dependency-free raster encoder (:mod:`.raster` —
-stdlib zlib/struct + numpy, built-in 5×7 font) and other targets through
-the SVG writer, both producing the same artifacts (polyline curve with a
-best-threshold marker; signed horizontal bars). The DATA inputs are the oracle-verified
-``threshold_curve`` query and ``ml.coefficients_frame`` — rendering consumes
-their bounded outputs (101 rows / one row per feature), never raw data.
+Charts render to PNG through the dependency-free raster encoder
+(:mod:`.raster` — stdlib zlib/struct + numpy, built-in 5×7 font): a polyline
+curve with a best-threshold marker, and signed horizontal bars. The DATA
+inputs are the oracle-verified ``threshold_curve`` query and
+``ml.coefficients_frame`` — rendering consumes their bounded outputs (101
+rows / one row per feature), never raw data.
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
-try:  # pragma: no cover - not installed in this container
-    import matplotlib
-
-    matplotlib.use("Agg")
-    import matplotlib.pyplot as plt
-except ImportError:
-    plt = None
-
 _W, _H, _PAD = 700, 500, 55
-
-
-def _svg_header() -> list[str]:
-    return [
-        f'<svg xmlns="http://www.w3.org/2000/svg" width="{_W}" height="{_H}" '
-        f'viewBox="0 0 {_W} {_H}" font-family="sans-serif" font-size="12">',
-        f'<rect width="{_W}" height="{_H}" fill="white"/>',
-        # axes
-        f'<line x1="{_PAD}" y1="{_H - _PAD}" x2="{_W - _PAD}" y2="{_H - _PAD}" stroke="black"/>',
-        f'<line x1="{_PAD}" y1="{_PAD}" x2="{_PAD}" y2="{_H - _PAD}" stroke="black"/>',
-    ]
 
 
 def _sx(t: float) -> float:
@@ -48,96 +25,10 @@ def _sy(v: float) -> float:
     return (_H - _PAD) - v * (_H - 2 * _PAD)
 
 
-def threshold_curve_svg(
-    rows: Sequence[dict], out_path: str, best_threshold: float | None = None
-) -> str:
-    """Render precision/recall/F1 vs threshold. ``rows`` are the collected
-    dicts of the ``threshold_curve`` query (columns t, precision, recall,
-    f1); 101 rows — a bounded artifact sink."""
-    rows = sorted(rows, key=lambda r: r["t"])
-    parts = _svg_header()
-    parts.append(
-        f'<text x="{_W // 2}" y="20" text-anchor="middle">Threshold Optimization Curve</text>'
-    )
-    parts.append(
-        f'<text x="{_W // 2}" y="{_H - 12}" text-anchor="middle">Threshold</text>'
-    )
-    colors = {"f1": "#1f77b4", "precision": "#ff7f0e", "recall": "#2ca02c"}
-    for i, (metric, color) in enumerate(colors.items()):
-        pts = " ".join(f"{_sx(r['t']):.1f},{_sy(r[metric]):.1f}" for r in rows)
-        parts.append(
-            f'<polyline points="{pts}" fill="none" stroke="{color}" stroke-width="2"/>'
-        )
-        parts.append(
-            f'<text x="{_W - _PAD - 100}" y="{_PAD + 16 * i}" fill="{color}">{metric}</text>'
-        )
-    if best_threshold is not None:
-        x = _sx(best_threshold)
-        parts.append(
-            f'<line x1="{x:.1f}" y1="{_PAD}" x2="{x:.1f}" y2="{_H - _PAD}" '
-            f'stroke="gray" stroke-dasharray="6,4"/>'
-        )
-        parts.append(
-            f'<text x="{x + 4:.1f}" y="{_PAD + 12}" fill="gray">best = {best_threshold:.2f}</text>'
-        )
-    parts.append("</svg>")
-    svg = "\n".join(parts)
-    _write(out_path, svg)
-    return svg
-
-
-def feature_importance_svg(rows: Sequence[dict], out_path: str) -> str:
-    """Sign-aware horizontal coefficient bars (positive right/red = churn
-    risk up, negative left/blue = churn risk down — the reference's color
-    semantics). ``rows`` come from ``ml.coefficients_frame`` (one per
-    feature, already ranked by |coefficient|)."""
-    rows = list(rows)
-    # default=0.0 so an empty model (no features) renders an empty chart
-    # instead of raising ValueError from max() on an empty generator.
-    max_abs = max((abs(r["coefficient"]) for r in rows), default=0.0) or 1.0
-    mid_x = _W / 2
-    bar_h = (_H - 2 * _PAD) / max(len(rows), 1)
-    parts = [
-        f'<svg xmlns="http://www.w3.org/2000/svg" width="{_W}" height="{_H}" '
-        f'viewBox="0 0 {_W} {_H}" font-family="sans-serif" font-size="12">',
-        f'<rect width="{_W}" height="{_H}" fill="white"/>',
-        f'<text x="{_W // 2}" y="20" text-anchor="middle">Feature Importance (signed)</text>',
-        f'<line x1="{mid_x}" y1="{_PAD}" x2="{mid_x}" y2="{_H - _PAD}" stroke="black"/>',
-    ]
-    for i, r in enumerate(rows):
-        coef = r["coefficient"]
-        w = abs(coef) / max_abs * (_W / 2 - _PAD - 10)
-        y = _PAD + i * bar_h + 2
-        color = "#d62728" if coef >= 0 else "#1f77b4"
-        x = mid_x if coef >= 0 else mid_x - w
-        parts.append(
-            f'<rect x="{x:.1f}" y="{y:.1f}" width="{w:.1f}" height="{bar_h - 6:.1f}" '
-            f'fill="{color}"/>'
-        )
-        tx = mid_x + w + 6 if coef >= 0 else mid_x - w - 6
-        anchor = "start" if coef >= 0 else "end"
-        parts.append(
-            f'<text x="{tx:.1f}" y="{y + bar_h / 2:.1f}" text-anchor="{anchor}" '
-            f'dominant-baseline="middle">{r["feature"]} ({coef:+.3f})</text>'
-        )
-    parts.append("</svg>")
-    svg = "\n".join(parts)
-    _write(out_path, svg)
-    return svg
-
-
-def _write(path: str, content: str) -> None:
-    os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
-    with open(path, "w") as f:
-        f.write(content)
-
-
-_HEX = {
-    "#1f77b4": (31, 119, 180),
-    "#ff7f0e": (255, 127, 14),
-    "#2ca02c": (44, 160, 44),
-    "#d62728": (214, 39, 40),
-}
+_BLUE = (31, 119, 180)
+_ORANGE = (255, 127, 14)
+_GREEN = (44, 160, 44)
+_RED = (214, 39, 40)
 _GRAY = (128, 128, 128)
 _BLACK = (0, 0, 0)
 
@@ -145,9 +36,9 @@ _BLACK = (0, 0, 0)
 def threshold_curve_png(
     rows: Sequence[dict], out_path: str, best_threshold: float | None = None
 ) -> str:
-    """Dependency-free PNG twin of :func:`threshold_curve_svg` (same
-    geometry, rendered via :mod:`.raster` — closes the reference's
-    PNG-artifact parity without matplotlib)."""
+    """Precision/recall/F1 vs threshold as a PNG. ``rows`` are the collected
+    dicts of the ``threshold_curve`` query (columns t, precision, recall,
+    f1); 101 rows — a bounded artifact sink."""
     from .raster import Canvas
 
     rows = sorted(rows, key=lambda r: r["t"])
@@ -156,11 +47,11 @@ def threshold_curve_png(
     c.line(_PAD, _PAD, _PAD, _H - _PAD, _BLACK)            # y axis
     c.text(_W // 2, 12, "Threshold Optimization Curve", anchor="middle")
     c.text(_W // 2, _H - 18, "Threshold", anchor="middle")
-    colors = {"f1": "#1f77b4", "precision": "#ff7f0e", "recall": "#2ca02c"}
+    colors = {"f1": _BLUE, "precision": _ORANGE, "recall": _GREEN}
     for i, (metric, color) in enumerate(colors.items()):
         pts = [(_sx(r["t"]), _sy(r[metric])) for r in rows]
-        c.polyline(pts, _HEX[color], width=2)
-        c.text(_W - _PAD - 100, _PAD + 16 * i, metric, _HEX[color])
+        c.polyline(pts, color, width=2)
+        c.text(_W - _PAD - 100, _PAD + 16 * i, metric, color)
     if best_threshold is not None:
         x = _sx(best_threshold)
         c.line(x, _PAD, x, _H - _PAD, _GRAY, dash=(6, 4))
@@ -169,11 +60,15 @@ def threshold_curve_png(
 
 
 def feature_importance_png(rows: Sequence[dict], out_path: str) -> str:
-    """Dependency-free PNG twin of :func:`feature_importance_svg` — signed
-    horizontal bars, red right = churn risk up, blue left = risk down."""
+    """Sign-aware horizontal coefficient bars as a PNG (positive right/red
+    = churn risk up, negative left/blue = churn risk down — the reference's
+    color semantics). ``rows`` come from ``ml.coefficients_frame`` (one per
+    feature, already ranked by |coefficient|)."""
     from .raster import Canvas
 
     rows = list(rows)
+    # default=0.0 so an empty model (no features) renders an empty chart
+    # instead of raising ValueError from max() on an empty generator.
     max_abs = max((abs(r["coefficient"]) for r in rows), default=0.0) or 1.0
     mid_x = _W / 2
     bar_h = (_H - 2 * _PAD) / max(len(rows), 1)
@@ -184,7 +79,7 @@ def feature_importance_png(rows: Sequence[dict], out_path: str) -> str:
         coef = r["coefficient"]
         w = abs(coef) / max_abs * (_W / 2 - _PAD - 10)
         y = _PAD + i * bar_h + 2
-        color = _HEX["#d62728"] if coef >= 0 else _HEX["#1f77b4"]
+        color = _RED if coef >= 0 else _BLUE
         x = mid_x if coef >= 0 else mid_x - w
         c.fill_rect(x, y, w, bar_h - 6, color)
         label = f"{r['feature']} ({coef:+.3f})"
@@ -195,38 +90,8 @@ def feature_importance_png(rows: Sequence[dict], out_path: str) -> str:
 
 
 def render_threshold_curve(rows: Sequence[dict], out_path: str, best_threshold=None) -> str:
-    """PNG via matplotlib when available (reference behavior); else the
-    built-in raster PNG for ``.png`` paths; else SVG."""
-    if plt is not None:  # pragma: no cover - matplotlib absent here
-        rows = sorted(rows, key=lambda r: r["t"])
-        plt.figure(figsize=(7, 5))
-        for metric in ("f1", "precision", "recall"):
-            plt.plot([r["t"] for r in rows], [r[metric] for r in rows], label=metric)
-        if best_threshold is not None:
-            plt.axvline(best_threshold, linestyle="--", label=f"best = {best_threshold:.2f}")
-        plt.xlabel("Threshold")
-        plt.ylabel("Score")
-        plt.legend()
-        plt.tight_layout()
-        plt.savefig(out_path, dpi=150)
-        plt.close()
-        return out_path
-    if out_path.lower().endswith(".png"):
-        return threshold_curve_png(rows, out_path, best_threshold)
-    return threshold_curve_svg(rows, out_path, best_threshold)
+    return threshold_curve_png(rows, out_path, best_threshold)
 
 
 def render_feature_importance(rows: Sequence[dict], out_path: str) -> str:
-    if plt is not None:  # pragma: no cover - matplotlib absent here
-        rows = list(rows)
-        plt.figure(figsize=(7, 5))
-        colors = ["#d62728" if r["coefficient"] >= 0 else "#1f77b4" for r in rows]
-        plt.barh([r["feature"] for r in rows], [r["coefficient"] for r in rows], color=colors)
-        plt.tight_layout()
-        plt.savefig(out_path, dpi=150)
-        plt.close()
-        return out_path
-    if out_path.lower().endswith(".png"):
-        return feature_importance_png(rows, out_path)
-    return feature_importance_svg(rows, out_path)
-
+    return feature_importance_png(rows, out_path)

@@ -65,6 +65,7 @@ def main() -> int:
         )
         return 2
 
+    from pyspark_retention_pipeline_spark.pins import pins
     from pyspark_retention_pipeline_spark.registry import all_oracle_sql, all_queries
     from pyspark_retention_pipeline_spark.session import get_spark
     from pyspark_retention_pipeline_spark.testing import (
@@ -88,7 +89,8 @@ def main() -> int:
     for name, sql in oracles.items():
         t0 = time.perf_counter()
         try:
-            r = compare_query(name, queries[name](spark, args.sf_dir), con, sql)
+            with pins():  # the query's pins go once it is compared
+                r = compare_query(name, queries[name](spark, args.sf_dir), con, sql)
             ok, detail = r.ok, ("" if r.ok else r.detail.splitlines()[0][:160])
             ss, os_ = r.spark_sec, r.oracle_sec
         except Exception as e:  # a crash is a failure, not a sweep abort

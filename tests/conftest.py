@@ -4,6 +4,7 @@ import os
 
 import pytest
 
+from pyspark_retention_pipeline_spark.pins import pins
 from pyspark_retention_pipeline_spark.session import get_spark
 
 # Small scale factor by default for fast tests; parity at sf0.01 is run via
@@ -67,24 +68,26 @@ def sparse_churn_model(spark, sf_dir):
     return model, features
 
 
+@pytest.fixture(scope="module", autouse=True)
+def module_pins():
+    """The pins a module's fixtures make are released after its last test."""
+    with pins():
+        yield
+
+
+@pytest.fixture(autouse=True)
+def function_pins():
+    """The pins a test makes are released when it ends."""
+    with pins():
+        yield
+
+
 @pytest.fixture
 def persistent_rdds(spark):
-    """A callable returning ``(ids, cached)``: the ids of the RDDs persisted
-    now, and those of them that are not local checkpoints.
-
-    A leak check around some code asserts that the ids afterwards are a
-    subset of ``ids`` (nothing it persisted is left behind) and a superset
-    of ``cached`` (it released no cache it did not make). The two sets
-    differ because operators' ``localCheckpoint`` RDDs stay persisted after
-    the frames that read them are gone, until Spark's ContextCleaner drops
-    them at some later JVM GC, which may come while the checked code runs;
-    a cached frame is held by the CacheManager and goes only by an
-    unpersist."""
+    """A callable returning the ids of the RDDs persisted now. A leak check
+    around some code asserts that the ids afterwards equal the ids before:
+    it left nothing persisted and released nothing it did not make. The
+    code's own pins must go with a ``pins()`` scope that ends before the
+    second call."""
     sc = spark.sparkContext
-
-    def snapshot() -> tuple[set[int], set[int]]:
-        rdds = sc._jsc.getPersistentRDDs()
-        ids = set(rdds.keySet())
-        return ids, {i for i in ids if not rdds.get(i).rdd().isLocallyCheckpointed()}
-
-    return snapshot
+    return lambda: set(sc._jsc.getPersistentRDDs().keySet())

@@ -181,11 +181,9 @@ def test_fit_pipeline_releases_its_caches(spark, sf_dir, features, persistent_rd
         final = weighted_lr()
     frame.count()
     try:
-        persisted, cached = persistent_rdds()
+        persisted = persistent_rdds()
         model = fit_pipeline(_prepared(frame, cols), cols, final)
-        after, _ = persistent_rdds()
-        assert after <= persisted
-        assert cached <= after
+        assert persistent_rdds() == persisted
         assert len(model.stages[-1].coefficients) == len(cols)
     finally:
         if source == "quality":
@@ -536,6 +534,23 @@ def test_quality_classifier_planted_separability(spark, monkeypatch):
     good_scores = out[out.doc_id < 100].qc_score
     bad_scores = out[out.doc_id >= 100].qc_score
     assert good_scores.min() > bad_scores.max()
+
+
+@pytest.mark.slow
+def test_quality_classifier_build_releases_its_pins(spark, sf_dir):
+    """The session cache builds the quality classifier in a pins scope of
+    its own: after the first build no local checkpoint stays persisted (its
+    feature frame's pins went with the build), and the scores, which read
+    the cached feature frame, still return every document."""
+    import pyspark_retention_pipeline_spark.operators.mlops as mo
+
+    for _, cached_features in mo._QC_CACHE.values():
+        cached_features.unpersist()
+    mo._QC_CACHE.clear()
+    _, features = mo._train_quality(spark, sf_dir)
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    assert not [i for i in rdds.keySet() if rdds.get(i).rdd().isLocallyCheckpointed()]
+    assert mo.quality_classifier_scores(spark, sf_dir).count() == features.count() > 0
 
 
 @pytest.mark.slow

@@ -1,10 +1,10 @@
 """Plot-artifact rendering on real (oracle-verified) query outputs.
 
 PNG artifacts (reference parity: ``plot_threshold.py``,
-``plot_feature_importance.py``) render through matplotlib when available,
-else the dependency-free raster encoder — verified here by decoding the
-emitted PNG (chunk CRCs, dimensions, pixel colors) with the module's own
-minimal decoder, which shares no code with the encoder's filter logic.
+``plot_feature_importance.py``) render through the dependency-free raster
+encoder — verified here by decoding the emitted PNG (chunk CRCs,
+dimensions, pixel colors) with the module's own minimal decoder, which
+shares no code with the encoder's filter logic.
 """
 
 from __future__ import annotations
@@ -63,40 +63,11 @@ def test_feature_importance_png_artifact(spark, sf_dir, tmp_path):
         assert not blue[:, mid + 1 :].any()
 
 
-def test_svg_variants_still_render(tmp_path):
-    from pyspark_retention_pipeline_spark.viz import (
-        feature_importance_svg,
-        threshold_curve_svg,
-    )
-
-    rows = [
-        {"t": t / 10, "precision": 0.9 - t / 20, "recall": t / 10, "f1": 0.5}
-        for t in range(11)
-    ]
-    svg = threshold_curve_svg(rows, str(tmp_path / "tc.svg"), best_threshold=0.4)
-    assert svg.count("<polyline") == 3
-    assert "best =" in svg and "stroke-dasharray" in svg
-
-    svg2 = feature_importance_svg(
-        [
-            {"feature": "up_risk", "coefficient": 0.8},
-            {"feature": "down_risk", "coefficient": -0.4},
-        ],
-        str(tmp_path / "fi.svg"),
-    )
-    assert "#d62728" in svg2 and "#1f77b4" in svg2  # sign-aware colors
-
-
 def test_feature_importance_empty_rows(tmp_path):
     """An empty coefficient list renders an empty chart instead of raising
     ValueError from max() on an empty generator (round-2 advisor finding)."""
-    from pyspark_retention_pipeline_spark.viz import (
-        feature_importance_png,
-        feature_importance_svg,
-    )
+    from pyspark_retention_pipeline_spark.viz import feature_importance_png
 
-    svg = feature_importance_svg([], str(tmp_path / "fi.svg"))
-    assert svg.startswith("<svg")
     png = feature_importance_png([], str(tmp_path / "fi.png"))
     assert decode_png(open(png, "rb").read()).shape == (500, 700, 3)
 

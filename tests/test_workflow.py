@@ -19,7 +19,7 @@ def test_full_lifecycle(spark, sf_dir, tmp_path, persistent_rdds):
     # it, and it releases no cache it did not make (see ``persistent_rdds``).
     held = spark.range(3).cache()  # a cache the lifecycle must not release
     held.count()
-    persisted_before, cached_before = persistent_rdds()
+    persisted_before = persistent_rdds()
 
     counts = run_feature_etl(spark, sf_dir, out)
     assert set(counts) == {"train", "val", "test"}
@@ -74,9 +74,7 @@ def test_full_lifecycle(spark, sf_dir, tmp_path, persistent_rdds):
         img = decode_png(open(paths[key], "rb").read())
         assert img.shape == (500, 700, 3)
 
-    persisted_after, _ = persistent_rdds()
-    assert persisted_after <= persisted_before
-    assert cached_before <= persisted_after
+    assert persistent_rdds() == persisted_before
     held.unpersist()
 
 
@@ -99,11 +97,10 @@ def test_lifecycle_keeps_a_callers_cache(spark, sf_dir, tmp_path, persistent_rdd
     prepared = add_class_weight(cast_features(held, FEATURE_COLS)).cache()
     prepared.count()
     try:
-        _, cached_before = persistent_rdds()
+        persisted_before = persistent_rdds()
         run_feature_etl(spark, sf_dir, str(tmp_path / "artifacts"))
         train_churn_model(churn_feature_frame(spark, sf_dir))
-        _, cached_after = persistent_rdds()
-        assert cached_before <= cached_after
+        assert persistent_rdds() == persisted_before
         assert StorageLevel.NONE not in (held.storageLevel, prepared.storageLevel)
     finally:
         prepared.unpersist()
