@@ -81,7 +81,8 @@ def test_a_pin_made_with_no_scope_open_stays_persisted(spark, persistent_rdds):
     with pins():
         thread = threading.Thread(target=lambda: made.append(pin(_frame(spark))))
         thread.start()
-        thread.join()
+        thread.join(timeout=120)
+    assert not thread.is_alive()
     rdd = made[0]._jdf.queryExecution().analyzed().rdd()
     try:
         assert rdd.isLocallyCheckpointed()
