@@ -54,6 +54,14 @@ def scaled_sum(expr: Column, scale: int = 4) -> Column:
     return F.sum(F.round(expr * s).cast("long")) / F.lit(float(s))
 
 
+def md5_u32(key: Column | str) -> Column:
+    """The first 8 hex digits of ``md5(key)`` as a BIGINT in [0, 2^32) —
+    the package's deterministic hash value of a string key, identical on
+    every engine, run and partitioning. Callers take their own modulus.
+    DuckDB twin: ``CAST(('0x' || substring(md5(key), 1, 8)) AS BIGINT)``."""
+    return F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("long")
+
+
 def bigint(col: Column) -> Column:
     return col.cast("long")
 

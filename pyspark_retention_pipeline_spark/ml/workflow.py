@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.retention import churn_feature_frame
-from ..operators.threshold import confusion_cells, pick_best, sweep_scores, with_metrics
+from ..operators.threshold import confusion_cells, pick_best, score_curve
 from .pipeline import (
     cached,
     coefficients_frame,
@@ -82,8 +82,7 @@ def _sweep_best_threshold(
     ascending thresholds keeps the LOWEST t at the max metric value."""
     if thr_metric not in ("f1", "recall", "precision"):
         raise ValueError(f"unknown thr_metric {thr_metric!r}")
-    sweep = sweep_scores(scored.selectExpr("label", "p_churn AS score"))
-    best = pick_best(with_metrics(sweep), thr_metric).collect()[0]
+    best = pick_best(score_curve(scored), thr_metric).collect()[0]
     return {
         "best_threshold": best["t"],
         "best_f1": best["f1"],
@@ -139,11 +138,8 @@ def run_plots(
     os.makedirs(plot_dir, exist_ok=True)
     model = PipelineModel.load(os.path.join(out_dir, "model"))
     sdf = spark.read.parquet(os.path.join(out_dir, split))
-    scored = score_frame(model, sdf).select(
-        F.col("label"), F.col("p_churn").alias("score")
-    )
     curve = (
-        with_metrics(sweep_scores(scored))
+        score_curve(score_frame(model, sdf))
         .select("t", "precision", "recall", "f1")
         .orderBy("t")
     )

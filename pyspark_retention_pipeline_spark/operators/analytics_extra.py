@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..exprs import as_double_array, dot, money_sum
+from ..exprs import as_double_array, dot, md5_u32, money_sum
 from ..pins import pin
 from ..registry import query
 from ..tables import load_events, load_table
@@ -1258,19 +1258,11 @@ def bootstrap_revenue_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         reps.alias("b"),
     ).withColumn(
         "u",
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        ":", F.col("b").cast("string"), F.col("o_orderkey").cast("string")
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long"),
+        md5_u32(
+            F.concat_ws(
+                ":", F.col("b").cast("string"), F.col("o_orderkey").cast("string")
+            )
+        ),
     )
     k = F.col("u")
     weight = F.when(k < _POISSON1_T[0], 0)

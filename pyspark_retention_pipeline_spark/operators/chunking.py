@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..exprs import md5_u32
 from ..pins import pin
 from ..registry import query
 from ..tables import load_table
@@ -180,9 +181,7 @@ def pack_documents_frame(
     if n_docs is None:
         n_docs = docs.count()
     n_shards = max(1, -(-n_docs // shard_docs))
-    bucket = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-    ).cast("long") % n_shards
+    bucket = md5_u32(F.col("doc_id").cast("string")) % n_shards
     sized = docs.select(
         "doc_id",
         bucket.alias("shard_id"),
@@ -315,9 +314,7 @@ def packing_efficiency_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     n_docs = _parquet_num_rows(f"{sf_dir}/documents.parquet")
     n_shards = max(1, -(-n_docs // PACK_SHARD_DOCS))
-    bucket = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-    ).cast("long") % n_shards
+    bucket = md5_u32(F.col("doc_id").cast("string")) % n_shards
     sized = pin(
         docs.select(
             "doc_id",

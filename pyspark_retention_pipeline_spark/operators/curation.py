@@ -25,11 +25,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..exprs import md5_u32
 from ..pins import pin
 from ..registry import query
 from ..tables import load_table
-from .sampling import _MIX_CASE_SQL, split_assignment_frame
-from .text import SIMHASH_SIGS_CTE, simhash_candidate_frame
+from .sampling import MIX_CASE_SQL, split_assignment_frame
+from .text import (
+    SIMHASH_SIGS_CTE,
+    gram_hash_array,
+    simhash_candidate_frame,
+    token_hash_frame,
+)
 
 NGRAM = 5
 # Every 97th doc plays the held-out benchmark: a deterministic stand-in for
@@ -72,8 +78,8 @@ def _gram_hash_frame(
     identity convention (NULL-skip truncation, hash-of-token-hashes,
     staging) cannot drift between the diagnostic and the rewrite
     (round-12 review finding)."""
-    staged = _token_hash_frame(docs)
-    gram_h = _gram_array(k)
+    staged = token_hash_frame(docs)
+    gram_h = gram_hash_array(k)
     if with_pos:
         return staged.select(
             "doc_id", F.posexplode(gram_h).alias("pos", "gram")
@@ -81,27 +87,6 @@ def _gram_hash_frame(
     if distinct:
         gram_h = F.array_distinct(gram_h)
     return staged.select("doc_id", F.explode(gram_h).alias("gram"))
-
-
-def _token_hash_frame(docs: DataFrame) -> DataFrame:
-    """``(doc_id, th)`` — per-document token-hash arrays, the staging
-    stage of :func:`_gram_hash_frame`, exposed so multi-k consumers
-    (:func:`crossdoc_span_profile`) can stage ONE token pass and derive
-    every gram length from it instead of re-scanning documents per k."""
-    toks = F.split(F.col("text"), " ")
-    return docs.select(
-        "doc_id", F.transform(toks, lambda x: F.xxhash64(x)).alias("th")
-    )
-
-
-def _gram_array(k: int):
-    """Gram-hash array Column over a ``th`` token-hash column — the gram
-    stage of :func:`_gram_hash_frame` (same NULL-skip truncation for
-    docs shorter than ``k``)."""
-    starts = F.sequence(F.lit(0), F.greatest(F.size(F.col("th")) - k, F.lit(0)))
-    return F.transform(
-        starts, lambda i: F.xxhash64(*[F.get("th", i + j) for j in range(k)])
-    )
 
 
 @query(
@@ -350,7 +335,7 @@ _GRAM_SQL = f"""
                   AS BIGINT) % 100 AS bucket
       FROM clean
       WHERE CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-                 AS BIGINT) % 100 < {_MIX_CASE_SQL}
+                 AS BIGINT) % 100 < {MIX_CASE_SQL}
     )
     SELECT doc_id, lang, n_grams, n_contaminated,
            CASE WHEN bucket < 90 THEN 'train'
@@ -415,10 +400,8 @@ def curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(contam, "doc_id")
         .filter(F.col("n_contaminated") * CONTAM_KEEP_DEN <= F.col("n_grams"))
     )
-    bucket = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-    ).cast("long") % 100
-    mixed = clean.filter(bucket < F.expr(_MIX_CASE_SQL))
+    bucket = md5_u32(F.col("doc_id").cast("string")) % 100
+    mixed = clean.filter(bucket < F.expr(MIX_CASE_SQL))
     return split_assignment_frame(mixed, "doc_id").select(
         "doc_id", "lang", "n_grams", "n_contaminated", "split"
     )
@@ -1062,7 +1045,7 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Oracle twin of the end-to-end near-dup clustering: the PORTABLE banded
-# minhash pair set (text._PORT_BANDS_CTE — the same single band-value
+# minhash pair set (text.PORT_BANDS_CTE — the same single band-value
 # definition minhash_banded_candidates checks) chained into the unrolled
 # hook+jump CC fixpoint (_cc_fixpoint_sql, the group-split audit's
 # machinery). Both engines derive identical edges, so the component minima
@@ -1070,10 +1053,10 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rows-only to oracle-checked (dedup_clusters stays the xxhash64 scale
 # path; this is its portable semantic twin, the simhash/minhash precedent).
 def _dedup_clusters_oracle() -> str:
-    from .text import _PORT_BANDS_CTE, _PORT_MINS_CTE
+    from .text import PORT_BANDS_CTE, PORT_MINS_CTE
 
     return f"""
-    WITH {_PORT_MINS_CTE}, {_PORT_BANDS_CTE},
+    WITH {PORT_MINS_CTE}, {PORT_BANDS_CTE},
     pairs_m AS MATERIALIZED (
       SELECT DISTINCT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b
       FROM bands a JOIN bands b
@@ -1202,10 +1185,7 @@ def dsir_importance_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "doc_id",
         "lang",
-        (
-            F.conv(F.substring(F.md5("w"), 1, 8), 16, 10).cast("long")
-            % DSIR_BUCKETS
-        ).alias("b"),
+        (md5_u32("w") % DSIR_BUCKETS).alias("b"),
     )
     stats = pin(
         tok.groupBy("b")
@@ -1532,7 +1512,7 @@ def crossdoc_span_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     and ``ann_grid_report`` applied to the span tier.
 
     Shape at 100 TB: ONE corpus scan — tokens hash once into a pinned
-    ``(doc_id, th)`` frame (:func:`_token_hash_frame`; the naive per-k
+    ``(doc_id, th)`` frame (:func:`.text.token_hash_frame`; the naive per-k
     composition would re-read documents {len(SPAN_PROFILE_KS)}×) — then
     per k an in-row gram transform, a span-grain frequency aggregate, a
     span-grain equi-join back, and a 1-ROW corpus rollup; the union
@@ -1542,12 +1522,12 @@ def crossdoc_span_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_ids among duplicated-span rows (conditional count_distinct —
     NULL-skipping on both engines)."""
     d = load_table(spark, sf_dir, "documents")
-    staged = pin(_token_hash_frame(d))  # one token pass feeds every k
+    staged = pin(token_hash_frame(d))  # one token pass feeds every k
     rows = []
     for k in SPAN_PROFILE_KS:
         spans = pin(
             staged.select(
-                "doc_id", F.explode(F.array_distinct(_gram_array(k))).alias("gram")
+                "doc_id", F.explode(F.array_distinct(gram_hash_array(k))).alias("gram")
             )
         )  # frequency side + rollup side
         freq = spans.groupBy("gram").agg(F.count("*").alias("n_docs"))
@@ -1663,7 +1643,7 @@ def crossdoc_span_rewrite_maximal(spark: SparkSession, sf_dir: str) -> DataFrame
     the region grain while isolated short repeats still dedup at theirs.
 
     Shape at 100 TB: ONE corpus scan — tokens hash once into the pinned
-    ``(doc_id, th)`` frame (:func:`_token_hash_frame`, the
+    ``(doc_id, th)`` frame (:func:`.text.token_hash_frame`, the
     ``crossdoc_span_profile`` staging), then ALL cascade levels ride ONE
     level-tagged span frame (round-15 optimization, guide §2.3/§2.4): the
     per-level in-row gram transforms union into a single pinned
@@ -1697,12 +1677,12 @@ def crossdoc_span_rewrite_maximal(spark: SparkSession, sf_dir: str) -> DataFrame
     so the hash gate also validates the per-level 64-bit span-hash
     identity."""
     d = load_table(spark, sf_dir, "documents")
-    staged = pin(_token_hash_frame(d))  # one token pass feeds every cascade level
+    staged = pin(token_hash_frame(d))  # one token pass feeds every cascade level
     per_level = [
         staged.select(
             "doc_id",
             F.lit(k).alias("k"),
-            F.posexplode(_gram_array(k)).alias("pos", "gram"),
+            F.posexplode(gram_hash_array(k)).alias("pos", "gram"),
         )
         for k in CASCADE_KS
     ]

@@ -17,14 +17,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..exprs import md5_u32
 from ..pins import pin
 from ..registry import query
 from ..tables import load_events
+from .events import SESSION_GAP_US, session_events, sessionize
 
 HOUR_US = 3_600_000_000
 DAY_US = 86_400_000_000
 WEEK_US = 7 * DAY_US
-SESSION_GAP_US = 1_800_000_000  # 30 min — same gap as operators.events.sessionize
 FIVE_MIN_US = 300_000_000
 
 
@@ -208,8 +209,6 @@ def session_duration_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     getting longer?" question. Reuses the sessionize lag + running-sum plan
     (one shuffle on user_id serves both windows and the per-session rollup);
     the bucket histogram then aggregates the already-collapsed session grain."""
-    from .events import sessionize
-
     per_session = sessionize(spark, sf_dir)
     bucket = F.expr(f"duration_us DIV {FIVE_MIN_US}")
     return per_session.groupBy(bucket.alias("dur_bucket")).agg(
@@ -347,8 +346,6 @@ def bounce_rate_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     stickiness. Reuses the sessionize grain (one user_id shuffle serves the
     windows and the session rollup); the daily rollup then aggregates the
     already-collapsed session frame to ≤ #days rows."""
-    from .events import sessionize
-
     per_session = sessionize(spark, sf_dir)
     return per_session.groupBy(
         F.expr(f"start_us DIV {DAY_US}").alias("day")
@@ -488,7 +485,6 @@ def retention_by_first_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # last event is within one session gap of the observation horizon (it may
 # still be running); ln-factors quantize at KM_SCALE before the cumulative
 # product's log-sum.
-SESSION_GAP_US = 1_800_000_000
 MIN_US = 60_000_000
 KM_SCALE = 1_000_000_000
 
@@ -559,7 +555,7 @@ def km_session_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     product-limit estimator.
 
     Distribution discipline: the event grain collapses through the standard
-    sessionize shape (one user_id shuffle, per-user windows) to one row per
+    ``events.session_events`` (one user_id shuffle, per-user windows) to one row per
     session, then EVERYTHING runs on the duration-grain frame (≤ #distinct
     durations rows, Aggregate-bounded): the risk set is total-minus-prior-
     removals, and the cumulative product goes through the log-sum with each
@@ -568,20 +564,7 @@ def km_session_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     hit-zero flag handles the d = n boundary (survival exactly 0) without
     ln(0). Censored sessions leave the risk set silently — only ended
     durations emit curve rows."""
-    e = load_events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    is_new = F.when(
-        (F.col("ts_us") - F.lag("ts_us").over(w) > SESSION_GAP_US)
-        | F.lag("ts_us").over(w).isNull(),
-        1,
-    ).otherwise(0)
-    w_run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    sess = e.select(
-        "user_id",
-        "ts_us",
-        "event_id",
-        F.sum(is_new).over(w_run).alias("session_id"),
-    )
+    sess = session_events(load_events(spark, sf_dir), "user_id", "ts_us", "event_id")
     # s feeds both the horizon aggregate and the marked projection — pin
     # ONE materialization or the sessionize pipeline (the expensive stage)
     # executes twice.
@@ -700,13 +683,7 @@ def ab_conversion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     conversion) are excluded by exact conditions rather than dividing by
     zero."""
     e = load_events(spark, sf_dir)
-    arm = F.when(
-        F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        % 2
-        == 0,
-        "A",
-    ).otherwise("B")
+    arm = F.when(md5_u32(F.col("user_id").cast("string")) % 2 == 0, "A").otherwise("B")
     assign = e.groupBy("user_id").agg(
         F.max(
             F.when(

@@ -23,6 +23,25 @@ HALF_HOUR_US = 1_800_000_000
 SESSION_GAP_US = 1_800_000_000  # 30 min
 
 
+def session_events(events: DataFrame, *cols: str) -> DataFrame:
+    """``events`` projected to ``cols`` plus a per-user ``session_id``: gap
+    sessionization by lag + running sum. An event opens a new session when
+    it is the user's first or comes more than ``SESSION_GAP_US`` after the
+    previous one, in (ts_us, event_id) order; ``session_id`` counts the
+    sessions opened so far. ``cols`` must include user_id, event_id and
+    ts_us. Both windows share one shuffle on user_id, which also serves a
+    later per-session rollup."""
+    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
+    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    prev = F.lag("ts_us").over(w)
+    is_new = F.when(
+        prev.isNull() | ((F.col("ts_us") - prev) > SESSION_GAP_US), 1
+    ).otherwise(0)
+    return events.select(*cols).withColumn(
+        "session_id", F.sum(is_new).over(run).cast("long")
+    )
+
+
 @query(
     "tumbling_hourly",
     oracle=f"""
@@ -105,16 +124,7 @@ def sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the classic batch pattern; one shuffle on user_id serves both windows
     and the final per-session rollup. Streaming twin:
     ``streaming.windows.session_stream`` uses ``session_window``."""
-    e = load_events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    prev = F.lag("ts_us").over(w)
-    is_new = F.when(
-        prev.isNull() | ((F.col("ts_us") - prev) > SESSION_GAP_US), 1
-    ).otherwise(0)
-    sessions = e.select("user_id", "event_id", "ts_us").withColumn(
-        "session_id", F.sum(is_new).over(run).cast("long")
-    )
+    sessions = session_events(load_events(spark, sf_dir), "user_id", "event_id", "ts_us")
     return sessions.groupBy("user_id", "session_id").agg(
         F.count("*").alias("n_events"),
         F.min("ts_us").alias("start_us"),
@@ -597,22 +607,15 @@ def session_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordered event-type string — a single LIKE with interleaved wildcards,
     pure codegen on both engines (event-type names share no substrings, so
     the comma-joined encoding is unambiguous). The session assignment reuses
-    the ``sessionize`` lag + running-sum shape; the per-session type string
+    :func:`session_events`; the per-session type string
     is an ``array_sort(collect_list(struct(ts_us, event_id, type)))`` whose
     struct field order gives the same deterministic (ts_us, event_id)
     ordering as the oracle's ``string_agg(... ORDER BY)``. One shuffle on
     user_id feeds the windows; sessions aggregate map-side after that; the
     final rollup is one row. Per-session state is bounded by session length
     (gap-capped), not user history."""
-    e = load_events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    prev = F.lag("ts_us").over(w)
-    is_new = F.when(
-        prev.isNull() | ((F.col("ts_us") - prev) > SESSION_GAP_US), 1
-    ).otherwise(0)
-    sess = e.select("user_id", "event_id", "event_type", "ts_us").withColumn(
-        "session_id", F.sum(is_new).over(run).cast("long")
+    sess = session_events(
+        load_events(spark, sf_dir), "user_id", "event_id", "event_type", "ts_us"
     )
     ordered_types = F.transform(
         F.array_sort(F.collect_list(F.struct("ts_us", "event_id", "event_type"))),

@@ -26,7 +26,7 @@ Two quantizers, one search path:
 from __future__ import annotations
 
 from pyspark.ml.clustering import KMeans
-from pyspark.ml.functions import array_to_vector, vector_to_array
+from pyspark.ml.functions import array_to_vector
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -34,7 +34,18 @@ from ..exprs import as_double_array, dot
 from ..pins import pin
 from ..registry import query
 from ..tables import load_table
-from .similarity import N_QUERIES, TOP_K
+from .similarity import (
+    EMB_DIM,
+    N_QUERIES,
+    PQ_K,
+    PQ_M,
+    PQ_SUB,
+    QKNN_TOPKS,
+    TOP_K,
+    cosine_topk,
+    pq_codebook_frame,
+    pq_reconstruction,
+)
 
 N_CELLS = 16
 N_PROBE = 4
@@ -110,12 +121,7 @@ def ivf_search(
             (dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))).alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= top_k)
-        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cosine"))
-    )
+    return cosine_topk(pairs, top_k)
 
 
 # Corpus → norms → deterministic md5 codebook → per-vector argmax cell:
@@ -327,9 +333,7 @@ def _lloyd_assign_sql(t: int, dim: int | None = None) -> str:
     d2 is computed ONCE in an inner projection and the window orders by
     the alias — DuckDB is not guaranteed to CSE the 64-term fold across
     the projection and the sort key (round-10 review)."""
-    from .similarity import _EMB_DIMS
-
-    dim = _EMB_DIMS if dim is None else dim
+    dim = EMB_DIM if dim is None else dim
     dv = f"[n.v[i + 1] - c.c[i + 1] FOR i IN range(0, {dim})]"
     return f"""a{t} AS MATERIALIZED (
       SELECT vec_id, v, cell, qd2 FROM (
@@ -580,8 +584,7 @@ def semdedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     ZERO cell Exchanges, prune-only wall 1.7-1.9× better at small n and
     parity at 200k vectors on local[32], where loopback shuffle is
     cheap — the removed term is cross-NODE network, the one a single
-    host cannot price; SCALE.md round-12 box,
-    ``scripts/scale_experiment.py --semdedup``) +
+    host cannot price; SCALE.md round-12 box) +
     :func:`..buckets.bounded_bucket_pairs` as the hot-cell degrade — all
     in-repo; they are not used here so the oracle stays the exact
     algorithm. The codebook is the deterministic md5
@@ -600,17 +603,14 @@ def semdedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan; single-row-group serializes it (measured 1.03 → 0.71 s at
     # sf0.1/32, tables.py).
     e = load_table(spark, sf_dir, "embeddings", fan_out=True)
-    assigned = semdedup_assigned_frame(e)
-    return semdedup_prune_frame(assigned, assigned)
+    return semdedup_prune_frame(semdedup_assigned_frame(e))
 
 
 def semdedup_assigned_frame(e: DataFrame) -> DataFrame:
-    """The SemDeDup assignment stage as its own frame: ``(vec_id, v, nrm,
-    cell)``, pinned (lazy localCheckpoint). Extracted from
-    :func:`semdedup_keep` (plan unchanged — pure function extraction) so
-    the scale probe (``scripts/scale_experiment.py --semdedup``) can A/B
-    the production write-time-cell-partitioning path against the
-    registered in-memory shuffle-join form over the SAME assignment."""
+    """The SemDeDup assignment stage: ``(vec_id, v, nrm, cell)``, pinned
+    (lazy localCheckpoint), with K = ``floor(sqrt(n))`` cells clamped to
+    [2, SEMDEDUP_MAX_CELLS]. Shared by :func:`semdedup_keep` and
+    :func:`semdedup_tau_curve`, so both read the same assignment."""
     import math
 
     k = max(2, min(SEMDEDUP_MAX_CELLS, math.isqrt(e.count())))
@@ -639,15 +639,14 @@ def semdedup_assigned_frame(e: DataFrame) -> DataFrame:
     )  # one frame for both join sides
 
 
-def semdedup_prune_frame(a_src: DataFrame, b_src: DataFrame) -> DataFrame:
-    """The SemDeDup within-cell pruning stage: keep-first rollup over two
-    readings of the assignment frame (both args are the SAME pinned frame
-    in the registered query; the scale probe passes two readings of a
-    cell-bucketed TABLE instead, making the equi-join shuffle-free)."""
-    a = a_src.select(
+def semdedup_prune_frame(assigned: DataFrame) -> DataFrame:
+    """The SemDeDup within-cell pruning stage: a keep-first rollup of the
+    assignment frame joined to itself on cell — a vector is kept when no
+    lower vec_id in its cell has rounded cosine ≥ SEMDEDUP_TAU."""
+    a = assigned.select(
         "vec_id", "cell", F.col("v").alias("av"), F.col("nrm").alias("an")
     )
-    b = b_src.select(
+    b = assigned.select(
         F.col("vec_id").alias("b_vec_id"),
         F.col("cell").alias("b_cell"),
         F.col("v").alias("bv"),
@@ -795,9 +794,7 @@ def _kcenter_oracle(picks: int = KC_PICKS, dim: int | None = None) -> str:
     NOT-IN chain (already-chosen centers sit at qd = 0 but an exact
     duplicate vector would too — exclusion must be by identity, not by
     distance)."""
-    from .similarity import _EMB_DIMS
-
-    dim = _EMB_DIMS if dim is None else dim
+    dim = EMB_DIM if dim is None else dim
     dv = f"[s.v[i + 1] - c.cv[i + 1] FOR i IN range(0, {dim})]"
     dv0 = f"[n.v[i + 1] - c.cv[i + 1] FOR i IN range(0, {dim})]"
     parts = [
@@ -1138,8 +1135,6 @@ def ivf_probe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf_pq_oracle() -> str:
-    from .similarity import _EMB_DIMS, PQ_K, PQ_M, PQ_SUB, QKNN_TOPKS
-
     cases = ",\n             ".join(
         f"SUM(CASE WHEN rne <= {k} AND rnq_raw <= {k} THEN 1 ELSE 0 END)"
         f" AS mr{k},\n"
@@ -1195,7 +1190,7 @@ def _ivf_pq_oracle() -> str:
       SELECT a.cell, d.i,
              SUM(CAST(ROUND(1000000 * a.v[d.i]) AS BIGINT)) AS s,
              CAST(COUNT(*) AS BIGINT) AS nm
-      FROM assign a, UNNEST(range(1, {_EMB_DIMS} + 1)) AS d(i)
+      FROM assign a, UNNEST(range(1, {EMB_DIM} + 1)) AS d(i)
       GROUP BY a.cell, d.i
     ), cmean AS MATERIALIZED (
       -- recentred cell centroid = member mean (the one-Lloyd-step coarse
@@ -1208,7 +1203,7 @@ def _ivf_pq_oracle() -> str:
       -- residual vs the recentred centroid (true IVFADC: the PQ codebook
       -- trains and encodes on residuals, not raw vectors)
       SELECT a.vec_id, a.cell, m.mv,
-             [a.v[i] - m.mv[i] FOR i IN range(1, {_EMB_DIMS} + 1)] AS r
+             [a.v[i] - m.mv[i] FOR i IN range(1, {EMB_DIM} + 1)] AS r
       FROM assign a JOIN cmean m USING (cell)
     ), rqcb AS MATERIALIZED (
       SELECT ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
@@ -1237,7 +1232,7 @@ def _ivf_pq_oracle() -> str:
       GROUP BY a.vec_id
     ), rfull AS MATERIALIZED (
       SELECT s.vec_id,
-             [s.mv[i] + rc.rr[i] FOR i IN range(1, {_EMB_DIMS} + 1)]
+             [s.mv[i] + rc.rr[i] FOR i IN range(1, {EMB_DIM} + 1)]
                AS recon
       FROM rrecon rc JOIN res s ON s.vec_id = rc.vec_id
     ), probed AS (
@@ -1328,8 +1323,6 @@ def ivf_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     conventions inherited: rounded-cosine probe order with cell tie-break,
     quantized-BIGINT subspace argmin, ROUND(·,6) + neighbor-id final
     ranks."""
-    from .similarity import PQ_K, PQ_M, PQ_SUB, QKNN_TOPKS
-
     # fan_out (round 16): the whole checkpoint ladder below (staged → based
     # → staged2 → scored) inherits the scan's partitioning, so un-fanned it
     # ran as a chain of single-task stages — UI-REST attribution measured
@@ -1340,22 +1333,7 @@ def ivf_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("nrm", F.sqrt(dot(F.col("v"), F.col("v"))))
     )  # codebooks + corpus + query slice
     cb = deterministic_codebook_frame(staged)
-    md5k = F.md5(F.col("vec_id").cast("string"))
-    pqcb = (
-        staged.select(md5k.alias("k"), "vec_id", "v")
-        .orderBy("k", "vec_id")
-        .limit(PQ_K)
-        .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("k", "vec_id", F.col("v").alias("cv")))
-                ),
-                lambda s, i: F.struct(
-                    (i + 1).cast("int").alias("cid"), s["cv"].alias("cv")
-                ),
-            ).alias("pqcb")
-        )
-    )
+    pqcb = pq_codebook_frame(staged, "v", "pqcb")
     withcb = staged.crossJoin(F.broadcast(cb))
 
     # IVF side: rounded cosine to every cell centroid, staged as one array
@@ -1423,70 +1401,11 @@ def ivf_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Residual PQ codebook: the SAME md5-deterministic selection as pqcb,
     # but over the residuals (FAISS-standard IVFADC trains sub-quantizers
     # on residuals — round-13 verdict item 3).
-    rqcb = (
-        staged2.select(md5k.alias("k"), "vec_id", "res")
-        .orderBy("k", "vec_id")
-        .limit(PQ_K)
-        .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct("k", "vec_id", F.col("res").alias("cv"))
-                    )
-                ),
-                lambda s, i: F.struct(
-                    (i + 1).cast("int").alias("cid"), s["cv"].alias("cv")
-                ),
-            ).alias("rqcb")
-        )
-    )
+    rqcb = pq_codebook_frame(staged2, "res", "rqcb")
     enc = staged2.crossJoin(F.broadcast(pqcb)).crossJoin(F.broadcast(rqcb))
 
-    # PQ side: per-subspace argmin over a broadcast codebook, quantized-
-    # BIGINT distances (the pq_adc_recall fold), reconstruction in-row —
-    # parameterized over (source vector, codebook) so the raw and residual
-    # variants share one implementation.
-    def _sub_qd2(src, cv, m):
-        diffs = F.transform(
-            F.sequence(F.lit(0), F.lit(PQ_SUB - 1)),
-            lambda i: (
-                F.get(F.col(src), m * PQ_SUB + i) - F.get(cv, m * PQ_SUB + i)
-            ),
-        )
-        d2 = F.aggregate(
-            F.transform(diffs, lambda d: d * d),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        return F.round(d2 * 1_000_000).cast("long")
-
-    def _best_slice(src, book, m):
-        best = F.array_min(
-            F.transform(
-                F.col(book),
-                lambda c: F.struct(
-                    _sub_qd2(src, c["cv"], m).alias("qd2"), c["cid"].alias("cid")
-                ),
-            )
-        )
-        return F.slice(
-            F.element_at(F.col(book), best["cid"])["cv"],
-            m * PQ_SUB + 1,
-            F.lit(PQ_SUB),
-        )
-
-    recon_raw = F.flatten(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(PQ_M - 1)),
-            lambda m: _best_slice("v", "pqcb", m),
-        )
-    )
-    recon_res = F.flatten(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(PQ_M - 1)),
-            lambda m: _best_slice("res", "rqcb", m),
-        )
-    )
+    # PQ side: the pq_adc_recall encode, once per (source vector, codebook)
+    # variant.
     scored = pin(
         enc.select(
             "vec_id",
@@ -1494,9 +1413,11 @@ def ivf_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             "nrm",
             "scored",
             "cell",
-            recon_raw.alias("r"),
+            pq_reconstruction("v", "pqcb").alias("r"),
             # residual variant reconstructs recentred centroid + decoded residual
-            F.zip_with("mv", recon_res, lambda a, b: a + b).alias("rv"),
+            F.zip_with(
+                "mv", pq_reconstruction("res", "rqcb"), lambda a, b: a + b
+            ).alias("rv"),
         )
     )
     # ^ pin (round 16): `scored` feeds BOTH the candidate join's stream side

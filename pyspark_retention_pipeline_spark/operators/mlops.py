@@ -99,13 +99,10 @@ def ml_threshold_from_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator — the fusion of the ML tier with operators/threshold.py (the
     reference's 303-job sweep collapsed into one aggregation)."""
     from ..ml import score_frame
-    from .threshold import pick_best, sweep_scores, with_metrics
+    from .threshold import pick_best, score_curve
 
     model, features = _train(spark, sf_dir)
-    scored = score_frame(model, features).select(
-        F.col("label"), F.col("p_churn").alias("score")
-    )
-    curve = with_metrics(sweep_scores(scored)).select("t", "precision", "recall", "f1")
+    curve = score_curve(score_frame(model, features)).select("t", "precision", "recall", "f1")
     return pick_best(curve, "f1")
 
 
@@ -131,22 +128,22 @@ def quality_feature_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     fractions plus the distillation label (above-median corpus unigram-LM
     score).
 
-    Shape at 100 TB: tokens hash once (curation's ``_token_hash_frame``
+    Shape at 100 TB: tokens hash once (``text.token_hash_frame``
     staging); unigram+bigram hashes explode to (doc, bucket) rows and a
     doc-grain count + pivot over the FIXED {QC_BUCKETS}-value bucket domain
     builds the histogram in one corpus-token-grain shuffle — O(L) per
     document, never O(L × buckets) per row (the size(filter(...))-per-bucket
     form re-scans the gram array {QC_BUCKETS} times). The label side reuses
     the unigram LM frame and broadcasts its 1-row median."""
-    from .curation import _gram_array, _token_hash_frame
+    from .text import gram_hash_array, token_hash_frame
     from .text_quality import unigram_logprob_score
 
     d = load_table(spark, sf_dir, "documents")
-    staged = _token_hash_frame(d)
+    staged = token_hash_frame(d)
     grams = staged.select(
         "doc_id",
         F.explode(
-            F.concat(F.col("th"), _gram_array(QC_GRAM_K))
+            F.concat(F.col("th"), gram_hash_array(QC_GRAM_K))
         ).alias("g"),
     )
     bucketed = pin(

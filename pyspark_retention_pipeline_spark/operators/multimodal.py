@@ -342,9 +342,9 @@ def _cm_pool_sql() -> str:
 
 
 def _cm_oracle() -> str:
-    from .similarity import _gr_gain_tables
+    from .similarity import gr_gain_tables
 
-    rr_u, dcg_u, _pref = _gr_gain_tables()
+    rr_u, dcg_u, _pref = gr_gain_tables()
     rr = "[" + ", ".join(str(v) for v in rr_u) + "]"
     dcg = "[" + ", ".join(str(v) for v in dcg_u) + "]"
     per_k = "\n      UNION ALL ".join(
@@ -396,9 +396,9 @@ def crossmodal_metrics_frame(docs: DataFrame, embs: DataFrame) -> DataFrame:
     any (documents, embeddings) frame pair — factored so the planted
     aligned-twin test can run on synthetic towers."""
     from ..exprs import dot
-    from .similarity import _gr_gain_tables
+    from .similarity import gr_gain_tables
 
-    rr_u, dcg_u, _pref = _gr_gain_tables()
+    rr_u, dcg_u, _pref = gr_gain_tables()
     rr_arr = F.array(*[F.lit(int(v)) for v in rr_u])
     dcg_arr = F.array(*[F.lit(int(v)) for v in dcg_u])
 
@@ -515,7 +515,7 @@ def crossmodal_retrieval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     derive from the identity's rank alone — computed as a conditional-count
     aggregate (rank = 1 + |better pairs|), never a per-query window over
     the corpus. Gains reuse the graded-scorecard micro-unit tables
-    (:func:`..similarity._gr_gain_tables`), so the only floats are
+    (:func:`..similarity.gr_gain_tables`), so the only floats are
     divisions of identical integers.
 
     Scale shape: one embeddings scan into the pooled tower; the query side

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from ..exprs import md5_u32
 from ..registry import query
 from ..tables import load_table
 
@@ -23,9 +24,7 @@ from ..tables import load_table
 def hash_sample_frame(df: DataFrame, key, rate_pct: int) -> DataFrame:
     """Keep rows whose md5(key) bucket (mod 100) < rate_pct — deterministic
     across engines, runs, and partitionings."""
-    bucket = F.conv(F.substring(F.md5(F.col(key).cast("string")), 1, 8), 16, 10).cast(
-        "long"
-    ) % 100
+    bucket = md5_u32(F.col(key).cast("string")) % 100
     return df.filter(bucket < rate_pct)
 
 
@@ -62,7 +61,7 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # from public LLM dataset recipes (e.g. The Pile / MassiveText weightings).
 MIX_RATES_PCT = {"en": 50, "de": 100, "es": 100, "fr": 100, "zh": 100}
 
-_MIX_CASE_SQL = "CASE lang " + " ".join(
+MIX_CASE_SQL = "CASE lang " + " ".join(
     f"WHEN '{k}' THEN {v}" for k, v in sorted(MIX_RATES_PCT.items())
 ) + " ELSE 0 END"
 
@@ -73,7 +72,7 @@ _MIX_CASE_SQL = "CASE lang " + " ".join(
     SELECT doc_id, lang, source
     FROM documents
     WHERE CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-            % 100 < {_MIX_CASE_SQL}
+            % 100 < {MIX_CASE_SQL}
     """,
     tags=("sampling", "data-mixture"),
 )
@@ -86,10 +85,8 @@ def lang_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     the identical mix; rates live in one literal CASE that codegen folds
     into the scan filter. No shuffle at all."""
     d = load_table(spark, sf_dir, "documents")
-    bucket = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-    ).cast("long") % 100
-    rate = F.expr(_MIX_CASE_SQL)
+    bucket = md5_u32(F.col("doc_id").cast("string")) % 100
+    rate = F.expr(MIX_CASE_SQL)
     return d.filter(bucket < rate).select("doc_id", "lang", "source")
 
 
@@ -158,9 +155,7 @@ def epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = F.concat_ws(
         ":", F.col("epoch").cast("string"), F.col("doc_id").cast("string")
     )
-    bucket = F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast(
-        "long"
-    ) % SHUFFLE_BUCKETS
+    bucket = md5_u32(key) % SHUFFLE_BUCKETS
     return keyed.select("doc_id", "epoch", bucket.alias("shuffle_bucket"))
 
 
@@ -174,9 +169,7 @@ def split_assignment_frame(
     split that keeps near-duplicates from straddling train/test
     (tests/test_curation.py::test_group_aware_split_keeps_groups_together).
     Map-side only; no shuffle."""
-    bucket = F.conv(
-        F.substring(F.md5(F.col(key_col).cast("string")), 1, 8), 16, 10
-    ).cast("long") % 100
+    bucket = md5_u32(F.col(key_col).cast("string")) % 100
     return df.withColumn(
         "split",
         F.when(bucket < train_pct, "train")

@@ -12,7 +12,7 @@ dot products so external oracles reproduce the numbers bit-for-bit.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..exprs import as_double_array, dot
@@ -22,6 +22,7 @@ from ..tables import load_table
 
 N_QUERIES = 10  # vec_id < 10 act as the query set in the fixed-workload queries
 TOP_K = 5
+EMB_DIM = 64  # width of embeddings.embedding
 
 _EMB_CTE = """
     WITH e AS (
@@ -42,6 +43,19 @@ def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     v = as_double_array(F.col("embedding"))
     return e.select("vec_id", F.round(F.sqrt(dot(v, v)), 6).alias("l2_norm"))
+
+
+def cosine_topk(pairs: DataFrame, top_k: int = TOP_K) -> DataFrame:
+    """(query_id, neighbor_id, cos) pairs → each query's ``top_k`` nearest
+    neighbors as (query_id, neighbor_id, cosine): ranked by the raw cosine,
+    ties to the lower neighbor_id, then rounded to 6 places. One window per
+    query; only top-k rows survive its filter."""
+    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
+    return (
+        pairs.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= top_k)
+        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cosine"))
+    )
 
 
 @query(
@@ -88,12 +102,7 @@ def knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
             (dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))).alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cosine"))
-    )
+    return cosine_topk(pairs)
 
 
 @query(
@@ -135,7 +144,6 @@ def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 N_PLANES = 12
-_DIM = 64
 
 
 def _plane(j: int) -> F.Column:
@@ -152,7 +160,7 @@ def _plane(j: int) -> F.Column:
     comps = [
         (int(hashlib.md5(f"{j}:{i}".encode()).hexdigest()[:8], 16) % 20001 - 10000)
         / 10000.0
-        for i in range(_DIM)
+        for i in range(EMB_DIM)
     ]
     return F.lit(comps).cast("array<double>")
 
@@ -175,7 +183,7 @@ def _planes_sql(n_planes: int) -> str:
                            AS BIGINT) % 20001 - 10000) / 10000.0
                      ORDER BY i) AS p
       FROM generate_series(0, {n_planes - 1}) s1(j),
-           generate_series(0, {_DIM - 1}) s2(i)
+           generate_series(0, {EMB_DIM - 1}) s2(i)
       GROUP BY j"""
 
 
@@ -612,8 +620,8 @@ def ann_grid_stats_frame(
     m−1 for an over-cap bucket (the star pairs ``bounded_bucket_pairs``
     without ``chain_cols`` emits; round-10 review fixed an earlier
     2(m−1) star+chain formula that described the simhash pipeline, not
-    this one). Single definition shared by :func:`ann_grid_report` and
-    ``scripts/scale_experiment.py``'s ``--ann`` probe.
+    this one). Read by :func:`ann_grid_report` and the grid-saturation
+    property test.
 
     The pair count is INTEGER end to end — ``m*(m-1) DIV 2`` summed as
     BIGINT, never ``/2`` float division (a double SUM then a long cast is
@@ -655,9 +663,8 @@ def ann_grid_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grid-saturation scorecard: bucket count, over-cap bucket count, and
     bounded candidate volume for the FIXED oracle grid vs the ADAPTIVE
     ``ann_band_bits`` grid — the diagnostic that caught the round-9 100×
-    saturation (660/1011 buckets over cap on the fixed grid), promoted
-    from a scripts/scale_experiment.py probe to a first-class queryable
-    operator a production index deployment would monitor. The candidate
+    saturation (660/1011 buckets over cap on the fixed grid), as a
+    queryable operator a production index deployment would monitor. The candidate
     formula mirrors what ``bounded_bucket_pairs`` emits for this pipeline
     (see :func:`ann_grid_stats_frame`), so the number IS the work the ANN
     pipeline would do, not a hypothetical all-pairs count."""
@@ -870,12 +877,7 @@ def knn_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = e.select("vec_id", "embedding").mapInPandas(
         score, schema="query_id long, neighbor_id long, cos double"
     ).filter(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cosine"))
-    )
+    return cosine_topk(pairs)
 
 
 
@@ -1004,7 +1006,6 @@ def embedding_pca_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _OUT_COMP_SCALE = 1_000_000
 _OUT_DIST_SCALE = 10_000
 _OUT_Z_MIN = 2.0
-_EMB_DIMS = 64
 
 
 @query(
@@ -1019,14 +1020,14 @@ _EMB_DIMS = 64
     ), sums AS (
       SELECT d.i AS pos, CAST(SUM(qv[d.i + 1]) AS BIGINT) AS s,
              CAST(COUNT(*) AS BIGINT) AS n
-      FROM q, UNNEST(range(0, {_EMB_DIMS})) d(i) GROUP BY d.i
+      FROM q, UNNEST(range(0, {EMB_DIM})) d(i) GROUP BY d.i
     ), cent AS (
       SELECT list(s / (n * {_OUT_COMP_SCALE}.0) ORDER BY pos) AS c FROM sums
     ), dist AS (
       SELECT vec_id,
              CAST(ROUND(list_dot_product(
-               [q.v[i + 1] - cent.c[i + 1] FOR i IN range(0, {_EMB_DIMS})],
-               [q.v[i + 1] - cent.c[i + 1] FOR i IN range(0, {_EMB_DIMS})])
+               [q.v[i + 1] - cent.c[i + 1] FOR i IN range(0, {EMB_DIM})],
+               [q.v[i + 1] - cent.c[i + 1] FOR i IN range(0, {EMB_DIM})])
                * {_OUT_DIST_SCALE}) AS BIGINT) AS qd
       FROM q CROSS JOIN cent
     ), m AS (
@@ -1060,8 +1061,8 @@ def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector's distance is an IN-ROW strict fold against the broadcast
     centroid (fixed evaluation order — engine-identical doubles), and the
     corpus z-score moments reduce over re-quantized distances. Scale shape:
-    one posexplode aggregation to {_EMB_DIMS} rows, two broadcast 1-row /
-    {_EMB_DIMS}-row joins, one final scan — no shuffle ever carries more
+    one posexplode aggregation to {EMB_DIM} rows, two broadcast 1-row /
+    {EMB_DIM}-row joins, one final scan — no shuffle ever carries more
     than (vec_id, distance). Σqd² clears BIGINT to ~10⁶ unit-norm vectors at
     this quantization (qd² ≈ 1.6×10⁹ each); escalate the moment sums to
     DECIMAL(38) beyond."""
@@ -1137,6 +1138,46 @@ def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Recall grid: top-1 (the hard case) and the standard top-K.
 QKNN_TOPKS = (1, TOP_K)
 
+
+def knn_recall_scorecard(pairs: DataFrame, approx: str) -> DataFrame:
+    """(query_id, neighbor_id, xdot, ``approx``) pairs → one row per k in
+    QKNN_TOPKS: (topk, n_matched, n_exact, recall), where n_matched counts
+    the pairs in a query's top k under BOTH the exact ``xdot`` ranking and
+    the ``approx`` ranking, and n_exact those in the exact top k. Both
+    rankings break ties to the lower neighbor_id; both are windows over the
+    one pair frame, so the pairs are built once."""
+    w_ex = Window.partitionBy("query_id").orderBy(
+        F.desc("xdot"), F.asc("neighbor_id")
+    )
+    w_ap = Window.partitionBy("query_id").orderBy(
+        F.desc(approx), F.asc("neighbor_id")
+    )
+    ranked = pairs.select(
+        F.row_number().over(w_ex).alias("rne"),
+        F.row_number().over(w_ap).alias("rnq"),
+    )
+    cases = []
+    for k in QKNN_TOPKS:
+        cases.append(
+            F.sum(
+                F.when((F.col("rne") <= k) & (F.col("rnq") <= k), 1).otherwise(0)
+            ).alias(f"m{k}")
+        )
+        cases.append(
+            F.sum(F.when(F.col("rne") <= k, 1).otherwise(0)).alias(f"e{k}")
+        )
+    agg = ranked.agg(*cases)
+    stack_args = ", ".join(f"{k}, m{k}, e{k}" for k in QKNN_TOPKS)
+    return agg.selectExpr(
+        f"stack({len(QKNN_TOPKS)}, {stack_args})"
+        " AS (topk, n_matched, n_exact)"
+    ).select(
+        F.col("topk").cast("int").alias("topk"),
+        F.col("n_matched").cast("long").alias("n_matched"),
+        F.col("n_exact").cast("long").alias("n_exact"),
+        (F.col("n_matched") / F.col("n_exact")).alias("recall"),
+    )
+
 _QKNN_CASES = ",\n             ".join(
     f"SUM(CASE WHEN rne <= {k} AND rnq <= {k} THEN 1 ELSE 0 END) AS m{k},\n"
     f"             SUM(CASE WHEN rne <= {k} THEN 1 ELSE 0 END) AS e{k}"
@@ -1199,7 +1240,7 @@ def quantized_knn_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exactness: the quantized ranking is UNCONDITIONALLY exact across
     engines — int8 codes make every pairwise product an integer ≤ 127²
-    and the {_EMB_DIMS}-term sum an integer ≤ ~10⁶, all exactly
+    and the {EMB_DIM}-term sum an integer ≤ ~10⁶, all exactly
     representable in doubles, so fold order cannot move a bit and no
     rounding step is needed (stronger than the round-before-compare
     family). The exact-side ranking uses the rounded inner product with
@@ -1243,37 +1284,7 @@ def quantized_knn_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             dot(F.col("qq"), F.col("q")).alias("qdot"),
         )
     )
-    w_ex = Window.partitionBy("query_id").orderBy(
-        F.desc("xdot"), F.asc("neighbor_id")
-    )
-    w_qz = Window.partitionBy("query_id").orderBy(
-        F.desc("qdot"), F.asc("neighbor_id")
-    )
-    ranked = pairs.select(
-        F.row_number().over(w_ex).alias("rne"),
-        F.row_number().over(w_qz).alias("rnq"),
-    )
-    cases = []
-    for k in QKNN_TOPKS:
-        cases.append(
-            F.sum(
-                F.when((F.col("rne") <= k) & (F.col("rnq") <= k), 1).otherwise(0)
-            ).alias(f"m{k}")
-        )
-        cases.append(
-            F.sum(F.when(F.col("rne") <= k, 1).otherwise(0)).alias(f"e{k}")
-        )
-    agg = ranked.agg(*cases)
-    stack_args = ", ".join(f"{k}, m{k}, e{k}" for k in QKNN_TOPKS)
-    return agg.selectExpr(
-        f"stack({len(QKNN_TOPKS)}, {stack_args})"
-        " AS (topk, n_matched, n_exact)"
-    ).select(
-        F.col("topk").cast("int").alias("topk"),
-        F.col("n_matched").cast("long").alias("n_matched"),
-        F.col("n_exact").cast("long").alias("n_exact"),
-        (F.col("n_matched") / F.col("n_exact")).alias("recall"),
-    )
+    return knn_recall_scorecard(pairs, "qdot")
 
 
 # --- product-quantization ADC retrieval scorecard -------------------------
@@ -1282,8 +1293,80 @@ def quantized_knn_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # past global int8 scaling for 10^9+ vector corpora (Jegou et al. 2011,
 # "Product Quantization for Nearest Neighbor Search").
 PQ_M = 8
-PQ_SUB = _EMB_DIMS // PQ_M
+PQ_SUB = EMB_DIM // PQ_M
 PQ_K = 16
+
+
+def pq_codebook_frame(staged: DataFrame, src: str, name: str) -> DataFrame:
+    """ONE-row frame whose ``name`` column is a deterministic PQ codebook:
+    array<struct<cid int, cv array<double>>> over the ``src`` vectors of the
+    PQ_K rows of ``staged`` (vec_id, ``src``) that rank first by
+    ``(md5(vec_id), vec_id)``, cid = 1-based rank. Every subspace m reads
+    the m-th PQ_SUB-dim slice of the same rows. The pick is a TakeOrdered
+    (orderBy + LIMIT, never a corpus sort)."""
+    md5k = F.md5(F.col("vec_id").cast("string"))
+    return (
+        staged.select(md5k.alias("k"), "vec_id", src)
+        .orderBy("k", "vec_id")
+        .limit(PQ_K)
+        .agg(
+            F.transform(
+                F.array_sort(
+                    F.collect_list(F.struct("k", "vec_id", F.col(src).alias("cv")))
+                ),
+                lambda s, i: F.struct(
+                    (i + 1).cast("int").alias("cid"), s["cv"].alias("cv")
+                ),
+            ).alias(name)
+        )
+    )
+
+
+def pq_reconstruction(src: str, book: str) -> Column:
+    """PQ encode-and-decode of the ``src`` vector column against the one-row
+    codebook column ``book`` (:func:`pq_codebook_frame`), as an in-row
+    array<double>: per subspace m, the codeword whose m-th PQ_SUB-dim slice
+    is nearest by QUANTIZED squared L2 (``ROUND(d2·10⁶)`` BIGINT, ties to
+    the lowest cid — raw-double argmin could flip on a ULP between
+    engines), and the reconstruction is those slices concatenated in
+    subspace order. No shuffle: the codebook is broadcast beside each row."""
+
+    def sub_qd2(cv, m):
+        # strict left fold over (diff·diff) terms in index order — the same
+        # add sequence as the oracle's list_dot_product over the differences
+        diffs = F.transform(
+            F.sequence(F.lit(0), F.lit(PQ_SUB - 1)),
+            lambda i: (
+                F.get(F.col(src), m * PQ_SUB + i) - F.get(cv, m * PQ_SUB + i)
+            ),
+        )
+        d2 = F.aggregate(
+            F.transform(diffs, lambda d: d * d),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+        return F.round(d2 * 1_000_000).cast("long")
+
+    def best_slice(m):
+        # lexicographic array_min of struct(qd2, cid) = (lowest distance,
+        # lowest cid); the winning slice is re-read from the cid-ordered array
+        best = F.array_min(
+            F.transform(
+                F.col(book),
+                lambda c: F.struct(
+                    sub_qd2(c["cv"], m).alias("qd2"), c["cid"].alias("cid")
+                ),
+            )
+        )
+        return F.slice(
+            F.element_at(F.col(book), best["cid"])["cv"],
+            m * PQ_SUB + 1,
+            F.lit(PQ_SUB),
+        )
+
+    return F.flatten(
+        F.transform(F.sequence(F.lit(0), F.lit(PQ_M - 1)), lambda m: best_slice(m))
+    )
 
 _PQ_CASES = ",\n             ".join(
     f"SUM(CASE WHEN rne <= {k} AND rnq <= {k} THEN 1 ELSE 0 END) AS m{k},\n"
@@ -1377,7 +1460,7 @@ def pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     in MLlib KMeans — same shapes, different codebook rows).
 
     Shape at 100 TB: the codebook collapses to a ONE-row broadcast array
-    ({PQ_K}·{_EMB_DIMS} doubles); encoding is an IN-ROW argmin fold per
+    ({PQ_K}·{EMB_DIM} doubles); encoding is an IN-ROW argmin fold per
     subspace over the broadcast array — zero shuffle for the corpus-wide
     stage, emitting the reconstruction inline (at deployment the {PQ_M}
     uint4 codes are the stored column and reconstruction happens against
@@ -1401,66 +1484,10 @@ def pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", as_double_array(F.col("embedding")).alias("v")
         )
     )  # codebook pick + corpus + query slice
-    md5k = F.md5(F.col("vec_id").cast("string"))
-    cb = (
-        staged.select(md5k.alias("k"), "vec_id", "v")
-        .orderBy("k", "vec_id")
-        .limit(PQ_K)
-        .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("k", "vec_id", F.col("v").alias("cv")))
-                ),
-                lambda s, i: F.struct(
-                    (i + 1).cast("int").alias("cid"), s["cv"].alias("cv")
-                ),
-            ).alias("cb")
-        )
-    )
+    cb = pq_codebook_frame(staged, "v", "cb")
 
-    def _sub_qd2(cv, m):
-        # quantized squared L2 between the m-th PQ_SUB-dim slices of the
-        # row vector and centroid cv: strict left fold over (diff·diff)
-        # terms in index order — the same add sequence as the oracle's
-        # list_dot_product over the difference list
-        diffs = F.transform(
-            F.sequence(F.lit(0), F.lit(PQ_SUB - 1)),
-            lambda i: (
-                F.get(F.col("v"), m * PQ_SUB + i) - F.get(cv, m * PQ_SUB + i)
-            ),
-        )
-        d2 = F.aggregate(
-            F.transform(diffs, lambda d: d * d),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        return F.round(d2 * 1_000_000).cast("long")
-
-    def _best_slice(m):
-        # in-row argmin over the broadcast codebook: lexicographic
-        # array_min of struct(qd2, cid) = (lowest distance, lowest cid);
-        # the winning slice is re-read from the cid-ordered array
-        best = F.array_min(
-            F.transform(
-                F.col("cb"),
-                lambda c: F.struct(
-                    _sub_qd2(c["cv"], m).alias("qd2"), c["cid"].alias("cid")
-                ),
-            )
-        )
-        return F.slice(
-            F.element_at(F.col("cb"), best["cid"])["cv"],
-            m * PQ_SUB + 1,
-            F.lit(PQ_SUB),
-        )
-
-    recon = F.flatten(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(PQ_M - 1)), lambda m: _best_slice(m)
-        )
-    )
     coded = staged.crossJoin(F.broadcast(cb)).select(
-        "vec_id", "v", recon.alias("r")
+        "vec_id", "v", pq_reconstruction("v", "cb").alias("r")
     )
     qf = staged.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
@@ -1475,37 +1502,7 @@ def pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(dot(F.col("qv"), F.col("r")), 6).alias("adc"),
         )
     )
-    w_ex = Window.partitionBy("query_id").orderBy(
-        F.desc("xdot"), F.asc("neighbor_id")
-    )
-    w_pq = Window.partitionBy("query_id").orderBy(
-        F.desc("adc"), F.asc("neighbor_id")
-    )
-    ranked = pairs.select(
-        F.row_number().over(w_ex).alias("rne"),
-        F.row_number().over(w_pq).alias("rnq"),
-    )
-    cases = []
-    for k in QKNN_TOPKS:
-        cases.append(
-            F.sum(
-                F.when((F.col("rne") <= k) & (F.col("rnq") <= k), 1).otherwise(0)
-            ).alias(f"m{k}")
-        )
-        cases.append(
-            F.sum(F.when(F.col("rne") <= k, 1).otherwise(0)).alias(f"e{k}")
-        )
-    agg = ranked.agg(*cases)
-    stack_args = ", ".join(f"{k}, m{k}, e{k}" for k in QKNN_TOPKS)
-    return agg.selectExpr(
-        f"stack({len(QKNN_TOPKS)}, {stack_args})"
-        " AS (topk, n_matched, n_exact)"
-    ).select(
-        F.col("topk").cast("int").alias("topk"),
-        F.col("n_matched").cast("long").alias("n_matched"),
-        F.col("n_exact").cast("long").alias("n_exact"),
-        (F.col("n_matched") / F.col("n_exact")).alias("recall"),
-    )
+    return knn_recall_scorecard(pairs, "adc")
 
 
 # --- hard-negative mining for contrastive training -------------------------
@@ -1967,7 +1964,7 @@ def _dense_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _rrf_ctes() -> str:
     """The dense-ranking + fusion CTE chain, shared by the rrf_fusion
     oracle and the graded-scorecard oracle so the two cannot drift.
-    Expects _BM25_CTES (through integer ``scores``) earlier in the WITH."""
+    Expects BM25_CTES (through integer ``scores``) earlier in the WITH."""
     from .text import BM25_QUERIES, BM25_TOP_K
 
     gains = "[" + ", ".join(str(g) for g in _rrf_gain_table()) + "]"
@@ -2017,10 +2014,10 @@ def _rrf_ctes() -> str:
 
 
 def _rrf_oracle() -> str:
-    from .text import _BM25_CTES
+    from .text import BM25_CTES
 
     return f"""
-    WITH {_BM25_CTES}, {_rrf_ctes()}
+    WITH {BM25_CTES}, {_rrf_ctes()}
     SELECT query_id, fused_rank, doc_id, n_systems, rrf_score FROM rranked
 """
 
@@ -2155,19 +2152,19 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     ROUND (the oracle reads s straight from its ``scores`` CTE; the
     pure-python replication in tests/test_similarity.py re-derives both
     sides from raw text and pins the agreement)."""
-    from .text import _BM25_SCALE, bm25_topk
+    from .text import BM25_SCALE, bm25_topk
 
     return bm25_topk(spark, sf_dir).select(
         "query_id",
         "doc_id",
-        F.round(F.col("bm25") * _BM25_SCALE).cast("long").alias("sc"),
+        F.round(F.col("bm25") * BM25_SCALE).cast("long").alias("sc"),
     )
 
 
 def _wsf_ctes() -> str:
     """The weighted-score fusion CTE chain through ``wranked``, shared by
     the :func:`weighted_score_fusion` oracle and the graded-scorecard
-    oracle so the two cannot drift. Expects ``_BM25_CTES`` (through
+    oracle so the two cannot drift. Expects ``BM25_CTES`` (through
     integer ``scores``) and :func:`_rrf_ctes` (``branked``/``dsim``/
     ``dranked``) earlier in the WITH."""
     from .text import BM25_TOP_K
@@ -2228,10 +2225,10 @@ def _wsf_ctes() -> str:
 
 
 def _wsf_oracle() -> str:
-    from .text import _BM25_CTES
+    from .text import BM25_CTES
 
     return f"""
-    WITH {_BM25_CTES}, {_rrf_ctes()}, {_wsf_ctes()}
+    WITH {BM25_CTES}, {_rrf_ctes()}, {_wsf_ctes()}
     SELECT query_id, fused_rank, doc_id, n_systems, wsf_score FROM wranked
 """
 
@@ -2290,7 +2287,7 @@ GR_TAU_NUM = 9
 GR_TAU_DEN = 10
 
 
-def _gr_gain_tables() -> tuple[list[int], list[int], list[int]]:
+def gr_gain_tables() -> tuple[list[int], list[int], list[int]]:
     import math
     from itertools import accumulate
 
@@ -2302,9 +2299,9 @@ def _gr_gain_tables() -> tuple[list[int], list[int], list[int]]:
 
 
 def _graded_oracle() -> str:
-    from .text import _BM25_CTES, BM25_QUERIES, BM25_TOP_K
+    from .text import BM25_CTES, BM25_QUERIES, BM25_TOP_K
 
-    rr_u, dcg_u, pref_u = _gr_gain_tables()
+    rr_u, dcg_u, pref_u = gr_gain_tables()
     rr = "[" + ", ".join(str(v) for v in rr_u) + "]"
     dcg = "[" + ", ".join(str(v) for v in dcg_u) + "]"
     pref = "[" + ", ".join(str(v) for v in pref_u) + "]"
@@ -2336,7 +2333,7 @@ def _graded_oracle() -> str:
     return (
         "\n    WITH "
         + ",\n    ".join(parts)
-        + f""", {_BM25_CTES}, {_rrf_ctes()}, {_wsf_ctes()}, bsz AS (
+        + f""", {BM25_CTES}, {_rrf_ctes()}, {_wsf_ctes()}, bsz AS (
       SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS sz FROM tfc GROUP BY doc_id
     ), bint AS (
       SELECT q.query_id, t.doc_id, CAST(COUNT(*) AS BIGINT) AS inter
@@ -2426,7 +2423,7 @@ def retrieval_graded_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard bounded broadcast-query scan (the knn_bruteforce shape)."""
     from .text import BM25_QUERIES, BM25_TOP_K, bm25_topk
 
-    rr_u, dcg_u, pref_u = _gr_gain_tables()
+    rr_u, dcg_u, pref_u = gr_gain_tables()
     rr_arr = F.array(*[F.lit(int(v)) for v in rr_u])
     dcg_arr = F.array(*[F.lit(int(v)) for v in dcg_u])
     pref_arr = F.array(*[F.lit(int(v)) for v in pref_u])
@@ -2543,13 +2540,13 @@ def retrieval_graded_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bm frame (the dyadic round-trip _bm25_scored documents) and the
     # dense list is the same _dense_scored frame rrf ranks — shared, so
     # graded and fused systems cannot drift.
-    from .text import _BM25_SCALE
+    from .text import BM25_SCALE
 
     wfused = wsf_fuse(
         bm.select(
             "query_id",
             "doc_id",
-            F.round(F.col("bm25") * _BM25_SCALE).cast("long").alias("sc"),
+            F.round(F.col("bm25") * BM25_SCALE).cast("long").alias("sc"),
         ),
         dense.select("query_id", "doc_id", F.col("su").alias("sc")),
         BM25_TOP_K,

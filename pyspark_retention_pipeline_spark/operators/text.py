@@ -11,7 +11,7 @@ replaces the all-pairs join with a per-band bucket join.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..pins import pin
@@ -304,6 +304,32 @@ BAND_SIZE = 4
 SHINGLE = 3
 
 
+def token_hash_frame(docs: DataFrame) -> DataFrame:
+    """``(doc_id, th)``: each document's whitespace tokens as an array of
+    xxhash64 values, one string hash per token. The staging stage of every
+    word-gram hash (:func:`gram_hash_array`): kept as its own projection so
+    a gram lambda that reads ``th`` k times reads a materialized array
+    instead of re-evaluating the token transform per index. A consumer that
+    needs several gram lengths stages one token pass and derives each k
+    from it."""
+    toks = F.split(F.col("text"), " ")
+    return docs.select(
+        "doc_id", F.transform(toks, lambda x: F.xxhash64(x)).alias("th")
+    )
+
+
+def gram_hash_array(k: int) -> Column:
+    """Array Column of word ``k``-gram hashes over a ``th`` token-hash column
+    (:func:`token_hash_frame`): gram i is xxhash64 of token hashes i..i+k-1,
+    fixed-width long ops instead of building gram strings. A document
+    shorter than ``k`` tokens yields one gram over the tokens it has (``get``
+    past the end is NULL and xxhash64 skips NULLs)."""
+    starts = F.sequence(F.lit(0), F.greatest(F.size(F.col("th")) - k, F.lit(0)))
+    return F.transform(
+        starts, lambda i: F.xxhash64(*[F.get("th", i + j) for j in range(k)])
+    )
+
+
 def minhash_signature_frame(docs: DataFrame) -> DataFrame:
     """doc_id → array<long> of N_HASHES min-hashes over word shingles.
 
@@ -325,18 +351,9 @@ def minhash_signature_frame(docs: DataFrame) -> DataFrame:
     and xxhash64 skips NULLs) — one shingle, same convention as the string
     form.
     """
-    toks = F.split(F.col("text"), " ")
-    staged = docs.select(
-        "doc_id", F.transform(toks, lambda x: F.xxhash64(x)).alias("th")
+    sh = token_hash_frame(docs).select(
+        "doc_id", F.explode(gram_hash_array(SHINGLE)).alias("h0")
     )
-    starts = F.sequence(
-        F.lit(0), F.greatest(F.size(F.col("th")) - SHINGLE, F.lit(0))
-    )
-    shingle_h = F.transform(
-        starts,
-        lambda i: F.xxhash64(*[F.get("th", i + k) for k in range(SHINGLE)]),
-    )
-    sh = staged.select("doc_id", F.explode(shingle_h).alias("h0"))
     aggs = [F.min(F.xxhash64("h0", F.lit(j))).alias(f"h{j}") for j in range(N_HASHES)]
     return sh.groupBy("doc_id").agg(*aggs).select(
         "doc_id", F.array(*[F.col(f"h{j}") for j in range(N_HASHES)]).alias("signature")
@@ -483,10 +500,10 @@ def _port_mins_cte(src: str = "documents") -> str:
     )"""
 
 
-_PORT_MINS_CTE = _port_mins_cte()
+PORT_MINS_CTE = _port_mins_cte()
 
 _MINHASH_ORACLE = f"""
-    WITH {_PORT_MINS_CTE}
+    WITH {PORT_MINS_CTE}
     SELECT doc_id, CAST(j AS BIGINT) AS hash_idx, mh AS min_h FROM mins
 """
 
@@ -509,7 +526,7 @@ def _mins_from_shingles(sh: DataFrame) -> DataFrame:
 def _portable_min_frame(docs: DataFrame) -> DataFrame:
     """``doc_id, m0..m{N_HASHES-1}`` — the portable 16-min signature
     aggregate (one shuffle, partial MIN combine). The single Spark-side
-    definition of the portable signature, mirrored by ``_PORT_MINS_CTE``;
+    definition of the portable signature, mirrored by ``PORT_MINS_CTE``;
     both portable minhash queries build on it (round-9 review: the banded
     form first duplicated the whole pipeline)."""
     staged = _portable_token_hash_frame(docs)
@@ -565,7 +582,7 @@ MINHASH_PORT_CAP = 4096
 # never duplicate a signature definition across oracles) — shared by
 # _MINHASH_BANDED_ORACLE here and curation.py's portable dedup-cluster
 # oracle, which chains the same pair set into the CC fixpoint.
-_PORT_BANDS_CTE = f"""bands AS MATERIALIZED (
+PORT_BANDS_CTE = f"""bands AS MATERIALIZED (
       SELECT doc_id, j // {BAND_SIZE} AS band,
              CAST(SUM((mh % {_PORT_M}) * (CASE j % {BAND_SIZE}
                     {" ".join(f"WHEN {i} THEN {_BAND_C[i]}" for i in range(BAND_SIZE - 1))}
@@ -575,7 +592,7 @@ _PORT_BANDS_CTE = f"""bands AS MATERIALIZED (
     )"""
 
 _MINHASH_BANDED_ORACLE = f"""
-    WITH {_PORT_MINS_CTE}, {_PORT_BANDS_CTE}
+    WITH {PORT_MINS_CTE}, {PORT_BANDS_CTE}
     SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b,
            CAST(COUNT(*) AS BIGINT) AS bands_shared
     FROM bands a JOIN bands b
@@ -588,7 +605,7 @@ def _portable_band_members(g: DataFrame) -> DataFrame:
     """``doc_id, band, bv`` from a :func:`_portable_min_frame` output —
     each band's {BAND_SIZE} mins folded into ONE BIGINT band value (exact
     ≤ 2^52 arithmetic, no float, no engine hash; the Spark twin of
-    ``_PORT_BANDS_CTE``). Single definition shared by
+    ``PORT_BANDS_CTE``). Single definition shared by
     :func:`minhash_banded_candidates` and :func:`minhash_calibration`."""
 
     def band_value(b: int) -> F.Column:
@@ -653,7 +670,7 @@ MH_CAL_MIN_JAC = 0.1
 
 _MINHASH_CAL_ORACLE = f"""
     WITH {_port_mins_cte(f"(SELECT * FROM documents WHERE doc_id < {MH_EVAL_DOCS})")},
-    {_PORT_BANDS_CTE},
+    {PORT_BANDS_CTE},
     shd AS MATERIALIZED (SELECT DISTINCT doc_id, s FROM sh),
     sizes AS (
       SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM shd GROUP BY doc_id
@@ -1326,19 +1343,8 @@ def winnowing_fingerprint_frame(docs: DataFrame) -> DataFrame:
     O(tokens²) work, measured at 63 s for sf0.1 vs 0.3 s staged (200×).
     Rows-only operators never hit the bench, which is exactly how that form
     survived two rounds."""
-    toks = F.split(F.col("text"), " ")
-    staged = docs.select(
-        "doc_id", F.transform(toks, lambda x: F.xxhash64(x)).alias("th")
-    )
-    kgram_starts = F.sequence(
-        F.lit(0), F.greatest(F.size(F.col("th")) - WINNOW_K, F.lit(0))
-    )
-    kgrams = staged.select(
-        "doc_id",
-        F.transform(
-            kgram_starts,
-            lambda i: F.xxhash64(*[F.get("th", i + k) for k in range(WINNOW_K)]),
-        ).alias("kh"),
+    kgrams = token_hash_frame(docs).select(
+        "doc_id", gram_hash_array(WINNOW_K).alias("kh")
     )
     win_starts = F.sequence(
         F.lit(0), F.greatest(F.size(F.col("kh")) - WINNOW_W, F.lit(0))
@@ -1879,13 +1885,13 @@ BM25_K1 = 1.2
 BM25_B = 0.75
 BM25_QUERIES = 3
 BM25_TOP_K = 10
-_BM25_SCALE = 1_000_000
+BM25_SCALE = 1_000_000
 
 
 # The BM25 derivation CTE chain (through integer `scores`), shared by the
 # bm25_topk oracle and the graded-retrieval scorecard oracle
 # (similarity.retrieval_graded_metrics) so the two can never drift.
-_BM25_CTES = f"""tok AS (
+BM25_CTES = f"""tok AS (
       SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
     ), tfc AS MATERIALIZED (
       SELECT doc_id, token, CAST(COUNT(*) AS BIGINT) AS tf
@@ -1908,7 +1914,7 @@ _BM25_CTES = f"""tok AS (
                * (t.tf * ({BM25_K1} + 1))
                / (t.tf + {BM25_K1}
                   * (1 - {BM25_B} + {BM25_B} * l.dl / s.avgdl))
-               * {_BM25_SCALE}) AS BIGINT) AS qc
+               * {BM25_SCALE}) AS BIGINT) AS qc
       FROM tfc t
            JOIN q ON q.token = t.token
            JOIN dfc d ON d.token = t.token
@@ -1923,9 +1929,9 @@ _BM25_CTES = f"""tok AS (
 @query(
     "bm25_topk",
     oracle=f"""
-    WITH {_BM25_CTES}
+    WITH {BM25_CTES}
     SELECT query_id, doc_id,
-           ROUND(s / {_BM25_SCALE}.0, 6) AS bm25
+           ROUND(s / {BM25_SCALE}.0, 6) AS bm25
     FROM (
       SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
                                    ORDER BY s DESC, doc_id) AS rn
@@ -2001,7 +2007,7 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             "doc_id",
             # association byte-matches the oracle: ((idf*num)/den)*SCALE
-            F.round(idf * tf_num / tf_den * _BM25_SCALE).cast("long").alias("qc"),
+            F.round(idf * tf_num / tf_den * BM25_SCALE).cast("long").alias("qc"),
         )
     )
     scores = contrib.groupBy("query_id", "doc_id").agg(
@@ -2014,6 +2020,6 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "doc_id",
-            F.round(F.col("s") / float(_BM25_SCALE), 6).alias("bm25"),
+            F.round(F.col("s") / float(BM25_SCALE), 6).alias("bm25"),
         )
     )

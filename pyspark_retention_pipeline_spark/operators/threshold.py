@@ -162,6 +162,13 @@ def with_metrics(sweep: DataFrame) -> DataFrame:
     )
 
 
+def score_curve(scored: DataFrame) -> DataFrame:
+    """The 101-threshold confusion sweep with precision/recall/F1 of a
+    frame of real model scores: ``label`` and ``p_churn`` (as
+    :func:`..ml.score_frame` returns them), swept as the score."""
+    return with_metrics(sweep_scores(scored.selectExpr("label", "p_churn AS score")))
+
+
 def pick_best(curve: DataFrame, metric: str) -> DataFrame:
     """The one row of ``curve`` with the highest ``metric``, the lowest ``t``
     among ties — the reference's strict ``>`` over ascending thresholds

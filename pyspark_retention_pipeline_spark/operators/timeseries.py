@@ -18,10 +18,10 @@ from pyspark.sql import functions as F
 from ..pins import pin
 from ..registry import query
 from ..tables import load_events, load_table
+from .events import SESSION_GAP_US, session_events
 
 HOUR_US = 3_600_000_000
 DAY_US = 86_400_000_000
-SESSION_GAP_US = 1_800_000_000  # 30 min — same gap as operators.events.sessionize
 PATH_CAP = 10  # bound per-session path length
 
 
@@ -185,7 +185,7 @@ def top_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 session navigation paths: the most common ordered event-type
     sequences within 30-min-gap sessions, paths capped at the first
     {PATH_CAP} events so per-row state stays bounded no matter how long a
-    bot session runs. Reuses the ``sessionize`` lag + running-sum shape (one
+    bot session runs. Sessions come from ``events.session_events`` (one
     shuffle on user_id feeds both windows and the per-session fold); the
     ordered-type array is an ``array_sort(collect_list(struct))`` exactly as
     in ``session_funnel``, sliced before joining. The path rollup hash-
@@ -199,15 +199,8 @@ def top_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     adjudication reversed it (off best 0.62 vs fanned 0.85, fanned ahead
     1/8) — the per-event map is too cheap to amortize the exchange ahead
     of the user-key window shuffle."""
-    e = load_events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    prev = F.lag("ts_us").over(w)
-    is_new = F.when(
-        prev.isNull() | ((F.col("ts_us") - prev) > SESSION_GAP_US), 1
-    ).otherwise(0)
-    sess = e.select("user_id", "event_id", "event_type", "ts_us").withColumn(
-        "session_id", F.sum(is_new).over(run)
+    sess = session_events(
+        load_events(spark, sf_dir), "user_id", "event_id", "event_type", "ts_us"
     )
     ordered_types = F.transform(
         F.array_sort(F.collect_list(F.struct("ts_us", "event_id", "event_type"))),

@@ -7,7 +7,6 @@ from .io import (
     read_csv,
     read_jsonl,
     read_orc,
-    read_parquet_table,
     write_csv,
     write_jsonl,
     write_orc,
@@ -25,7 +24,6 @@ __all__ = [
     "read_csv",
     "read_jsonl",
     "read_orc",
-    "read_parquet_table",
     "write_csv",
     "write_jsonl",
     "write_orc",

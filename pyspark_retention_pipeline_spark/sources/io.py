@@ -59,13 +59,6 @@ def read_csv_transactions(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def read_parquet_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Schema-pinned parquet scan (S2) — delegates to tables.load_table."""
-    from ..tables import load_table
-
-    return load_table(spark, sf_dir, name)
-
-
 def write_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """Plain parquet sink (S3, reference ``etl.py:147-151``)."""
     df.write.mode(mode).parquet(path)

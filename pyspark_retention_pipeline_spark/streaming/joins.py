@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .windows import _event_stream
+from .windows import event_stream
 
 ATTRIBUTION = "30 minutes"
 
@@ -20,7 +20,7 @@ ATTRIBUTION = "30 minutes"
 def signup_purchase_attribution(spark, sf_dir: str) -> DataFrame:
     """Purchases attributed to the same user's signup within the attribution
     window (signup_time <= purchase_time <= signup_time + 30 min)."""
-    return attribution_join(_event_stream(spark, sf_dir))
+    return attribution_join(event_stream(spark, sf_dir))
 
 
 def attribution_join(events: DataFrame) -> DataFrame:
@@ -96,7 +96,7 @@ def new_user_flagged_stream(spark, sf_dir: str) -> DataFrame:
     flag (event falls on the user's first-ever active day). The static side
     is user-grain; at scale the join is a plain shuffle/broadcast equi-join
     chosen by the planner per batch, with no streaming state at all."""
-    stream = _event_stream(spark, sf_dir)
+    stream = event_stream(spark, sf_dir)
     profile = first_seen_profile(spark, sf_dir)
     day = (F.unix_micros(F.col("event_time")) / 86_400_000_000).cast("long")
     return (

@@ -44,7 +44,7 @@ def event_stream_from_dir(spark: SparkSession, directory: str) -> DataFrame:
     return raw.withColumn("event_time", F.col("ts").cast("timestamp"))
 
 
-def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+def event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return event_stream_from_dir(spark, _events_stream_dir(sf_dir))
 
 
@@ -52,7 +52,7 @@ def tumbling_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour tumbling counts with a 1-hour watermark — the streaming twin of
     ``operators.events.tumbling_hourly``."""
     return (
-        _event_stream(spark, sf_dir)
+        event_stream(spark, sf_dir)
         .withWatermark("event_time", "1 hour")
         .groupBy(F.window("event_time", "1 hour"), F.col("event_type"))
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("sum_value"))
@@ -63,7 +63,7 @@ def session_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """30-minute-gap session windows per user via ``session_window`` — the
     streaming-native form of ``operators.events.sessionize``."""
     return (
-        _event_stream(spark, sf_dir)
+        event_stream(spark, sf_dir)
         .withWatermark("event_time", "1 hour")
         .groupBy(F.session_window("event_time", "30 minutes"), F.col("user_id"))
         .agg(F.count("*").alias("n_events"))
@@ -92,7 +92,7 @@ def dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     is held only until the watermark passes, so dedup state is bounded; the
     batch twin is operators.text.dedup_exact / dedup_keep_first)."""
     return (
-        _event_stream(spark, sf_dir)
+        event_stream(spark, sf_dir)
         .withWatermark("event_time", "1 hour")
         .dropDuplicatesWithinWatermark(["event_id"])
     )

@@ -14,7 +14,7 @@ from pyspark_retention_pipeline_spark.registry import all_queries
 QUERIES = all_queries()
 
 # Two-tier sweep domain (round-16 verdict item 1): the seven REGISTRY-WIDE
-# plan sweeps below each rebuild and optimize all 276 query plans, ~25 of
+# plan sweeps below each rebuild and optimize every query plan, ~25 of
 # the old suite's ~34 minutes — past the driver's pytest timeout. By
 # default they sweep a deterministic 1-in-14 stride sample (~20 queries) as
 # a structural canary; RUN_SLOW=1 (make test-all / CI tier) sweeps the

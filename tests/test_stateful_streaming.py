@@ -5,13 +5,13 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from pyspark_retention_pipeline_spark.streaming.stateful import running_user_totals
-from pyspark_retention_pipeline_spark.streaming.windows import _event_stream
+from pyspark_retention_pipeline_spark.streaming.windows import event_stream
 
 
 def test_running_user_totals_match_batch(spark, sf_dir):
     from pyspark_retention_pipeline_spark.tables import load_events
 
-    stream = running_user_totals(_event_stream(spark, sf_dir))
+    stream = running_user_totals(event_stream(spark, sf_dir))
     q = (
         stream.writeStream.outputMode("update")
         .format("memory")
@@ -53,7 +53,7 @@ def test_user_activity_profile_matches_batch(spark, sf_dir):
         )
     from pyspark_retention_pipeline_spark.tables import load_events
 
-    stream = user_activity_profile(_event_stream(spark, sf_dir))
+    stream = user_activity_profile(event_stream(spark, sf_dir))
     q = (
         stream.writeStream.outputMode("update")
         .format("memory")
