@@ -762,7 +762,7 @@ def test_pq_adc_recall_matches_numpy_reference(spark, monkeypatch):
     import pyspark_retention_pipeline_spark.operators.similarity as sim
 
     rng = np.random.default_rng(47)
-    n, d = 80, sim._EMB_DIMS
+    n, d = 80, sim.EMB_DIM
     x = rng.normal(size=(n, d))
     emb = spark.createDataFrame(
         [(i, [float(v) for v in row]) for i, row in enumerate(x)],
@@ -849,7 +849,7 @@ def test_ivf_pq_recall_matches_numpy_reference(spark, monkeypatch):
     import pyspark_retention_pipeline_spark.operators.similarity as sim
 
     rng = np.random.default_rng(59)
-    n, d = 70, sim._EMB_DIMS
+    n, d = 70, sim.EMB_DIM
     x = rng.normal(size=(n, d))
     emb = spark.createDataFrame(
         [(i, [float(v) for v in row]) for i, row in enumerate(x)],
@@ -960,7 +960,7 @@ def test_ivfadc_residual_beats_raw_on_clustered_corpus(spark, monkeypatch):
     import pyspark_retention_pipeline_spark.operators.ivf as iv
     import pyspark_retention_pipeline_spark.operators.similarity as sim
 
-    n, d = 80, sim._EMB_DIMS
+    n, d = 80, sim.EMB_DIM
     order = sorted(
         range(n), key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i)
     )
@@ -1144,7 +1144,7 @@ def test_retrieval_graded_metrics_matches_python(spark, monkeypatch):
         (4, " ".join(base[:38] + ["y1", "y2"])),    # near-dup of 0 (J=38/42)
     ]
     rng = np.random.default_rng(11)
-    emb = rng.normal(size=(30, sim._EMB_DIMS))
+    emb = rng.normal(size=(30, sim.EMB_DIM))
     docs_df = spark.createDataFrame(docs, "doc_id long, text string")
     emb_df = spark.createDataFrame(
         [(i, [float(v) for v in row]) for i, row in enumerate(emb)],
