@@ -128,17 +128,17 @@ HEADLINE = [
     # frame + the (doc, position) MAX-code cascade aggregate). Its pins are
     # lazy and the dominant frequency/join/rollup stages run at ACTION
     # time (not the compute-at-build class — measured write >> build).
-    # Added with bench-line shrink lever 3 (run_spread_med_pct moved
-    # local-only) per docs/ROUND13_ROTATION.md.
+    # Added together with bench-line shrink lever 3 (run_spread_med_pct
+    # moved local-only).
     "crossdoc_span_rewrite_maximal",
     # round 14: the character-level Levenshtein verify rung over banded
     # candidates — the O(len^2) DP on the LSH-reduced pair set is the
     # dedup ladder's most expensive per-pair stage, so its wall belongs
     # in the headline watch (lever (a) — regr_names capped at 5 — taken
-    # in the same commit per docs/ROUND14_ROTATION.md).
+    # in the same commit).
     "neardup_edit_verify",
     # round 15 (lever (b) — long nlfl lists ride as a count — taken in
-    # the same commit per docs/ROUND15_ROTATION.md): the hybrid-fusion
+    # the same commit): the hybrid-fusion
     # ranking (bm25 + dense scan composition — the widest retrieval
     # plan), the unigram-LM EM trainer (checkpoint-ladder lattice joins;
     # all work at action time — each bench rep reconstructs and
@@ -241,8 +241,8 @@ def main() -> None:
     p90_idx = min(len(spreads) - 1, max(0, math.ceil(0.9 * len(spreads)) - 1))
     result = {
         # Shortened from "headline_queries_total_wall" in round 12 (bench-
-        # line shrink lever 2, docs/ROUND12_ROTATION.md); _load_baseline
-        # accepts both so every prior-round artifact stays usable.
+        # line shrink lever 2); _load_baseline accepts both so every
+        # prior-round artifact stays usable.
         "metric": "headline_wall",
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
@@ -326,11 +326,11 @@ def emit_line(result: dict) -> str:
       artifact (both spreads moved off the line in round 13 — shrink
       lever 3, taken with the 60th headline query; the driver's gate
       reads only the totals, and noise-floor context lives in
-      docs/BENCH_LOCAL.json and the round docs);
+      docs/BENCH_LOCAL.json);
     * ``ml_pipeline_wall`` rides only the local artifact (since round 12:
       it is a cold single-run MLlib CV wall — the noisiest number in the
       artifact, never part of the headline total or the 2× gate, and the
-      first shrink lever named in docs/ROUND12_ROTATION.md);
+      first bench-line shrink lever);
     * ``new_queries`` / ``baseline_total`` — derivable, local-only (since
       round 9)."""
     budget = 1950  # driver tail is 2000; leave newline + margin
@@ -363,7 +363,7 @@ def emit_line(result: dict) -> str:
             # maps; the full dict always rides docs/BENCH_LOCAL.json).
             "regr_names": regr_all[:5],
         }
-        # Lever (b), round 15 (docs/ROUND15_ROTATION.md), taken with the
+        # Lever (b), round 15, taken with the
         # three round-15 headline additions: a LONG not-like-for-like
         # list rides the line as a count only — the names (and prose
         # reasons) always live in bench.NOT_LIKE_FOR_LIKE and the local

@@ -177,10 +177,10 @@ def _sized(frame: DataFrame, n_features: int) -> Iterator[DataFrame]:
     partition per input file cost more in scheduling than in compute. A partition is kept
     only when it carries at least that fixed cost's worth of bytes: on a
     4-core host one task beat four up to ~100k churn rows (8 MB) and lost
-    beyond (docs/SCALE.md). The count comes before the coalesce: coalescing
-    the lazy plan would fold its upstream work into the few coalesced
-    tasks. Coalescing only merges: a frame already at k partitions or fewer
-    keeps its own."""
+    beyond (docs/SCALE.md, "ML tier"). The count comes before the coalesce:
+    coalescing the lazy plan would fold its upstream work into the few
+    coalesced tasks. Coalescing only merges: a frame already at k
+    partitions or fewer keeps its own."""
     with cached(frame) as rows:
         n = rows.count()
         conf = frame.sparkSession._jsparkSession.sessionState().conf()
@@ -220,7 +220,15 @@ def fit_pipeline(prepared: DataFrame, cols: list[str], final: Estimator) -> Pipe
     LBFGS quality classifier fitted in 5.5 s against 8.5 s cached (256-wide
     vectors), the LBFGS churn model in 1.7 s against 2.1 s. The math is
     ``Pipeline.fit``'s; only the summation order over partitions can differ
-    (|Δcoef| ≤ 1e-8). Nothing persisted here outlives the call."""
+    (|Δcoef| ≤ 1e-8). Nothing persisted here outlives the call.
+
+    The last stage keeps its training summary, but the summary's dataset is
+    that pin, released on return. Its iteration counts (GLR's
+    ``numIterations``, LR's ``totalIterations``) and LR's
+    ``objectiveHistory`` still read; the fields computed from the rows (GLR's
+    ``aic``, ``deviance``, ``degreesOfFreedom``; LR's ``areaUnderROC``,
+    ``accuracy``; the rows of ``predictions``) raise
+    ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``."""
     with job_description(prepared.sparkSession, "ml.fit"), _sized(prepared, len(cols)) as sized:
         prefix = Pipeline(stages=_feature_stages(cols)).fit(sized)
         last_input = prefix.transform(sized).select("features_scaled", "label", "class_weight")
@@ -265,7 +273,9 @@ def train_churn_model(
     default aucpr as there.
 
     Without CV the last stage is :func:`weighted_glr`; the CV grid's
-    ``elasticNetParam`` needs :func:`weighted_lr`, which GLR does not take."""
+    ``elasticNetParam`` needs :func:`weighted_lr`, which GLR does not take.
+    Without CV only the last stage summary's iteration count reads
+    (:func:`fit_pipeline`); its ``aic`` and ``deviance`` raise."""
     cols = list(feature_cols or FEATURE_COLS)
     prepared = add_class_weight(cast_features(features, cols))
     if not cross_validate:

@@ -584,7 +584,7 @@ def semdedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     ZERO cell Exchanges, prune-only wall 1.7-1.9× better at small n and
     parity at 200k vectors on local[32], where loopback shuffle is
     cheap — the removed term is cross-NODE network, the one a single
-    host cannot price; SCALE.md round-12 box) +
+    host cannot price) +
     :func:`..buckets.bounded_bucket_pairs` as the hot-cell degrade — all
     in-repo; they are not used here so the oracle stays the exact
     algorithm. The codebook is the deterministic md5

@@ -203,7 +203,10 @@ def _train_quality(spark: SparkSession, sf_dir: str):
     separable data (the planted corpus of the tests) has no unregularized
     MLE, so IRLS would not converge on it. The one frame left cached is the
     session cache's feature frame, which scoring reads; the pins it was
-    built from go with the build's scope."""
+    built from go with the build's scope. The LR summary's dataset went
+    with ``fit_pipeline``'s own pin: its ``totalIterations`` and
+    ``objectiveHistory`` read, its ``areaUnderROC`` and other row-backed
+    fields raise."""
     from ..ml import add_class_weight, cast_features, fit_pipeline, weighted_lr
 
     def build():

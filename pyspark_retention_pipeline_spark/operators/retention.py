@@ -218,7 +218,11 @@ def class_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     read the pinned rows (tests/test_plans.py asserts no parquet scan
     survives downstream). The counts side of the cross join is an
     ungrouped aggregate DOWNSTREAM of the pin, so the keyless-join
-    boundedness reducer still sees its 1-row proof."""
+    boundedness reducer still sees its 1-row proof. The weights themselves
+    are :func:`..ml.add_class_weight`'s, the ones the churn model trains
+    on."""
+    from ..ml import add_class_weight
+
     o = load_table(spark, sf_dir, "orders")
     labeled = pin(
         o.filter(F.col("o_orderdate") <= ts_lit(LOOKAHEAD_END))
@@ -237,13 +241,4 @@ def class_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("in_fut") == 0, 1.0).otherwise(0.0).alias("label"),
         )
     )
-    counts = labeled.agg(
-        F.sum(F.when(F.col("label") == 1, 1).otherwise(0)).alias("n_pos"),
-        F.sum(F.when(F.col("label") == 0, 1).otherwise(0)).alias("n_neg"),
-    )
-    weight = F.when(
-        F.col("label") == 1, F.col("n_neg") / F.greatest(F.col("n_pos"), F.lit(1))
-    ).otherwise(F.lit(1.0))
-    return labeled.crossJoin(F.broadcast(counts)).select(
-        "custkey", "label", weight.alias("class_weight")
-    )
+    return add_class_weight(labeled)

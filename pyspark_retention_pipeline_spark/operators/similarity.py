@@ -247,8 +247,8 @@ def lsh_bucket_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 ANN_BANDS = 4
 # Band width is the n-dependent knob of any fixed-grid LSH: expected
 # bucket size is n / 2^bits, so in-bucket pair volume grows QUADRATICALLY
-# in n while the grid is fixed (measured: 10× rows → 109× band pairs,
-# docs/SCALE.md round-9 curve). The executable sizing rule is
+# in n while the grid is fixed (measured: 10× rows → 109× band pairs; the
+# curve is in git history). The executable sizing rule is
 # :func:`ann_band_bits` (bits ≈ log2(n / target_bucket)); the LIBRARY
 # entry point :func:`banded_ann_top1` applies it automatically from a
 # cheap count (or caller-supplied n). The REGISTERED oracle queries keep
@@ -741,8 +741,8 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     float-sum trap cannot flake the hash; the final division is the same
     IEEE op on identical integers in both engines. On this uncorrelated
     synthetic corpus agreement is low (~0.1 — exact top-1 cosines sit
-    ~0.4, far below the high-similarity regime hyperplane LSH retrieves;
-    docs/SCALE.md round-9 notes) — the REPORT is the product, the planted
+    ~0.4, far below the high-similarity regime hyperplane LSH
+    retrieves) — the REPORT is the product, the planted
     -twin recall property (tests/test_similarity.py) is the guarantee."""
     # fan_out: both scorecard sides run 64-dim dot folds against the
     # 200-query broadcast over this scan; single-row-group means one core

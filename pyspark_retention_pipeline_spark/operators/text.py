@@ -869,8 +869,8 @@ _SIMHASH_HAMMING_MAX = 3
 # ``simhash_sigs_cte(where=...)`` parametrizes the document slice: the
 # verify-stage oracle re-derives the pair set with a deliberately
 # banding-independent ALL-PAIRS O(n²) signature self-join, which at sf0.1
-# was 92% of the whole parity sweep's worst line (107.6 s of 117 s,
-# docs/ROUND7.md) — bounding BOTH engines to the same deterministic doc_id
+# was 92% of the whole parity sweep's worst line (107.6 s of 117 s) —
+# bounding BOTH engines to the same deterministic doc_id
 # slice keeps that oracle honest (still all-pairs, still
 # banding-independent on the slice) at a fraction of the cost.
 def simhash_sigs_cte(where: str = "") -> str:

@@ -38,37 +38,13 @@ _REGISTRY: dict[str, Query] = {}
 
 # Driver-gate priority order. The correctness gate verifies a bounded prefix of
 # ``queries()`` (50 entries per round), so ordering is part of the contract —
-# re-derive this list EVERY round (round-end checklist; round 5 skipped it and
-# shipped two rewrites with no driver row, VERDICT r5 item 2).
-# Round-15 rotation (docs/ROUND15_ROTATION.md) — GENERATED:
-# ``scripts/derive_front.py`` derives this window mechanically from the
-# committed CORRECTNESS_r*.json driver artifacts (rounds BEFORE the
-# configured one only, so the derivation is stable whenever the current
-# round's artifact lands) plus the script's small per-round config
-# (changed-plan list, flagship, window size), and
-# ``tests/test_registry_order.py`` asserts the tuple below equals the
-# script's output. Round-15 composition: the changed tier seats the
-# exact-quantile memory-cliff retirement sites — winsorized_spend_stats
-# (p01/p99 cutoffs on the shared approx-bracket + exact-rank-pick
-# helper), p99_quantile (grouped exact side, bracket per l_returnflag),
-# theilsen_revenue_trend (moved onto the helper; sketch consumed in ONE
-# plan branch), quality_classifier_scores (rows-only; label median on
-# the helper over a pinned LM frame) — plus retrieval_graded_metrics
-# (new system='rrf' rows grading the hybrid fusion); the never-verified
-# tier seats the four round-15 additions (unigram_lm_em_rounds — the
-# SentencePiece-style EM trainer — rrf_fusion — hybrid reciprocal-rank
-# fusion — weighted_score_fusion — the normalized-convex score-aware
-# sibling — and crossmodal_retrieval_metrics — the two-tower
-# media-to-text scorecard); then the flagship and 40 stalest-green
-# backfill seats — the nineteen-name r9-tier remainder (round 14's
-# DEFERRED_TO_R15 head recent90_agg … token_classes plus top_customers
-# and union_by_name) and 21 of the r10 tier in (round, name) order from
-# ann_recall_report through intradoc_dedup_rewrite, moving the
-# staleness floor to r10.
-# Later, auc_metrics (both AUCs in one window query) joined the
-# never-verified tier and pushed intradoc_dedup_rewrite out of the window.
-# Further new or plan-changed queries re-derive this window (update
-# CHANGED in the script config, re-run, re-paste).
+# re-derive this list EVERY round (a round that skipped it shipped two
+# rewrites with no driver row, VERDICT r5 item 2). GENERATED by
+# ``scripts/derive_front.py``, whose docstring states the rotation policy and
+# whose config records this round's seats; ``tests/test_registry_order.py``
+# asserts the tuple below equals the script's output. New or plan-changed
+# queries re-derive this window (update CHANGED in the script config,
+# re-run, re-paste).
 _FRONT: tuple[str, ...] = (
     "winsorized_spend_stats",
     "p99_quantile",

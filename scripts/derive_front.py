@@ -3,13 +3,12 @@
 
 The driver's correctness gate verifies the FIRST 50 entries of ``queries()``
 each round, so the window is re-derived every round (round-end checklist).
-Through round 7 the rotation was hand-copied from ``docs/ROUND{N}_ROTATION.md``
-into ``registry._FRONT`` — this script replaces the hand copy (VERDICT r7
-item 7): it computes the window from the committed ``CORRECTNESS_r0*.json``
-driver artifacts plus one small declarative per-round config, and
-``tests/test_registry_order.py`` asserts ``_FRONT`` equals its output.
+This script computes the window from the committed ``CORRECTNESS_r0*.json``
+driver artifacts plus one small declarative per-round config, so no hand
+copy can drift (VERDICT r7 item 7), and ``tests/test_registry_order.py``
+asserts ``_FRONT`` equals its output.
 
-Rotation policy (docs/ROUND8_ROTATION.md, unchanged since round 5):
+Rotation policy (stated only here; unchanged since round 5):
 
 1. **Plan-change rule** — every query whose implementation changed this
    round MUST be seated (declared in the round config; not derivable from

@@ -113,17 +113,15 @@ HEADLINE = [
     "bpe_encode_stats",
     # round 15: hybrid fusion + the two-tower cross-modal scorecard.
     # unigram_lm_em_rounds is the bpe_merge_rounds class (EM state chains
-    # through lazy localCheckpoints → LogicalRDD leaves; scale shape in
-    # SCALE.md's round-15 box) so it is not dumped.
+    # through lazy localCheckpoints → LogicalRDD leaves) so it is not
+    # dumped.
     "rrf_fusion",
     "weighted_score_fusion",
     "crossmodal_retrieval_metrics",
     # round-12 continuation: scorecards + novelty + graph centrality.
     # kcenter_coreset / part_pagerank_rounds / kcore_rounds are
     # driver-loop iterative — their returned plan is LogicalRDD leaves
-    # (the kmeans_lloyd_curve class), so dumping them would show nothing;
-    # their scale shapes are documented in SCALE.md's round-12
-    # continuation box instead.
+    # (the kmeans_lloyd_curve class), so dumping them would show nothing.
     "semdedup_tau_curve",
     "ivf_probe_recall",
     "doc_novelty_score",

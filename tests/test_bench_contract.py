@@ -70,7 +70,7 @@ def test_adversarial_line_fits_driver_tail():
 
 
 def test_regr_names_capped_at_5_with_flag():
-    """Lever (a), round 14 (docs/ROUND14_ROTATION.md): the line carries at
+    """Lever (a), round 14: the line carries at
     most 5 regression names plus a truncation flag — ratios are derivable
     from the two rounds' queries maps, and the full regression dict always
     rides docs/BENCH_LOCAL.json. Taken in the same commit as the 61st
@@ -91,7 +91,7 @@ def test_regr_names_capped_at_5_with_flag():
 
 
 def test_nlfl_degrades_to_count_past_4_names():
-    """Lever (b), round 15 (docs/ROUND15_ROTATION.md), taken with the
+    """Lever (b), round 15, taken with the
     three round-15 headline additions: a not-like-for-like list longer
     than 4 names rides the line as ``nlfl_n`` (a count); at ≤4 the names
     ride as before. Names + prose reasons always live in

@@ -1,5 +1,6 @@
 """Bucketing deletes the join shuffle — the physical-layout claim in
-docs/SCALE.md, asserted on the actual plan."""
+docs/SCALE.md ("Bucketing pays the shuffle once"), asserted on the actual
+plan."""
 
 from __future__ import annotations
 

@@ -1,4 +1,5 @@
-"""Layering: no package module imports another module's private names.
+"""Layering: no package module imports another module's private names, and
+no source file cites a document that is not there.
 
 A ``_``-prefixed name is its module's own; a name another module needs is
 made public at its owner. ``tests/`` and ``perfbench/`` are outside the
@@ -8,9 +9,11 @@ package and may reach into it.
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
-PACKAGE = Path(__file__).resolve().parent.parent / "pyspark_retention_pipeline_spark"
+REPO = Path(__file__).resolve().parent.parent
+PACKAGE = REPO / "pyspark_retention_pipeline_spark"
 
 
 def private_imports(package: Path) -> list[str]:
@@ -44,3 +47,21 @@ def test_private_imports_finds_relative_and_absolute_forms(tmp_path):
     (pkg / "a.py").write_text("from .b import _hidden, shown\nfrom os import _exit\n")
     (pkg / "sub" / "c.py").write_text("from pkg.a import _other\nfrom ..b import visible\n")
     assert private_imports(pkg) == ["pkg/a.py:1 _hidden", "pkg/sub/c.py:1 _other"]
+
+
+def test_cited_docs_exist():
+    """Every ``docs/<name>.md`` that a Python file, the Makefile or README.md
+    names exists (hidden directories such as ``.git`` are not read)."""
+    sources = [REPO / "Makefile", REPO / "README.md"] + [
+        p
+        for p in REPO.rglob("*.py")
+        if not any(part.startswith(".") for part in p.relative_to(REPO).parts)
+    ]
+    dangling = [
+        f"{path.relative_to(REPO)}:{lineno} {cited}"
+        for path in sorted(sources)
+        for lineno, line in enumerate(path.read_text().splitlines(), 1)
+        for cited in re.findall(r"docs/[\w.-]+\.md", line)
+        if not (REPO / cited).is_file()
+    ]
+    assert dangling == []

@@ -185,6 +185,10 @@ def test_fit_pipeline_releases_its_caches(spark, sf_dir, features, persistent_rd
         model = fit_pipeline(_prepared(frame, cols), cols, final)
         assert persistent_rdds() == persisted
         assert len(model.stages[-1].coefficients) == len(cols)
+        # The summary's iteration count still reads once the fit's pin is
+        # released (its row-backed fields do not: fit_pipeline's docstring).
+        summary = model.stages[-1].summary
+        assert (summary.numIterations if source == "churn" else summary.totalIterations) >= 1
     finally:
         if source == "quality":
             frame.unpersist()

@@ -10,7 +10,8 @@ script's small per-round config, and the anchor test here asserts
 ``registry._FRONT`` equals the script's output — a hand edit to either side
 that diverges fails loudly (VERDICT r7 item 7).
 
-Round-15 policy (docs/ROUND15_ROTATION.md): (a) the changed tier — the
+The rotation policy is stated in ``scripts/derive_front.py``'s docstring.
+The round-15 window: (a) the changed tier — the
 exact-quantile memory-cliff retirement sites (winsorized_spend_stats,
 p99_quantile, theilsen_revenue_trend, quality_classifier_scores — all on
 the shared approx-bracket + exact-rank-pick helper) plus
